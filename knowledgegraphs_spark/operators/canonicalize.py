@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
+from ..session import driver_frame
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -104,11 +105,7 @@ def connected_components(
     sig = _signature(e)
     if sig[0] <= cfg.cc_driver_threshold:
         comp = _driver_union_find([(r["a"], r["b"]) for r in e.collect()])
-        if not comp:
-            return spark.createDataFrame([], "node long, component long")
-        return spark.createDataFrame(
-            sorted(comp.items()), "node long, component long"
-        )
+        return driver_frame(spark, sorted(comp.items()), "node long, component long")
     for _i in range(cfg.cc_max_iterations):
         # checkpoint EVERY round: without it the plan doubles per iteration
         # and each signature action recomputes the whole history.
@@ -217,9 +214,7 @@ def canonical_mapping(
         surfs = [r["mention"] for r in surfaces.select("mention").collect()]
         pairs = [(r["src"], r["tgt"]) for r in edges.select("src", "tgt").collect()]
         rows = _canonical_mapping_python(surfs, pairs)
-        schema = "mention string, canonical string"
-        spark = surfaces.sparkSession
-        return spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
+        return driver_frame(surfaces.sparkSession, rows, "mention string, canonical string")
     ids = surfaces.select("mention").dropDuplicates().withColumn(
         "node", F.xxhash64("mention")
     )

@@ -18,26 +18,56 @@ Scale levers: stop-token pruning caps the blocking blow-up (hot tokens are
 exactly the head-entity skew the north rule calls out); the optional salt
 spreads residual hot blocks; AQE skew-join splitting stays on from the
 session config.
+
+Cross matching (``cross_match_edges``, the incremental-attach input) has
+two strategies, picked by the size of the NOVEL side alone:
+* novel ≤ ``vocab_driver_threshold`` → pruned driver scoring: one
+  distributed pass over the prior catalog tokenizes it, keeps only the
+  batch's tokens (broadcast semi-join), counts each token's document
+  frequency and drops tokens above ``max_token_df``; the deduplicated
+  postings are collected and scored on the driver by the scorer the
+  oracle twin uses. The driver receives at most (batch tokens ×
+  ``max_token_df``) postings, however large the catalog grows.
+* larger novel sides → the distributed ``blocking_join`` + Arrow-batched
+  near-dup predicate.
+
+Results computed on the driver go back to Spark as Arrow-built local
+relations (``session.driver_frame``), never as pickled Python RDDs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+import re
+from collections.abc import Iterable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from ..config import MatchConfig
 from ..functions.embeddings import cosine_col, encode_strings
-from ..functions.similarity import near_duplicate_udf, pj_score_udf
+from ..functions.similarity import is_near_duplicate, near_duplicate_udf, pj_score_udf
+from ..session import driver_frame
+
+_TOKEN_SPLIT = r"[^0-9a-z]+"
+EDGE_SCHEMA = "src string, tgt string"
+
+
+def token_array(c: Column) -> Column:
+    """Distinct lowercased word tokens of length > 1 (JVM expression)."""
+    toks = F.filter(F.split(F.lower(c), _TOKEN_SPLIT), lambda t: F.length(t) > 1)
+    return F.array_distinct(toks)
+
+
+def _py_tokens(s: str) -> set[str]:
+    """Python twin of :func:`token_array`."""
+    return {t for t in re.split(_TOKEN_SPLIT, s.lower()) if len(t) > 1}
 
 
 def tokenize_surfaces(surfaces: DataFrame, col: str = "mention") -> DataFrame:
     """(surface, token) pairs; lowercased word tokens of length > 1."""
-    toks = F.filter(
-        F.split(F.lower(F.col(col)), r"[^0-9a-z]+"),
-        lambda t: F.length(t) > 1,
-    )
-    return surfaces.select(col, F.explode(F.array_distinct(toks)).alias("token"))
+    return surfaces.select(col, F.explode(token_array(F.col(col))).alias("token"))
 
 
 def blocking_pairs(
@@ -100,14 +130,17 @@ def blocking_join(
     tgt_surfaces: DataFrame,
     cfg: MatchConfig | None = None,
     max_token_df: int = 1000,
+    n_tgt: int | None = None,
 ) -> DataFrame:
     """Directed J4: for each src element, ≤ ``num_raw_candidates`` target
     candidates by summed token IDF over an inverted index of the TARGET side
     — the shape of the reference's ``idf_select`` over the target ontology's
-    annotation index (``mapping_prediction.py:87-94``)."""
+    annotation index (``mapping_prediction.py:87-94``). ``n_tgt`` is the
+    target row count, counted here when the caller has not."""
     cfg = cfg or MatchConfig()
     tgt_tok = tokenize_surfaces(tgt_surfaces).dropDuplicates(["mention", "token"])
-    n_tgt = tgt_surfaces.count()
+    if n_tgt is None:
+        n_tgt = tgt_surfaces.count()
     idf = (
         tgt_tok.groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -340,15 +373,8 @@ def _near_dup_edges_python(
     """Exact in-memory twin of blocking_pairs → near_duplicate_edges, for
     vocabulary-scale surface sets: token inverted index, IDF-capped top-k
     candidates per src, composite near-dup predicate."""
-    import math
-    import re as _re
-
-    from ..functions.similarity import is_near_duplicate
-
     n = len(surfaces)
-    tok_of: dict[str, set[str]] = {
-        s: {t for t in _re.split(r"[^0-9a-z]+", s.lower()) if len(t) > 1} for s in surfaces
-    }
+    tok_of: dict[str, set[str]] = {s: _py_tokens(s) for s in surfaces}
     index: dict[str, list[str]] = {}
     for s, toks in tok_of.items():
         for t in toks:
@@ -376,44 +402,87 @@ def _near_dup_edges_python(
     return sorted(edges)
 
 
-def _cross_edges_python(
-    novel: list[str], prior: list[str], cfg: MatchConfig, max_token_df: int = 1000
+def _score_cross(
+    novel: dict[str, Iterable[str]],
+    postings: dict[str, list[str]],
+    n_tgt: int,
+    cfg: MatchConfig,
 ) -> list[tuple[str, str]]:
-    """Exact in-memory twin of ``blocking_join(novel, prior)`` →
-    ``near_duplicate_edges``: inverted token index over the PRIOR side, IDF
-    ``log((n_tgt+1)/df)`` with ``df ≤ max_token_df``, per-src top
+    """Driver scorer of ``blocking_join`` → ``near_duplicate_edges``, shared
+    by the oracle twin and the pruned cross path. ``novel`` maps each src
+    surface to its tokens; ``postings`` maps each token kept in the index
+    (df ≤ ``max_token_df``) to its distinct prior surfaces; ``n_tgt`` is
+    the prior row count. IDF ``log((n_tgt+1)/df)``, per-src top
     ``num_raw_candidates`` by (-idf_sum, tgt), near-dup filter."""
-    import math
-    import re as _re
-
-    from ..functions.similarity import is_near_duplicate
-
-    def toks(s: str) -> set[str]:
-        return {t for t in _re.split(r"[^0-9a-z]+", s.lower()) if len(t) > 1}
-
-    index: dict[str, list[str]] = {}
-    for p in prior:
-        for t in toks(p):
-            index.setdefault(t, []).append(p)
-    n_tgt = len(prior)
-    idf = {
-        t: math.log(max(n_tgt + 1, 2) / len(ms))
-        for t, ms in index.items()
-        if len(ms) <= max_token_df
-    }
+    idf = {t: math.log(max(n_tgt + 1, 2) / len(ms)) for t, ms in postings.items()}
     edges: list[tuple[str, str]] = []
-    for a in novel:
+    for a, toks in novel.items():
         sums: dict[str, float] = {}
-        for t in toks(a):
-            if t in idf:
-                for b in index[t]:
-                    if b != a:
-                        sums[b] = sums.get(b, 0.0) + idf[t]
+        for t in sorted(toks):
+            w = idf.get(t)
+            if w is None:
+                continue
+            for b in postings[t]:
+                if b != a:
+                    sums[b] = sums.get(b, 0.0) + w
         cands = sorted(sums.items(), key=lambda kv: (-kv[1], kv[0]))
         for b, _w in cands[: cfg.num_raw_candidates]:
             if is_near_duplicate(a, b, strict=False):
                 edges.append((a, b))
     return sorted(edges)
+
+
+def _cross_edges_python(
+    novel: list[str], prior: list[str], cfg: MatchConfig, max_token_df: int = 1000
+) -> list[tuple[str, str]]:
+    """Exact in-memory twin of ``blocking_join(novel, prior)`` →
+    ``near_duplicate_edges``: inverted token index over the distinct PRIOR
+    surfaces, tokens with ``df > max_token_df`` dropped, scored by
+    :func:`_score_cross` with ``n_tgt`` = prior rows."""
+    index: dict[str, set[str]] = {}
+    for p in prior:
+        for t in _py_tokens(p):
+            index.setdefault(t, set()).add(p)
+    postings = {t: sorted(ms) for t, ms in index.items() if len(ms) <= max_token_df}
+    return _score_cross({a: _py_tokens(a) for a in novel}, postings, len(prior), cfg)
+
+
+def _cross_edges_pruned(
+    novel: DataFrame,
+    prior: DataFrame,
+    cfg: MatchConfig,
+    n_prior: int,
+    max_token_df: int,
+) -> list[tuple[str, str]]:
+    """Cross edges for a driver-sized novel side against a prior catalog of
+    any size: the catalog is scanned once, distributed, and only the
+    postings of the batch's own tokens (df ≤ ``max_token_df``) reach the
+    driver. Both sides tokenize in the JVM, exactly as ``blocking_join``."""
+    batch = {
+        r["mention"]: r["tokens"]
+        for r in novel.select("mention", token_array(F.col("mention")).alias("tokens")).collect()
+    }
+    tokens = sorted({t for toks in batch.values() for t in toks})
+    if not tokens:
+        return []
+    batch_tokens = driver_frame(novel.sparkSession, [(t,) for t in tokens], "token string")
+    # one shuffle: hash-partitioning on the token satisfies both the
+    # (token, mention) dedup and the per-token window
+    pairs = (
+        tokenize_surfaces(prior.select("mention"))
+        .join(F.broadcast(batch_tokens), "token", "left_semi")
+        .repartition("token")
+        .dropDuplicates(["token", "mention"])
+    )
+    kept = (
+        pairs.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("token")))
+        .filter(F.col("df") <= max_token_df)
+        .select("token", "mention")
+    )
+    postings: dict[str, list[str]] = {}
+    for r in kept.collect():
+        postings.setdefault(r["token"], []).append(r["mention"])
+    return _score_cross(batch, postings, n_prior, cfg)
 
 
 def cross_match_edges(
@@ -427,24 +496,22 @@ def cross_match_edges(
 ) -> DataFrame:
     """Directed near-dup edges novel → prior (incremental-attach input).
 
-    Same two physical strategies as :func:`compute_match_edges`, same
-    result: both vocabularies ≤ threshold → in-memory twin; larger → the
-    directed ``blocking_join`` whose inverted index is built over the PRIOR
-    vocabulary — the 100-TB shape, since the entity-catalog index is the
-    big reusable side and the per-increment novel vocabulary is small."""
+    Two physical strategies, same result, chosen by the novel side alone:
+    novel ≤ threshold → :func:`_cross_edges_pruned` (one distributed pass
+    over the prior, driver scoring of the batch tokens' postings); larger →
+    the directed ``blocking_join`` whose inverted index is built over the
+    PRIOR vocabulary. Either way the catalog side stays distributed."""
     cfg = cfg or MatchConfig()
-    spark = novel.sparkSession
     if n_novel is None:
         n_novel = novel.count()
     if n_prior is None:
         n_prior = prior.count()
-    if max(n_novel, n_prior) <= vocab_driver_threshold:
-        nv = [r["mention"] for r in novel.select("mention").collect()]
-        pr = [r["mention"] for r in prior.select("mention").collect()]
-        edges = _cross_edges_python(nv, pr, cfg, max_token_df)
-        schema = "src string, tgt string"
-        return spark.createDataFrame(edges, schema) if edges else spark.createDataFrame([], schema)
-    return near_duplicate_edges(blocking_join(novel, prior, cfg, max_token_df))
+    if n_novel <= vocab_driver_threshold:
+        edges = _cross_edges_pruned(novel, prior, cfg, n_prior, max_token_df)
+        return driver_frame(novel.sparkSession, edges, EDGE_SCHEMA)
+    return near_duplicate_edges(
+        blocking_join(novel, prior, cfg, max_token_df, n_tgt=n_prior)
+    )
 
 
 def compute_match_edges(
@@ -459,14 +526,12 @@ def compute_match_edges(
     thousand strings is pure scheduling latency); larger → distributed
     blocking join + Arrow-batched predicate."""
     cfg = cfg or MatchConfig()
-    spark = surfaces.sparkSession
     if n_surfaces is None:
         n_surfaces = surfaces.count()
     if n_surfaces <= vocab_driver_threshold:
         surfs = [r["mention"] for r in surfaces.select("mention").collect()]
         edges = _near_dup_edges_python(surfs, cfg, max_token_df)
-        schema = "src string, tgt string"
-        return spark.createDataFrame(edges, schema) if edges else spark.createDataFrame([], schema)
+        return driver_frame(surfaces.sparkSession, edges, EDGE_SCHEMA)
     return near_duplicate_edges(
         blocking_pairs(surfaces, cfg, max_token_df, n_surfaces=n_surfaces)
     )

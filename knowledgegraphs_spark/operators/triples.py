@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..config import BASE_PREFIX, RDF_TYPE
 from ..functions import naming
+from ..session import driver_frame
 from .po_extraction import PutativeOntology, TableSpec
 
 TRIPLE_COLS = ["subj", "pred", "obj", "obj_dtype", "is_literal"]
@@ -300,8 +301,8 @@ def write_triples(
     spark = triples.sparkSession
     # schema_json lets read_triples open a store whose every bucket was
     # emptied by sparql_update (no parquet files left to infer from)
-    meta = spark.createDataFrame(
-        [(n_buckets, triples.schema.json())], "subj_buckets int, schema_json string"
+    meta = driver_frame(
+        spark, [(n_buckets, triples.schema.json())], "subj_buckets int, schema_json string"
     )
     meta.coalesce(1).write.mode("overwrite").json(path.rstrip("/") + "/_kg_meta")
 

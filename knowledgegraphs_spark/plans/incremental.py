@@ -22,7 +22,9 @@ Attach semantics (deterministic, order-free):
    same blocking + predicate as the batch path.
 3. Each component attaches to an existing entity iff ANY member has a
    cross near-dup edge into the prior vocabulary (``cross_match_edges``:
-   inverted index over the PRIOR side — the big reusable structure);
+   one distributed pass over the PRIOR side keeps only the postings of the
+   batch's own tokens, so the driver never holds the catalog; novel sides
+   above the vocabulary threshold take the distributed blocking join);
    multiple candidate entities resolve by the canonical-pick ordering
    (``pick_order_key``). Unattached components mint new entities via the
    batch ``canonical_mapping``.
@@ -67,9 +69,11 @@ def incremental_canonical(
     """(mention, canonical) for the NOVEL surfaces of a new batch.
 
     All inputs and intermediates here are vocabulary-scale (distinct
-    surfaces, not mention rows); the only structure proportional to the
-    catalog is the inverted token index inside ``cross_match_edges``,
-    which is built over the prior side — the shape that amortizes at scale.
+    surfaces, not mention rows). The catalog side stays distributed: the
+    anti-join and attach joins run in Spark, and ``cross_match_edges``
+    scans the prior pruned to the batch's tokens, whose postings (at most
+    batch tokens × ``max_token_df``) are the only catalog-derived rows the
+    driver sees.
     """
     cfg = cfg or EngineConfig()
     novel = new_surfaces.select("mention").join(

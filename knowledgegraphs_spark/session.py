@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the hand-off of
+driver-computed rows back to Spark (:func:`driver_frame`).
 
 Local-mode testing config; on a real cluster the same builder is driven by
 spark-submit conf. AQE + skew-join splitting stay on everywhere — the
@@ -10,7 +11,8 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def _java_opts(driver_mem: str) -> str:
@@ -101,3 +103,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_frame(spark: SparkSession, rows: list[tuple], schema: str | StructType) -> DataFrame:
+    """A DataFrame over rows computed on the driver, handed to the JVM as
+    one Arrow table.
+
+    ``spark.createDataFrame(list)`` pickles the rows into a Python RDD that
+    Python workers re-run on every evaluation of the frame (an
+    ``ExistingRDD`` scan). An Arrow table becomes a JVM ``LocalRelation``
+    (an RDD of Arrow batches above ``arrowLocalRelationThreshold``): no
+    Python worker ever touches it again."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -51,6 +51,7 @@ from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
 from ..config import EngineConfig
+from ..session import driver_frame
 from .incremental import TRANSCRIPT_SCHEMA
 
 CATALOG_SCHEMA = T.StructType(
@@ -76,7 +77,7 @@ def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> Data
     try:
         return spark.read.schema(schema).parquet(path)
     except AnalysisException:
-        return spark.createDataFrame([], schema)
+        return driver_frame(spark, [], schema)
 
 
 def read_catalog(

@@ -141,24 +141,56 @@ def test_documented_divergence_late_better_canonical(spark):
     assert inc_map["Acme Corporation"] == prior_map["Acme Corporation Ltd"]
 
 
-def test_cross_edges_distributed_parity(spark):
-    """cross_match_edges: the vocab fast path and the distributed
-    blocking_join path produce identical edge sets."""
+def _cross_three_ways(spark, novel, prior, max_token_df=1000):
+    """Edge sets of the pruned driver path, the distributed blocking join
+    and the in-memory oracle twin for one (novel, prior) input."""
     from knowledgegraphs_spark.config import MatchConfig
-    from knowledgegraphs_spark.operators.matching import cross_match_edges
+    from knowledgegraphs_spark.operators.matching import (
+        _cross_edges_python,
+        blocking_join,
+        cross_match_edges,
+        near_duplicate_edges,
+    )
 
-    novel = ["Acme Corporation Ltd", "Gizmo Industries", "Data Hub Central", "Quantum Leap Labs"]
-    prior = ["Acme Corp", "Acme Corporation", "Widget Works", "Data Hub"]
     ndf = spark.createDataFrame([(m,) for m in novel], "mention string")
     pdf = spark.createDataFrame([(m,) for m in prior], "mention string")
     cfg = MatchConfig()
-    fast = {
+    pruned = {
         (r.src, r.tgt)
-        for r in cross_match_edges(ndf, pdf, cfg, vocab_driver_threshold=100).collect()
+        for r in cross_match_edges(
+            ndf, pdf, cfg, vocab_driver_threshold=100, max_token_df=max_token_df
+        ).collect()
     }
-    dist = {
+    joined = {
         (r.src, r.tgt)
-        for r in cross_match_edges(ndf, pdf, cfg, vocab_driver_threshold=0).collect()
+        for r in near_duplicate_edges(blocking_join(ndf, pdf, cfg, max_token_df)).collect()
     }
-    assert fast == dist
-    assert ("Acme Corporation Ltd", "Acme Corporation") in fast
+    oracle = set(_cross_edges_python(novel, prior, cfg, max_token_df))
+    return pruned, joined, oracle
+
+
+def test_cross_edges_distributed_parity(spark):
+    """cross_match_edges: the pruned driver path, the distributed
+    blocking_join path and the in-memory twin produce identical edge sets
+    — also with a token above max_token_df, duplicate prior rows, a novel
+    surface without any token, and an empty novel side."""
+    novel = ["Acme Corporation Ltd", "Gizmo Industries", "Data Hub Central", "Quantum Leap Labs"]
+    prior = ["Acme Corp", "Acme Corporation", "Widget Works", "Data Hub"]
+    pruned, joined, oracle = _cross_three_ways(spark, novel, prior)
+    assert pruned == joined == oracle
+    assert ("Acme Corporation Ltd", "Acme Corporation") in pruned
+    assert ("Acme Corporation Ltd", "Acme Corp") in pruned
+
+    # "acme" sits in three distinct prior surfaces (four rows): above
+    # max_token_df=2 it leaves the index, so only "corporation" links
+    # "Acme Corporation Ltd" — to "Acme Corporation", not "Acme Corp".
+    # "X" and "A B" have no token longer than one character.
+    novel2 = novel + ["X", "A B"]
+    prior2 = prior + ["Acme Labs", "Acme Corporation", "Data Hub"]
+    pruned, joined, oracle = _cross_three_ways(spark, novel2, prior2, max_token_df=2)
+    assert pruned == joined == oracle
+    assert ("Acme Corporation Ltd", "Acme Corporation") in pruned
+    assert ("Acme Corporation Ltd", "Acme Corp") not in pruned
+    assert not {src for src, _ in pruned} & {"X", "A B"}
+
+    assert _cross_three_ways(spark, [], prior2) == (set(), set(), set())

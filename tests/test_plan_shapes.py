@@ -113,3 +113,43 @@ def test_full_build_shuffles_only_vocabulary(spark):
         assert "canonical" in ln, plan
         for corpus_col in ("conv_id", "turn_idx", "text#", "subj#"):
             assert corpus_col not in ln, plan
+
+
+def test_driver_paths_hand_off_local_relations(spark, tmp_path):
+    """Results computed on the driver come back as JVM local relations: a
+    pickled Python RDD (``Scan ExistingRDD``) would re-run in Python
+    workers on every evaluation. The pruned cross match scores on the
+    driver, so its plan carries no Arrow UDF either."""
+    from knowledgegraphs_spark.operators.canonicalize import (
+        canonical_mapping,
+        connected_components,
+    )
+    from knowledgegraphs_spark.operators.matching import (
+        compute_match_edges,
+        cross_match_edges,
+    )
+    from knowledgegraphs_spark.streaming.maintenance import CATALOG_SCHEMA, _read_or_empty
+
+    surfaces = spark.createDataFrame(
+        [(s,) for s in ("Acme Corp", "Acme Corporation", "Data Hub", "Data Hub Central")],
+        "mention string",
+    )
+    prior = spark.createDataFrame(
+        [(s,) for s in ("Acme Corp", "Widget Works", "Data Hub")], "mention string"
+    )
+    edges = compute_match_edges(surfaces)
+    cross = cross_match_edges(surfaces, prior, vocab_driver_threshold=10)
+    ids = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    frames = {
+        "compute_match_edges": edges,
+        "cross_match_edges": cross,
+        "canonical_mapping": canonical_mapping(surfaces, edges),
+        "connected_components": connected_components(ids),
+        "_read_or_empty": _read_or_empty(spark, str(tmp_path / "absent"), CATALOG_SCHEMA),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)
+    cross_plan = cross._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in cross_plan, cross_plan
+    assert cross.count() > 0
