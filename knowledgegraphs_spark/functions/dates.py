@@ -24,17 +24,6 @@ DATE_PATTERNS: list[tuple[str, str]] = [
     (r"^\d{4}$", "yyyy"),                # bare year → Jan 01
 ]
 
-_COMPILED = [(re.compile(rx), fmt) for rx, fmt in DATE_PATTERNS]
-
-
-def looks_like_date(value: str) -> bool:
-    """Pure-Python shape test (used by the type-inference vote and oracle)."""
-    v = value.strip()
-    for rx, fmt in _COMPILED:
-        if rx.match(v):
-            return fix_date_format(v) is not None
-    return False
-
 
 def fix_date_format(value: str) -> str | None:
     """Normalize a matched date string to ``yyyy-MM-dd`` (calendar-checked)."""

@@ -163,10 +163,3 @@ def cosine_col(a: Column, b: Column) -> Column:
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
-
-
-def cosine_py(a: np.ndarray, b: np.ndarray) -> float:
-    na, nb = float(np.linalg.norm(a)), float(np.linalg.norm(b))
-    if na == 0 or nb == 0:
-        return 0.0
-    return float(np.dot(a, b) / (na * nb))

@@ -30,11 +30,3 @@ def normalize_nulls(df: DataFrame, columns: list[str] | None = None) -> DataFram
     return df.select(
         *[normalize_null(F.col(c)).alias(c) if c in targets else F.col(c) for c in df.columns]
     )
-
-
-def nullish_python(v) -> bool:
-    """Pure-Python twin for the pytest oracle."""
-    if v is None:
-        return True
-    s = str(v).strip().lower()
-    return s in {x.strip() for x in NULL_SENTINELS}

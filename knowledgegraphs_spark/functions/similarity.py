@@ -21,7 +21,6 @@ from collections import Counter
 from difflib import SequenceMatcher
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -134,10 +133,6 @@ def length_diff_pct(a: str, b: str) -> float:
     return 0.0 if mean == 0 else abs(len(a) - len(b)) / mean * 100.0
 
 
-def token_sort(s: str) -> str:
-    return " ".join(sorted(re.findall(r"\w+", s.lower())))
-
-
 def _char_overlap(a: str, b: str) -> int:
     """Size of the character multiset intersection — an O(L) upper bound on
     the matched characters any (windowed) SequenceMatcher alignment can
@@ -213,13 +208,6 @@ def is_near_duplicate(a: str, b: str, strict: bool = True, leven_thrs: int | Non
     if 2.0 * overlap / max(len(ca) + len(cb), 1) >= 0.94:
         return _full_ratio_int(ca, cb) >= 95
     return False
-
-
-# --- Column forms (JVM-side where Spark has the primitive) ------------------
-
-
-def edit_similarity_col(a: Column, b: Column) -> Column:
-    return 1.0 - F.levenshtein(a, b) / F.greatest(F.length(a), F.length(b))
 
 
 # --- pandas UDFs (Arrow-batched) --------------------------------------------

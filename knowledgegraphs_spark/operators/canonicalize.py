@@ -14,16 +14,25 @@ Canonical representative per component: the reference's pick over
 ``process()`` features (``NearDuplicates.py:91-102``) — min token-concat
 length, then most whitespace in the punctuation-stripped form, returning
 that punctuation-stripped (noPunct) form; lexicographic-on-raw-surface
-added as the final tie-break for full determinism.
+added as the final tie-break for full determinism. The ordering has one
+Python form, :func:`pick_order_key`, and one JVM twin,
+:func:`pick_order_cols`; the driver pick (:func:`canonical_pick`), the
+distributed ``min_by`` pick and the incremental attach all order by them.
 """
 
 from __future__ import annotations
+
+import string
+from collections.abc import Iterable
+from typing import TypeVar
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..session import driver_frame
+
+K = TypeVar("K")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -62,12 +71,13 @@ def _signature(e: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _driver_union_find(pairs: list[tuple[int, int]]) -> dict[int, int]:
-    """In-memory union-find (path-halving) — the reference's own algorithm
-    shape (``UnionFind.py:30-71``); component id = min member."""
-    parent: dict[int, int] = {}
+def _driver_union_find(pairs: Iterable[tuple[K, K]]) -> dict[K, K]:
+    """In-memory union-find (path-halving) over any comparable node keys —
+    the reference's own algorithm shape (``UnionFind.py:30-71``); component
+    id = min member. Nodes absent from ``pairs`` are absent from the map."""
+    parent: dict[K, K] = {}
 
-    def find(x: int) -> int:
+    def find(x: K) -> K:
         parent.setdefault(x, x)
         while parent[x] != x:
             parent[x] = parent[parent[x]]
@@ -122,21 +132,27 @@ def connected_components(
 
 
 def pick_order_key(value: str) -> tuple[int, int, str]:
-    """The canonical-pick ordering key of a (noPunct-form) string: shortest
-    token-concat, then most whitespace, then lexicographic. Shared by the
-    incremental-attach tie-break and its oracle twin so both sides order
-    candidate canonicals identically."""
+    """The canonical-pick ordering key of a string: shortest token-concat,
+    then most whitespace, then lexicographic. Shared by
+    :func:`canonical_pick`, the incremental-attach tie-break and its oracle
+    twin so every side orders candidate canonicals identically."""
     from ..functions.similarity import nd_process
 
     no_punct, _toks, concat = nd_process(value)
     return (len(concat), -(len(no_punct) - len(concat)), value)
 
 
-def pick_order_cols(col: Column) -> Column:
-    """JVM twin of :func:`pick_order_key`: a struct usable in ``min_by``."""
-    import string as _string
+def _no_punct(col: Column) -> Column:
+    """JVM twin of ``nd_process``'s noPunct form: punctuation → spaces
+    (``F.translate`` is the exact twin of ``str.translate``)."""
+    return F.translate(col, string.punctuation, " " * len(string.punctuation))
 
-    no_punct = F.translate(col, _string.punctuation, " " * len(_string.punctuation))
+
+def pick_order_cols(col: Column) -> Column:
+    """JVM twin of :func:`pick_order_key`: a struct usable in ``min_by``.
+    cLen = chars surviving the \\w-concat, n_white = the rest of noPunct;
+    the struct is unique per distinct ``col`` value, so the pick is total."""
+    no_punct = _no_punct(col)
     c_len = F.length(F.regexp_replace(F.lower(no_punct), r"[^\p{L}\p{N}_]+", ""))
     n_white = F.length(no_punct) - c_len
     return F.struct(c_len.alias("c_len"), (-n_white).alias("nw"), col.alias("v"))
@@ -150,40 +166,23 @@ def canonical_pick(group: list[str]) -> str:
     len(noPunct) - len(concat)``), and the value returned is the member's
     **noPunct** form (punctuation already replaced by spaces), exactly as
     the reference stores ``processed[idx][0]``. The reference breaks full
-    ties by set-iteration order; we iterate members in sorted order for
-    determinism (documented deviation — the reference is
-    iteration-order-dependent there)."""
+    ties by set-iteration order; we break them lexicographically on the raw
+    member for determinism (documented deviation — the reference is
+    iteration-order-dependent there). The ordering is
+    :func:`pick_order_key`."""
     from ..functions.similarity import nd_process
 
-    best_key, best = None, None
-    for s in sorted(group):
-        no_punct, _toks, concat = nd_process(s)
-        key = (len(concat), -(len(no_punct) - len(concat)))
-        if best_key is None or key < best_key:
-            best_key, best = key, no_punct
-    return best
+    return nd_process(min(group, key=pick_order_key))[0]
 
 
 def _canonical_mapping_python(
     surfaces: list[str], edges: list[tuple[str, str]]
 ) -> list[tuple[str, str]]:
     """In-memory twin of the distributed mapping."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
+    comp = _driver_union_find(edges)
     groups: dict[str, list[str]] = {}
     for s in surfaces:
-        groups.setdefault(find(s) if s in parent else s, []).append(s)
+        groups.setdefault(comp.get(s, s), []).append(s)
     out: list[tuple[str, str]] = []
     for members in groups.values():
         canon = canonical_pick(members)
@@ -225,33 +224,14 @@ def canonical_mapping(
     labeled = ids.join(comp, "node", "left").withColumn(
         "component", F.coalesce("component", "node")
     )
-    # reference pick keys (NearDuplicates.py:94-102), all JVM expressions:
-    # noPunct = punctuation→spaces (F.translate is the exact twin of
-    # str.translate), cLen = chars surviving \w-concat, n_white = the rest
-    import string as _string
-
-    no_punct = F.translate(F.col("mention"), _string.punctuation, " " * len(_string.punctuation))
-    concat_len = F.length(
-        F.regexp_replace(F.lower(no_punct), r"[^\p{L}\p{N}_]+", "")
-    )
-    feat = labeled.select(
-        "mention",
-        "component",
-        no_punct.alias("no_punct"),
-        concat_len.alias("c_len"),
-    ).withColumn("n_white", F.length("no_punct") - F.col("c_len"))
     # Per-component canonical via groupBy + min_by, NOT a whole-partition
     # window: partitionBy("component") lands an entire component on ONE
     # task, and near-dup graphs of boilerplate-heavy corpora produce mega-
     # components — min_by partial-aggregates map-side, so the hot key
-    # ships one row per map task instead of every member. The ordering
-    # struct (c_len asc, -n_white asc ≡ n_white desc, mention asc) is
-    # unique per row (mentions are distinct), so the pick is total.
-    picks = feat.groupBy("component").agg(
-        F.min_by(
-            F.col("no_punct"),
-            F.struct(F.col("c_len"), (-F.col("n_white")).alias("nw"), F.col("mention")),
-        ).alias("canonical")
+    # ships one row per map task instead of every member.
+    mention = F.col("mention")
+    picks = labeled.groupBy("component").agg(
+        F.min_by(_no_punct(mention), pick_order_cols(mention)).alias("canonical")
     )
     # join back: the component dim has ≤ n_surfaces rows → broadcast when it
     # fits, salted shuffle join otherwise (the mega-component hot key is
@@ -259,7 +239,7 @@ def canonical_mapping(
     from .skew import join_small_dim
 
     return join_small_dim(
-        feat.select("mention", "component"),
+        labeled.select("mention", "component"),
         picks,
         "component",
         salt_from=["mention"],

@@ -26,22 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text_analysis import fingerprint, shingles
-
-
-def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Groups of byte-identical (normalized) documents:
-    (fingerprint, n_docs, canonical_id = min id, doc_ids sorted)."""
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), fingerprint(F.col(text_col)).alias("fp"))
-        .groupBy("fp")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("canonical_id"),
-            F.array_sort(F.collect_list("doc_id")).alias("doc_ids"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
+from .text_analysis import shingles
 
 
 # sorts after every lowercase-hex md5 digest → safe "+infinity" sentinel

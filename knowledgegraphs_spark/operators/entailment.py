@@ -213,13 +213,6 @@ _OWL_FORMS = {
 _TRP_SEP = "\x1f"
 
 
-def _owl_pairs(triples: DataFrame, term: str) -> DataFrame:
-    """(p, q) pairs asserted under either surface form of the OWL term."""
-    return triples.filter(F.col("pred").isin(list(_OWL_FORMS[term]))).select(
-        F.col("subj").alias("p"), F.col("obj").alias("q")
-    )
-
-
 def _typed_props(triples: DataFrame, cls: str) -> list[str]:
     """Properties declared ``rdf:type owl:<cls>`` — TBox-sized, collected
     to the driver (same scale judgment as ``_emit_form``: thousands of

@@ -45,12 +45,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..config import MatchConfig
+from ..config import EngineConfig, MatchConfig
 from ..functions.embeddings import cosine_col, encode_strings
 from ..functions.similarity import is_near_duplicate, near_duplicate_udf, pj_score_udf
 from ..session import driver_frame
 
 _TOKEN_SPLIT = r"[^0-9a-z]+"
+# default stop-token cutoff of every blocking index: tokens in more than this
+# many surfaces are dropped
+MAX_TOKEN_DF = 1000
 EDGE_SCHEMA = "src string, tgt string"
 
 
@@ -73,7 +76,7 @@ def tokenize_surfaces(surfaces: DataFrame, col: str = "mention") -> DataFrame:
 def blocking_pairs(
     surfaces: DataFrame,
     cfg: MatchConfig | None = None,
-    max_token_df: int = 1000,
+    max_token_df: int = MAX_TOKEN_DF,
     col: str = "mention",
     n_surfaces: int | None = None,
 ) -> DataFrame:
@@ -129,7 +132,7 @@ def blocking_join(
     src_surfaces: DataFrame,
     tgt_surfaces: DataFrame,
     cfg: MatchConfig | None = None,
-    max_token_df: int = 1000,
+    max_token_df: int = MAX_TOKEN_DF,
     n_tgt: int | None = None,
 ) -> DataFrame:
     """Directed J4: for each src element, ≤ ``num_raw_candidates`` target
@@ -368,7 +371,7 @@ def near_duplicate_edges(pairs: DataFrame) -> DataFrame:
 
 
 def _near_dup_edges_python(
-    surfaces: list[str], cfg: MatchConfig, max_token_df: int = 1000
+    surfaces: list[str], cfg: MatchConfig, max_token_df: int = MAX_TOKEN_DF
 ) -> list[tuple[str, str]]:
     """Exact in-memory twin of blocking_pairs → near_duplicate_edges, for
     vocabulary-scale surface sets: token inverted index, IDF-capped top-k
@@ -433,7 +436,7 @@ def _score_cross(
 
 
 def _cross_edges_python(
-    novel: list[str], prior: list[str], cfg: MatchConfig, max_token_df: int = 1000
+    novel: list[str], prior: list[str], cfg: MatchConfig, max_token_df: int = MAX_TOKEN_DF
 ) -> list[tuple[str, str]]:
     """Exact in-memory twin of ``blocking_join(novel, prior)`` →
     ``near_duplicate_edges``: inverted token index over the distinct PRIOR
@@ -491,8 +494,8 @@ def cross_match_edges(
     cfg: MatchConfig | None = None,
     n_novel: int | None = None,
     n_prior: int | None = None,
-    vocab_driver_threshold: int = 100_000,
-    max_token_df: int = 1000,
+    vocab_driver_threshold: int = EngineConfig.vocab_driver_threshold,
+    max_token_df: int = MAX_TOKEN_DF,
 ) -> DataFrame:
     """Directed near-dup edges novel → prior (incremental-attach input).
 
@@ -518,8 +521,8 @@ def compute_match_edges(
     surfaces: DataFrame,
     cfg: MatchConfig | None = None,
     n_surfaces: int | None = None,
-    vocab_driver_threshold: int = 100_000,
-    max_token_df: int = 1000,
+    vocab_driver_threshold: int = EngineConfig.vocab_driver_threshold,
+    max_token_df: int = MAX_TOKEN_DF,
 ) -> DataFrame:
     """Match-edge computation with two physical strategies, same result:
     vocabulary ≤ threshold → in-memory (a dozen Spark stages over a few

@@ -185,15 +185,6 @@ def reject_low_scores(cands: DataFrame, pj_reject: float = 0.2, bes_reject: floa
     return cands.filter((F.col("pj") >= pj_reject) & (F.col("bes") >= bes_reject))
 
 
-def table_threshold_filter(
-    cands: DataFrame, bes_high: float = 0.85, bes_low: float = 0.6, pj_high: float = 0.5
-) -> DataFrame:
-    """F4: BES ≥ HIGH OR (BES ≥ LOW AND PJ ≥ PJ_HIGH)."""
-    return cands.filter(
-        (F.col("bes") >= bes_high) | ((F.col("bes") >= bes_low) & (F.col("pj") >= pj_high))
-    )
-
-
 def filter_by_family(
     cands: DataFrame,
     po_range_col: str = "po_range",

@@ -132,12 +132,6 @@ def rolling_hash_fingerprint(text: Column) -> Column:
     )
 
 
-def min_shingle_fingerprint(text: Column, n: int = 3) -> Column:
-    """Rolling-hash-style fingerprint: min md5 over word n-gram shingles —
-    robust to local edits (the 1-permutation MinHash)."""
-    return F.array_min(F.transform(shingles(text, n), F.md5))
-
-
 def text_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """One-pass profile: all analysis columns in a single projection."""
     t = F.col(text_col)

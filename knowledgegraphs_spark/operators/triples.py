@@ -2,10 +2,11 @@
 
 Reference stage E walks every row of every table with mutable counters
 (``InsertDataRDB.java:70-102,197-251``). Here each (table, column) path is a
-pure column-projection template and the triples table is a ``unionByName`` of
-those projections — no state, no Python, one shuffle-free pass per source
-table (the FK edge emission is the only join, and the dim side is broadcast
-when small).
+pure column-projection template: every row projects an array of triple
+structs (type, FK edges both directions, attribute paths) that is exploded
+once — no state, no Python, no join, one shuffle-free scan per source table.
+FK values are the referenced PKs (the transcripts case), so edge targets are
+URIs built from the row itself.
 
 URI scheme (reference ``InsertDataRDB.java:116-132``):
     indiv = <prefix><Class>_<tableId>_<pk values joined by '_'>
@@ -18,8 +19,6 @@ fundamental table, written partitioned by ``pmod(xxhash64(subj), N)``.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -42,17 +41,6 @@ def indiv_uri(class_name: str, table_id: int, pk_cols: list[str]) -> Column:
 
 def class_uri(class_name: str) -> Column:
     return F.lit(f"{BASE_PREFIX}{class_name}")
-
-
-def _triple(subj: Column, pred: Column | str, obj: Column, dtype: str | None, literal: bool):
-    p = F.lit(pred) if isinstance(pred, str) else pred
-    return [
-        subj.alias("subj"),
-        p.alias("pred"),
-        obj.alias("obj"),
-        F.lit(dtype).cast("string").alias("obj_dtype"),
-        F.lit(literal).alias("is_literal"),
-    ]
 
 
 def literal_repr(c: Column, dtype: str) -> Column:
@@ -158,88 +146,21 @@ def emit_table_triples_single_pass(
     return exploded.select("t.subj", "t.pred", "t.obj", "t.obj_dtype", "t.is_literal")
 
 
-def emit_table_triples(
-    df: DataFrame,
-    spec: TableSpec,
-    po: PutativeOntology,
-    ref_dfs: dict[str, DataFrame] | None = None,
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """All triples for one table: rdf:type, FK edges (J1, both directions),
-    and the per-attribute 3-hop paths."""
-    ref_dfs = ref_dfs or {}
-    subj = indiv_uri(spec.class_name, spec.table_id, spec.pks)
-    pieces: list[DataFrame] = [df.select(*_triple(subj, RDF_TYPE, class_uri(spec.class_name), None, False))]
-
-    # FK equi-joins → object-property edges both directions (operator J1).
-    for fk in spec.fks:
-        ref_spec = po.tables[fk.ref_table]
-        ref_df = ref_dfs.get(fk.ref_table)
-        if ref_df is not None:
-            dim = ref_df.select(F.col(fk.ref_column).alias("__ref_key"), *[
-                F.col(c).alias(f"__ref_{c}") for c in ref_spec.pks
-            ]).dropDuplicates(["__ref_key"])
-            if broadcast_dims:
-                dim = F.broadcast(dim)
-            joined = df.join(dim, df[fk.column] == dim["__ref_key"], "inner")
-            tgt = indiv_uri(ref_spec.class_name, ref_spec.table_id, [])
-            tgt = F.concat_ws("_", tgt, *[F.col(f"__ref_{c}").cast("string") for c in ref_spec.pks])
-        else:
-            # FK value IS the referenced PK (transcripts: conv_id) — no join needed.
-            joined = df.filter(F.col(fk.column).isNotNull())
-            tgt = F.concat_ws(
-                "_",
-                F.lit(f"{BASE_PREFIX}{ref_spec.class_name}_{ref_spec.table_id}"),
-                F.col(fk.column).cast("string"),
-            )
-        fwd = naming.pure_obj_property(spec.class_name, ref_spec.class_name)
-        inv = naming.inverse_property(fwd)
-        src = indiv_uri(spec.class_name, spec.table_id, spec.pks)
-        pieces.append(joined.select(*_triple(src, fwd, tgt, None, False)))
-        pieces.append(joined.select(*_triple(tgt, inv, src, None, False)))
-
-    # attribute paths: row --has_c--> attr_indiv --has_c_VALUE--> literal
-    for path in (p for p in po.column_paths if p.table == spec.name):
-        nonnull = df.filter(F.col(path.column).isNotNull())
-        attr_indiv = F.concat_ws(
-            "_",
-            F.lit(f"{BASE_PREFIX}{path.attr_class}_{spec.table_id}"),
-            *[F.col(c).cast("string") for c in spec.pks],
-        )
-        pieces.append(nonnull.select(*_triple(subj, path.obj_prop, attr_indiv, None, False)))
-        pieces.append(nonnull.select(*_triple(attr_indiv, RDF_TYPE, class_uri(path.attr_class), None, False)))
-        pieces.append(
-            nonnull.select(
-                *_triple(attr_indiv, path.data_prop, literal_repr(F.col(path.column), path.dtype), path.dtype, True)
-            )
-        )
-
-    return reduce(lambda a, b: a.unionByName(b), pieces)
-
-
-def emit_transcript_triples(
-    turns: DataFrame, po: PutativeOntology, first_turn_marker: bool = True
-) -> DataFrame:
+def emit_transcript_triples(turns: DataFrame, po: PutativeOntology) -> DataFrame:
     """Structural triples for the transcripts input.
 
-    With ``first_turn_marker`` (default), Conversation-row triples piggyback
-    on the ``turn_idx == 0`` row of each conversation — turn indices are
-    0-based and dense (``ingest`` + the row_number derivations guarantee
-    it), so that row exists exactly once per conversation. The whole table
+    Conversation-row triples piggyback on the ``turn_idx == 0`` row of each
+    conversation — turn indices are 0-based and dense (``ingest`` + the
+    row_number derivations guarantee it), so that row exists exactly once
+    per conversation. The whole table
     then emits in ONE scan with ZERO extra shuffle; the alternative
     (``dropDuplicates(conv_id)``) costs a second scan plus a hash exchange,
     which ``.explain`` showed doubling the structural-emission stage count.
     It also makes the streaming path stateless: turn 0 lands in exactly one
     micro-batch, so exactly-once needs no dedup state.
-    Pass ``first_turn_marker=False`` for inputs where turn 0 may be absent.
     """
     conv_spec = po.tables["conversation"]
     turn_spec = po.tables["turn"]
-    if not first_turn_marker:
-        conversations = turns.select("conv_id").dropDuplicates(["conv_id"])
-        conv_triples = emit_table_triples_single_pass(conversations, conv_spec, po)
-        turn_triples = emit_table_triples_single_pass(turns, turn_spec, po)
-        return conv_triples.unionByName(turn_triples)
     conv_subj = F.concat_ws(
         "_", F.lit(f"{BASE_PREFIX}{conv_spec.class_name}_{conv_spec.table_id}"),
         F.col("conv_id").cast("string"),

@@ -5,7 +5,10 @@
 Every stage materializes to parquet under the workdir with a manifest entry
 (per-partition counters, wall time) so any run resumes mid-pipeline. Stage
 outputs are the same IR boundaries the reference persists as files between
-stages (``Config.java:258-268``).
+stages (``Config.java:258-268``). :func:`run_pipeline` writes the triples
+stage through ``write_triples`` (the one writer of the subject-bucketed
+store layout) and reopens it with ``read_triples``, so constant-subject
+lookups on its output prune to one bucket.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ from ..operators.matching import compute_match_edges
 from ..operators.mentions import distinct_surfaces, extract_mentions
 from ..operators.po_extraction import transcript_po
 from ..operators.skew import join_small_dim
-from ..operators.triples import emit_transcript_triples
+from ..operators.triples import emit_transcript_triples, read_triples, write_triples
 from ..sources.transcripts import ingest
 from .manifest import Manifest
 
@@ -105,6 +108,21 @@ def entity_catalog(mentions_canon: DataFrame) -> DataFrame:
     )
 
 
+def _join_canonical(
+    mentions: DataFrame, canonical: DataFrame, cfg: EngineConfig, n_surfaces: int | None
+) -> DataFrame:
+    """Mention rows joined to their canonical. The (mention, canonical) map
+    has one row per distinct surface (``n_surfaces``; ``None`` = count it):
+    broadcast when it fits, else a join salted on the mention's natural key
+    so head surfaces spread."""
+    return join_small_dim(
+        mentions, canonical.select("mention", "canonical"), "mention",
+        salt_buckets=cfg.match.salt_buckets,
+        salt_from=["conv_id", "turn_idx", "pos"],
+        dim_count=n_surfaces,
+    )
+
+
 def build_kg_triples(
     spark: SparkSession, turns_raw: DataFrame, cfg: EngineConfig | None = None
 ) -> DataFrame:
@@ -141,12 +159,7 @@ def build_kg(
     canonical = canonical_mapping(
         surfaces, edges, cfg, n_surfaces=n_surfaces
     ).localCheckpoint(eager=True)
-    m_canon = join_small_dim(
-        mentions, canonical.select("mention", "canonical"), "mention",
-        salt_buckets=cfg.match.salt_buckets,
-        salt_from=["conv_id", "turn_idx", "pos"],
-        dim_count=n_surfaces,  # one canonical row per distinct surface
-    )
+    m_canon = _join_canonical(mentions, canonical, cfg, n_surfaces)
     triples = emit_transcript_triples(turns, po).unionByName(
         mention_triples(m_canon, canonical)
     )
@@ -165,23 +178,27 @@ def run_pipeline(
     man = Manifest(workdir)
     stats: dict = {"skipped": [], "ran": []}
 
-    def stage(name: str, parent_fp: str, build, partition_cols: list[str] | None = None) -> tuple[DataFrame, str]:
+    def stage(name: str, parent_fp: str, build, store: bool = False) -> tuple[DataFrame, str]:
+        """Run (or, on resume, reopen) one stage. ``store`` stages are
+        triple stores: written by ``write_triples``, reopened by
+        ``read_triples``, with per-bucket row counters in the manifest."""
         fp = Manifest.fingerprint(name, repr(cfg), parent_fp)
         out = man.output_path(name)
+        read = (lambda: read_triples(spark, out)) if store else (lambda: spark.read.parquet(out))
         if resume and man.is_complete(name, fp):
             stats["skipped"].append(name)
-            return spark.read.parquet(out), fp
+            return read(), fp
         t0 = time.time()
         df = build()
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(out)
-        result = spark.read.parquet(out)
-        if partition_cols:
+        if store:
+            write_triples(df, out, n_buckets=cfg.shuffle_partitions)
+        else:
+            df.write.mode("overwrite").parquet(out)
+        result = read()
+        if store:
             parts = {
-                str(r[partition_cols[0]]): r["cnt"]
-                for r in result.groupBy(partition_cols[0]).agg(F.count(F.lit(1)).alias("cnt")).collect()
+                str(r["subj_bucket"]): r["cnt"]
+                for r in result.groupBy("subj_bucket").agg(F.count(F.lit(1)).alias("cnt")).collect()
             }
             rows = sum(parts.values())
         else:
@@ -200,41 +217,28 @@ def run_pipeline(
     mentions, fp_mentions = stage(
         "mentions", fp_turns, lambda: extract_mentions(turns)
     )
+    surfaces = distinct_surfaces(mentions).select("mention")
     edges, fp_edges = stage(
         "match_edges", fp_mentions,
         lambda: compute_match_edges(
-            distinct_surfaces(mentions).select("mention"), cfg.match,
+            surfaces, cfg.match,
             vocab_driver_threshold=cfg.vocab_driver_threshold,
         ),
     )
     canonical, fp_canon = stage(
         "canonical", fp_edges,
-        lambda: canonical_mapping(distinct_surfaces(mentions).select("mention"), edges, cfg),
+        lambda: canonical_mapping(surfaces, edges, cfg),
     )
-
-    def build_triples() -> DataFrame:
-        structural = emit_transcript_triples(turns, po)
-        m_canon = join_small_dim(
-            mentions, canonical.select("mention", "canonical"), "mention",
-            salt_buckets=cfg.match.salt_buckets,
-            salt_from=["conv_id", "turn_idx", "pos"],
-        )
-        all_triples = structural.unionByName(mention_triples(m_canon, canonical))
-        return all_triples.withColumn(
-            "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(cfg.shuffle_partitions))
-        ).repartition(cfg.shuffle_partitions, "subj_bucket")
-
-    triples, fp_triples = stage("triples", fp_canon, build_triples, ["subj_bucket"])
-
+    triples, _fp_triples = stage(
+        "triples", fp_canon,
+        lambda: emit_transcript_triples(turns, po).unionByName(
+            mention_triples(_join_canonical(mentions, canonical, cfg, None), canonical)
+        ),
+        store=True,
+    )
     entities, _fp_ent = stage(
         "entities", fp_canon,
-        lambda: entity_catalog(
-            join_small_dim(
-                mentions, canonical.select("mention", "canonical"), "mention",
-                salt_buckets=cfg.match.salt_buckets,
-                salt_from=["conv_id", "turn_idx", "pos"],
-            )
-        ),
+        lambda: entity_catalog(_join_canonical(mentions, canonical, cfg, None)),
     )
 
     stats["manifest"] = man.stages

@@ -30,11 +30,9 @@ def streaming_triples(stream: DataFrame) -> DataFrame:
     """Apply the SAME normalization + emission plan the batch path uses.
 
     Conversation-row triples ride the ``turn_idx == 0`` marker row
-    (``emit_transcript_triples`` default), which lands in exactly one
-    micro-batch — so the streaming plan is fully STATELESS and still
-    exactly-once: no dedup state store, no watermark, nothing to size.
-    (With ``first_turn_marker=False`` the dropDuplicates fallback would
-    become a stateful streaming dedup growing with distinct conv_ids.)"""
+    (``emit_transcript_triples``), which lands in exactly one micro-batch —
+    so the streaming plan is fully STATELESS and still exactly-once: no
+    dedup state store, no watermark, nothing to size."""
     from ..operators.po_extraction import transcript_po
     from ..operators.triples import emit_transcript_triples
     from ..sources.transcripts import ingest

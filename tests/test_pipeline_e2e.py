@@ -6,6 +6,11 @@ checkpoint-manifest resume contract."""
 import json
 import os
 
+from pyspark.sql import functions as F
+
+from knowledgegraphs_spark.config import EngineConfig
+from knowledgegraphs_spark.operators.sparql import sparql_query
+from knowledgegraphs_spark.operators.triples import read_triples
 from knowledgegraphs_spark.plans.pipeline import run_pipeline
 from knowledgegraphs_spark.sources.transcripts import synthesize_rows, synthesize_transcripts
 
@@ -40,6 +45,20 @@ def test_full_pipeline_pr_and_resume(spark, tmp_path):
         man = json.load(f)["stages"]
     assert man["triples"]["rows"] == len(got) or man["triples"]["rows"] >= len(got)
     assert len(man["triples"]["partitions"]) > 1
+
+    # the triples stage is a write_triples store: its bucket count is
+    # recorded, so a constant-subject lookup prunes to one bucket and
+    # returns what a plain filter returns
+    store = read_triples(spark, os.path.join(workdir, "triples"))
+    assert store._kg_subj_buckets == EngineConfig().shuffle_partitions
+    subj = "kg:Turn_2_conv_00000003_1"
+    hits = sparql_query(store, f"SELECT ?p ?o WHERE {{ {subj} ?p ?o . }}")
+    plan = hits._jdf.queryExecution().executedPlan().toString()
+    assert "subj_bucket" in plan.split("PartitionFilters:")[1].split("]")[0], plan
+    want = sorted(
+        tuple(r) for r in store.filter(F.col("subj") == subj).select("pred", "obj").collect()
+    )
+    assert want and sorted(tuple(r) for r in hits.select("p", "o").collect()) == want
 
     # resume: identical fingerprints → every stage skipped, same output
     res2 = run_pipeline(spark, raw, workdir, input_fingerprint="test42")
