@@ -13,8 +13,9 @@ becomes a ``Filter + Scan`` that parquet row-group statistics prune
 (predicates are low-cardinality strings, so dictionary filters bite);
 the joins are hash joins on URI strings. Subject-subject joins are
 co-located when the table is written through ``write_triples`` (bucketed
-by ``subj`` — ``triples.py:256``), which is exactly the layout a triple
-store's SPO index gives you. No Python runs anywhere — the whole match
+by ``subj``), which is exactly the layout a triple store's SPO index
+gives you; a constant-subject pattern scans only its subject's bucket
+(``triples.subject_scan``). No Python runs anywhere — the whole match
 is Catalyst expressions.
 
 SPARQL semantics notes (kept deliberately small — this is the BGP core,
@@ -28,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .triples import subject_scan
 
 _POSITIONS = ("subj", "pred", "obj")
 
@@ -53,20 +56,10 @@ def match_bgp(triples: DataFrame, patterns: list[tuple[str, str, str]]) -> DataF
     """
     if not patterns:
         raise ValueError("empty basic graph pattern")
-    # read_triples stores: constant-subject patterns additionally filter
-    # subj_bucket (folds to a partition filter → 1/n of files read)
-    n_buckets = getattr(triples, "_kg_subj_buckets", None)
-    bucketed = n_buckets and "subj_bucket" in triples.columns
     out: DataFrame | None = None
     bound: set[str] = set()
     for s, p, o in patterns:
-        t = triples.select(*_POSITIONS)
-        if bucketed and not _is_var(s):
-            from .triples import subj_bucket_of
-
-            t = triples.filter(
-                F.col("subj_bucket") == subj_bucket_of(s, n_buckets)
-            ).select(*_POSITIONS)
+        t = subject_scan(triples, None if _is_var(s) else s)
         seen: dict[str, str] = {}
         cols = []
         for pos, term in zip(_POSITIONS, (s, p, o)):

@@ -37,9 +37,9 @@ shuffle, no iteration over instance data (the only loops are the
 pointer-doubling closures over schema edges, O(log depth) rounds on a
 vocabulary-sized relation). The one full-width shuffle is the final
 set-semantics dedup, and the store-side entry point avoids even that by
-handing the derived triples to the bucket-pruned anti-join/append used
-by SPARQL Update (``_append_new``): untouched buckets are never read or
-written.
+handing the derived triples to the store's bucket-pruned set-semantic
+append, the one SPARQL Update inserts use (``triples.append_triples``):
+untouched buckets are never read or written.
 
 Reference parity anchors: GraphDB-side inference E_CreateKG/GraphDB.java
 (repo config ruleset), the ancestor walk util/Ontology.java:174-209
@@ -707,44 +707,34 @@ def materialize_store_delta(
     :func:`materialize_store` pass after the insert (recorded as
     ``full_fallback`` in the counters). Idempotent like the full path.
     """
-    from .sparql_update import _append_new, _open_store
-    from .triples import subj_bucket_of
+    from .triples import append_triples, open_store
 
     deltas = {"rdfs": rdfs_materialize_delta, "owl-rl": owl_rl_materialize_delta}
     if ruleset not in deltas:
         raise ValueError(f"materialize_store_delta: unknown ruleset {ruleset!r} (rdfs | owl-rl)")
-    store, n_buckets = _open_store(spark, store_path)
+    store = open_store(spark, store_path)
     spo = ["subj", "pred", "obj"]
     delta = delta.select(*spo).localCheckpoint(eager=True)
-
-    stats = {"deleted": 0, "inserted": 0, "buckets_rewritten": [], "buckets_appended": []}
-    ins = delta.withColumn("subj_bucket", subj_bucket_of(F.col("subj"), n_buckets))
-    stats = _append_new(spark, store_path, store, ins, stats)
+    stats = append_triples(store, store_path, delta)
     stats["inserted_delta"] = stats["inserted"]
 
     owl = ruleset == "owl-rl"
     if not _is_schema(delta, owl).isEmpty():
-        full = materialize_store(spark, store_path, ruleset=ruleset)
-        return {
-            **full,
-            "inserted": stats["inserted"] + full["inserted"],
-            "inserted_delta": stats["inserted_delta"],
-            "buckets_appended": sorted(
-                set(stats["buckets_appended"]) | set(full["buckets_appended"])
-            ),
-            "full_fallback": True,
-        }
-
-    store2, _ = _open_store(spark, store_path)
-    fn = rdfs_materialize_delta if ruleset == "rdfs" else owl_rl_materialize_delta
-    derived = fn(store2.select(*spo), delta).withColumn(
-        "subj_bucket", subj_bucket_of(F.col("subj"), n_buckets)
-    )
-    appended_before = set(stats["buckets_appended"])
-    stats = _append_new(spark, store_path, store2, derived, stats)
-    stats["buckets_appended"] = sorted(appended_before | set(stats["buckets_appended"]))
-    stats["full_fallback"] = False
-    return stats
+        derived = materialize_store(spark, store_path, ruleset=ruleset)
+        fallback = True
+    else:
+        store = open_store(spark, store_path)
+        derived = append_triples(store, store_path, deltas[ruleset](store.select(*spo), delta))
+        fallback = False
+    return {
+        **derived,
+        "inserted": stats["inserted"] + derived["inserted"],
+        "inserted_delta": stats["inserted_delta"],
+        "buckets_appended": sorted(
+            set(stats["buckets_appended"]) | set(derived["buckets_appended"])
+        ),
+        "full_fallback": fallback,
+    }
 
 
 def materialize_store(spark, store_path: str, ruleset: str = "rdfs") -> dict:
@@ -759,15 +749,13 @@ def materialize_store(spark, store_path: str, ruleset: str = "rdfs") -> dict:
     config choice made explicit). Returns the SPARQL-Update-shaped
     lineage counters.
     """
-    from .sparql_update import _append_new, _open_store
-    from .triples import subj_bucket_of
+    from .triples import append_triples, open_store
 
     closures = {"rdfs": rdfs_materialize, "owl-rl": owl_rl_materialize}
     if ruleset not in closures:
         raise ValueError(f"materialize_store: unknown ruleset {ruleset!r} (rdfs | owl-rl)")
-    store, n_buckets = _open_store(spark, store_path)
+    store = open_store(spark, store_path)
     derived = closures[ruleset](
         store.select("subj", "pred", "obj"), include_base=False, anti_join_base=False
-    ).withColumn("subj_bucket", subj_bucket_of(F.col("subj"), n_buckets))
-    stats = {"deleted": 0, "inserted": 0, "buckets_rewritten": [], "buckets_appended": []}
-    return _append_new(spark, store_path, store, derived, stats)
+    )
+    return append_triples(store, store_path, derived)

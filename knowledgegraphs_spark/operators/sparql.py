@@ -102,6 +102,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .triples import subject_scan
+
 __all__ = [
     "sparql_select",
     "sparql_ask",
@@ -1209,23 +1211,13 @@ def _order_patterns(pats: list, bound: set | None = None) -> list:
 
 
 def _eval_bgp(triples: DataFrame, bgp: Bgp, acc: DataFrame | None) -> DataFrame:
-    # read_triples attaches the store's bucket count: constant-subject
-    # patterns then also filter subj_bucket, which the file index folds to
-    # a partition filter — a point lookup reads 1/n of the store's files
-    n_buckets = getattr(triples, "_kg_subj_buckets", None)
-    bucketed = n_buckets and "subj_bucket" in triples.columns
     acc_vars = set(acc.columns) if acc is not None else set()
     for s, path, o in _order_patterns(bgp.triples, acc_vars):
         if isinstance(path, (PathIri, Var)):
-            rel = triples.select("subj", "pred", "obj")
+            # a constant subject scans one bucket of a read_triples store
+            rel = subject_scan(triples, s.text if isinstance(s, Term) else None)
             pred = path if isinstance(path, Var) else Term(path.iri)
             positions = (("subj", s), ("pred", pred), ("obj", o))
-            if bucketed and isinstance(s, Term):
-                from .triples import subj_bucket_of
-
-                rel = triples.filter(
-                    F.col("subj_bucket") == subj_bucket_of(s.text, n_buckets)
-                ).select("subj", "pred", "obj")
         else:
             rel = _path_edges(triples, path)
             positions = (("s", s), ("o", o))

@@ -4,25 +4,25 @@ The reference mutates its knowledge graph by re-uploading whole graphs to
 GraphDB and letting the endpoint's transaction log sort it out
 (``E_CreateKG/GraphDB.java:150-163``); rdflib-side edits are full-graph
 ``add()``/``remove()`` loops. On this engine the store is subject-hash
-bucketed parquet (``triples.py:write_triples``), so an update compiles to
+bucketed parquet, and its store API (``triples.py``: ``open_store``,
+``rewrite_buckets``, ``append_triples``, ``clear_store``) makes an update
 BUCKET-LOCAL work — the 100-TB property is that cost scales with the
-buckets the update touches, never with the store:
+buckets the update touches, never with the store. This module holds the
+update semantics only:
 
-- the WHERE clause evaluates through the ordinary SPARQL machinery
-  (bucket-pruned BGPs, hash joins);
+- the WHERE clause evaluates through the ordinary SPARQL machinery over
+  the store frame itself, so constant-subject patterns scan one bucket
+  (``triples.subject_scan``) and the rest are hash joins;
 - delete/insert templates instantiate exactly like CONSTRUCT templates
   (``sparql._template_graph``);
-- buckets containing deletions are rewritten through a STAGING dir +
-  per-bucket rename swap (kept = per-bucket left-anti join against the
-  delete set, streamed to ``_staging_rewrite``, then swapped in) — no
-  extra memory residency, no self-overwrite hazard; buckets that only
-  gain rows take parquet APPENDS — no rewrite at all;
-- inserts follow RDF set semantics (a triple already present is a no-op)
-  through a bucket-pruned anti join, while the base content keeps its
-  bag identity row-for-row (the KG emission owns its own dedup);
 - spec §3.1.3 operation order holds: deletes and the WHERE evaluation see
   the ORIGINAL store, inserts land after — ``DELETE {t} INSERT {t}
-  WHERE {p}`` round-trips a triple.
+  WHERE {p}`` round-trips a triple. ``rewrite_buckets`` applies the two
+  sets in that order: buckets containing deletions are rewritten through
+  a staged per-bucket swap, buckets that only gain rows take appends;
+- inserts follow RDF set semantics (a triple already present is a no-op),
+  while the base content keeps its bag identity row-for-row (the KG
+  emission owns its own dedup).
 
 Scope (documented, not silently wrong): single graph (GRAPH/WITH/USING
 raise), ``;``-separated scripts apply operation-by-operation (each sees
@@ -31,66 +31,21 @@ typed-literal metadata columns (``obj_dtype``, ``is_literal``) inserted
 rows hold NULL metadata — the update language speaks plain
 ``(subj, pred, obj)``; typed literals come from the emission path.
 
-Atomicity matches the store's contract elsewhere (``sinks/graphdb.py``
-divergence note): each rewritten bucket swaps in via one FS rename, and
-the full staged content commits before the first swap — a crash during
-staging leaves the store untouched; a crash mid-swap can leave some
-buckets updated and others not. Re-running the same request is
-idempotent (deletes of absent rows are no-ops, inserts are
-set-semantic), and a leftover ``_staging_rewrite`` dir is invisible to
-readers (underscore prefix) and overwritten by the next update.
+Atomicity is the store's (``triples.rewrite_buckets``): per-bucket
+swaps after the full staged content commits. Re-running a request is
+idempotent (deletes of absent rows are no-ops, inserts are set-semantic).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from .sparql import GraphMgmtOp, UpdateRequest, _eval_group, _template_graph, parse_update
-from .triples import read_triples, subj_bucket_of
+from .triples import append_triples, clear_store, open_store, rewrite_buckets
 
 __all__ = ["sparql_update"]
 
-
-def _staged_buckets(spark: SparkSession, staging: str) -> set[int]:
-    """Bucket ids present in the staging dir (``subj_bucket=N`` children),
-    via the JVM Hadoop FileSystem."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(staging)
-    fs = p.getFileSystem(conf)
-    out: set[int] = set()
-    if fs.exists(p):
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("subj_bucket="):
-                out.add(int(name.split("=", 1)[1]))
-    return out
-
-
-def _swap_bucket_dirs(
-    spark: SparkSession,
-    store_path: str,
-    staging: str,
-    rewritten: list[int],
-    non_empty: set[int],
-) -> None:
-    """Swap rewritten bucket directories into the store: delete each
-    old ``subj_bucket=b`` dir, rename the staged one in (a bucket whose
-    staged content is empty is simply removed — no stale files survive),
-    then drop the staging dir. JVM Hadoop FileSystem: works for
-    file://, hdfs://, s3a:// alike; each rename is atomic per bucket."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(store_path).getFileSystem(conf)
-    for b in rewritten:
-        old = jvm.org.apache.hadoop.fs.Path(store_path, f"subj_bucket={b}")
-        if fs.exists(old):
-            fs.delete(old, True)
-        if b in non_empty:
-            new = jvm.org.apache.hadoop.fs.Path(staging, f"subj_bucket={b}")
-            fs.rename(new, old)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+_UNCHANGED = {"deleted": 0, "inserted": 0, "buckets_rewritten": [], "buckets_appended": []}
 
 
 def sparql_update(
@@ -130,49 +85,22 @@ def sparql_update(
     return total
 
 
-def _open_store(spark: SparkSession, store_path: str):
-    store = read_triples(spark, store_path)
-    n_buckets = getattr(store, "_kg_subj_buckets", None)
-    if n_buckets is None:
-        raise ValueError(
-            "sparql_update: not a write_triples store (missing _kg_meta) — "
-            "updates need the bucket layout to stay bucket-local"
-        )
-    return store, n_buckets
-
-
 def _apply_mgmt(spark: SparkSession, store_path: str, op: GraphMgmtOp) -> dict:
     """Graph management (§3.1.4, §3.2) on the single-graph store.
 
-    CLEAR/DROP DEFAULT|ALL drops every bucket DIRECTORY — an O(buckets)
-    metadata operation, no data is read or rewritten (the one full-store
-    touch is the pre-delete count for the lineage counters, a
-    footer-only parquet count). The ``_kg_meta`` sidecar survives, so
-    the emptied store stays readable and re-insertable. LOAD parses the
-    document with ``read_ontology`` (Turtle / RDF/XML by extension, one
-    parse task per file) and merges it through the same set-semantic
-    append path as INSERT: only buckets gaining rows are touched,
-    nothing rewrites. Merge identity is ``(subj, pred, obj)`` — a loaded
-    triple already present keeps the store's row (and its typed-literal
+    CLEAR/DROP DEFAULT|ALL empties the store (``triples.clear_store``:
+    bucket directories dropped, nothing read or rewritten). LOAD parses
+    the document with ``read_ontology`` (Turtle / RDF/XML by extension,
+    one parse task per file) and merges it through the same set-semantic
+    append as INSERT: only buckets gaining rows are touched, nothing
+    rewrites. Merge identity is ``(subj, pred, obj)`` — a loaded triple
+    already present keeps the store's row (and its typed-literal
     metadata); fresh rows carry the document's metadata columns."""
-    stats = {"deleted": 0, "inserted": 0, "buckets_rewritten": [], "buckets_appended": []}
     if op.kind == "noop":
-        return stats
-    store, n_buckets = _open_store(spark, store_path)
+        return _UNCHANGED
+    store = open_store(spark, store_path)
     if op.kind == "clear":
-        stats["deleted"] = store.count()
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        root = jvm.org.apache.hadoop.fs.Path(store_path)
-        fs = root.getFileSystem(conf)
-        cleared = []
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("subj_bucket="):
-                cleared.append(int(name.split("=", 1)[1]))
-                fs.delete(st.getPath(), True)
-        stats["buckets_rewritten"] = sorted(cleared)
-        return stats
+        return clear_store(store, store_path)
     # LOAD: read + eagerly materialize so a bad document fails HERE
     # (SILENT turns that failure into a no-op, per §3.1.4)
     from ..sources.rdfxml_source import read_ontology
@@ -181,131 +109,24 @@ def _apply_mgmt(spark: SparkSession, store_path: str, op: GraphMgmtOp) -> dict:
         doc = read_ontology(spark, op.source).localCheckpoint(eager=True)
     except Exception:
         if op.silent:
-            return stats
+            return _UNCHANGED
         raise
     # an RDF document denotes a SET of triples regardless of repetition
-    ins = doc.dropDuplicates(["subj", "pred", "obj"]).withColumn(
-        "subj_bucket", subj_bucket_of(F.col("subj"), n_buckets)
-    )
-    return _append_new(spark, store_path, store, ins, stats)
-
-
-def _append_new(spark: SparkSession, store_path: str, store, ins, stats: dict) -> dict:
-    """Append ``ins`` rows not already present (set semantics on
-    ``(subj, pred, obj)``), aligned to the store schema — meta columns
-    the incoming frame lacks are null-filled, extra ones dropped. Only
-    the buckets present in ``ins`` are compared against or written."""
-    spo = ["subj", "pred", "obj"]
-    ins_buckets = sorted(r[0] for r in ins.select("subj_bucket").distinct().collect())
-    if not ins_buckets:
-        return stats
-    existing = store.filter(F.col("subj_bucket").isin(ins_buckets))
-    ins_new = ins.join(existing.select(*spo), on=spo, how="left_anti")
-    for c in store.columns:
-        if c not in ins_new.columns:
-            ins_new = ins_new.withColumn(c, F.lit(None).cast(store.schema[c].dataType))
-    ins_new = ins_new.select(*store.columns).localCheckpoint(eager=True)
-    n_new = ins_new.count()
-    if n_new:
-        (
-            ins_new.sortWithinPartitions("subj_bucket", "subj")
-            .write.mode("append")
-            .partitionBy("subj_bucket")
-            .parquet(store_path)
-        )
-        stats["inserted"] += n_new
-        stats["buckets_appended"] = sorted(
-            r[0] for r in ins_new.select("subj_bucket").distinct().collect()
-        )
-    return stats
+    return append_triples(store, store_path, doc.dropDuplicates(["subj", "pred", "obj"]))
 
 
 def _apply_operation(spark: SparkSession, store_path: str, req: UpdateRequest) -> dict:
-    store, n_buckets = _open_store(spark, store_path)
-    meta_cols = [c for c in store.columns if c not in ("subj", "pred", "obj", "subj_bucket")]
-
-    graph = store.select("subj", "pred", "obj")
-    graph._kg_subj_buckets = n_buckets  # keep constant-subject pruning through the select
-    sol = _eval_group(graph, req.where) if req.where is not None else None
+    store = open_store(spark, store_path)
+    sol = _eval_group(store, req.where) if req.where is not None else None
     if sol is not None and req.delete_template and req.insert_template:
         # modify form: one WHERE evaluation feeds BOTH templates (measured
         # on the 405 M-triple probe rung, where re-evaluating the solution
         # per template was the migration's single largest cost)
         sol = sol.localCheckpoint(eager=True)
-
-    def instantiate(template):
-        if template is None:
-            return None
-        g = _template_graph(spark, sol, template)
-        g = g.withColumn("subj_bucket", subj_bucket_of(F.col("subj"), n_buckets))
-        # materialize BEFORE any write: both frames derive from the store
-        # scan being rewritten, and a lazy re-read after the overwrite
-        # would hit replaced files; size = the update's match set
-        return g.localCheckpoint(eager=True)
-
-    deletes = instantiate(req.delete_template)
-    inserts = instantiate(req.insert_template)
-
-    # the touched-bucket sets are ≤ n_buckets values — driver-scale by
-    # construction, same contract as the CC/vocab driver twins
-    del_buckets: list[int] = (
-        sorted(r[0] for r in deletes.select("subj_bucket").distinct().collect())
-        if deletes is not None
-        else []
+    deletes, inserts = (
+        None if template is None else _template_graph(spark, sol, template)
+        for template in (req.delete_template, req.insert_template)
     )
-    stats = {"deleted": 0, "inserted": 0, "buckets_rewritten": [], "buckets_appended": []}
-    spo = ["subj", "pred", "obj"]
-
-    if del_buckets:
-        affected = store.filter(F.col("subj_bucket").isin(del_buckets))
-        kept = affected.join(deletes.select(*spo), on=spo, how="left_anti")
-        new_parts = [kept]
-        if inserts is not None:
-            ins_r = inserts.filter(F.col("subj_bucket").isin(del_buckets))
-            # set semantics against the POST-delete content (§3.1.3 order):
-            # a triple deleted and re-inserted by the same request survives
-            ins_r_new = ins_r.join(kept, on=spo, how="left_anti")
-            for c in meta_cols:
-                ins_r_new = ins_r_new.withColumn(c, F.lit(None).cast(store.schema[c].dataType))
-            new_parts.append(ins_r_new.select(*kept.columns))
-        content = new_parts[0]
-        for p in new_parts[1:]:
-            content = content.unionByName(p)
-        # STAGE, then swap: the rewritten content streams to a staging
-        # dir (underscore prefix — invisible to the parquet file index)
-        # while the original files stay readable, then each rewritten
-        # bucket dir swaps in via FS rename. This keeps the rewrite's
-        # memory at zero extra residency — the first cut localCheckpoint'd
-        # the whole rewritten content, which on the 405 M-triple probe
-        # rung meant materializing the entire store in executor storage
-        # (and at 100 TB would simply OOM) — and replaces the dynamic
-        # partition-overwrite self-read hazard with plain sequencing:
-        # every read of the original happens before the swap.
-        staging = store_path.rstrip("/") + "/_staging_rewrite"
-        (
-            content.sortWithinPartitions("subj_bucket", "subj")
-            .write.mode("overwrite")
-            .partitionBy("subj_bucket")
-            .parquet(staging)
-        )
-        # deleted = rows of the affected buckets matching the delete set
-        # (bag semantics: every copy of a matched (s,p,o) leaves);
-        # inserted-there = staged content beyond the kept rows
-        n_before = affected.count()
-        n_deleted = affected.join(deletes.select(*spo), on=spo, how="left_semi").count()
-        # list the staged partition dirs through the FS — an all-deleted
-        # (or no-op) rewrite stages zero rows, which parquet can't even
-        # infer a schema from
-        non_empty = _staged_buckets(spark, staging)
-        n_content = spark.read.parquet(staging).count() if non_empty else 0
-        stats["deleted"] = n_deleted
-        stats["inserted"] += n_content - (n_before - n_deleted)
-        _swap_bucket_dirs(spark, store_path, staging, del_buckets, non_empty)
-        stats["buckets_rewritten"] = del_buckets
-
-    if inserts is not None:
-        ins_a = inserts if not del_buckets else inserts.filter(
-            ~F.col("subj_bucket").isin(del_buckets)
-        )
-        _append_new(spark, store_path, store, ins_a, stats)
-    return stats
+    if deletes is None:
+        return append_triples(store, store_path, inserts)
+    return rewrite_buckets(store, store_path, deletes, inserts)

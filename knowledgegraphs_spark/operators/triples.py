@@ -15,13 +15,23 @@ partitioning; replaces the reference's insertion-order counters. (We join PK
 parts with '_' instead of bare concat for injectivity on composite keys.)
 
 Output schema: triples(subj, pred, obj, obj_dtype, is_literal) — the engine's
-fundamental table, written partitioned by ``pmod(xxhash64(subj), N)``.
+fundamental table. This module is also the triple STORE: the only code
+that knows its physical layout (parquet partitioned by ``subj_bucket =
+pmod(xxhash64(subj), N)``, subj-sorted inside each bucket, bucket count
+and schema in a ``_kg_meta`` sidecar). Later stages — SPARQL Update,
+entailment materialization, BGP/SPARQL lookups — go through its store
+API with plain (subj, pred, obj, …) frames: ``write_triples``,
+``read_triples``/``open_store``, ``subject_scan``, ``append_triples``,
+``rewrite_buckets``, ``clear_store``.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 from ..config import BASE_PREFIX, RDF_TYPE
 from ..functions import naming
@@ -175,6 +185,16 @@ def emit_transcript_triples(turns: DataFrame, po: PutativeOntology) -> DataFrame
     return emit_table_triples_single_pass(turns, turn_spec, po, extra_arrays=[conv_type])
 
 
+# -- the triple store -------------------------------------------------------
+# ``_kg_meta`` and ``_staging_rewrite``: the underscore prefix hides them
+# from the parquet file index. Mutating calls return SPARQL-Update-shaped
+# lineage counters.
+
+_BUCKET = "subj_bucket"
+_SPO = ["subj", "pred", "obj"]
+_META_SCHEMA = "subj_buckets int, schema_json string"
+
+
 def subj_bucket_of(subj: Column | str, n_buckets: int) -> Column:
     """The bucket a subject lands in under ``write_triples``' layout.
     On a literal subject this folds to a constant, so a filter built from
@@ -185,13 +205,39 @@ def subj_bucket_of(subj: Column | str, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(c), F.lit(n_buckets))
 
 
+def _with_bucket(triples: DataFrame, n_buckets: int) -> DataFrame:
+    return triples.withColumn(_BUCKET, subj_bucket_of(F.col("subj"), n_buckets))
+
+
+def _write_buckets(bucketed: DataFrame, path: str, mode: str) -> None:
+    """The one bucket writer. The subj-sort within write tasks satisfies
+    partitionBy's required ordering, so no second sort is inserted. Two
+    effects, both measured on the 10 B-triple rung: (1) same-subject /
+    same-prefix URIs become adjacent, which parquet dictionary+RLE needs —
+    the UNsorted map-side write compressed 2.3× worse than the
+    bucket-coalesced one (projected ~85 GB vs 37 GB) because hashing
+    scattered conversation locality; (2) row-group subj min/max stats
+    become disjoint ranges, so a constant-subject lookup prunes row groups
+    INSIDE the bucket too."""
+    (
+        bucketed.sortWithinPartitions(_BUCKET, "subj")
+        .write.mode(mode)
+        .partitionBy(_BUCKET)
+        .parquet(path)
+    )
+
+
+def _meta_path(path: str) -> str:
+    return path.rstrip("/") + "/_kg_meta"
+
+
 def write_triples(
     triples: DataFrame, path: str, n_buckets: int = 32, coalesce_buckets: bool = True
 ) -> None:
     """Persist partitioned by subject hash so per-subject reads prune.
-    Also records the bucket count under ``<path>/_kg_meta`` (underscore
-    prefix = invisible to the parquet file index) so ``read_triples`` can
-    re-arm constant-subject partition pruning in later sessions.
+    Also records the bucket count under ``<path>/_kg_meta`` so
+    ``read_triples`` can re-arm constant-subject partition pruning in
+    later sessions.
 
     ``coalesce_buckets=True`` (default) shuffles into one file per bucket
     — the tidiest layout for small/medium stores. At billions of triples
@@ -204,58 +250,207 @@ def write_triples(
     per-task sort spill is transient and bounded by one task's input.
     Directory pruning is identical; the cost is files-per-bucket = map
     tasks (``compact_store`` folds them later if wanted)."""
-    bucketed = triples.withColumn(
-        "subj_bucket", subj_bucket_of(F.col("subj"), n_buckets)
-    )
+    bucketed = _with_bucket(triples, n_buckets)
     if coalesce_buckets:
-        bucketed = bucketed.repartition(n_buckets, "subj_bucket")
-    # subj-sort within write tasks (satisfies partitionBy's required
-    # ordering, so no second sort is inserted). Two effects, both measured
-    # on the 10 B-triple rung: (1) same-subject/same-prefix URIs become
-    # adjacent, which parquet dictionary+RLE needs — the UNsorted map-side
-    # write compressed 2.3× worse than the bucket-coalesced one (projected
-    # ~85 GB vs 37 GB) because hashing scattered conversation locality;
-    # (2) row-group subj min/max stats become disjoint ranges, so a
-    # constant-subject lookup prunes row groups INSIDE the bucket too.
-    bucketed = bucketed.sortWithinPartitions("subj_bucket", "subj")
-    bucketed.write.mode("overwrite").partitionBy("subj_bucket").parquet(path)
-    spark = triples.sparkSession
+        bucketed = bucketed.repartition(n_buckets, _BUCKET)
+    _write_buckets(bucketed, path, "overwrite")
     # schema_json lets read_triples open a store whose every bucket was
-    # emptied by sparql_update (no parquet files left to infer from)
+    # emptied by an update (no parquet files left to infer from)
     meta = driver_frame(
-        spark, [(n_buckets, triples.schema.json())], "subj_buckets int, schema_json string"
+        triples.sparkSession, [(n_buckets, triples.schema.json())], _META_SCHEMA
     )
-    meta.coalesce(1).write.mode("overwrite").json(path.rstrip("/") + "/_kg_meta")
+    meta.coalesce(1).write.mode("overwrite").json(_meta_path(path))
 
 
 def read_triples(spark, path: str) -> DataFrame:
     """Open a ``write_triples`` store. The returned DataFrame carries the
     bucket count as ``_kg_subj_buckets`` (plain Python attribute — Spark
-    has no DataFrame metadata channel), which the BGP/SPARQL evaluators
-    use to turn constant-subject patterns into partition-pruned scans."""
+    has no DataFrame metadata channel), which :func:`subject_scan` uses
+    to turn constant-subject patterns into partition-pruned scans. Plain
+    parquet without the sidecar opens as is, without pruning."""
+    try:
+        rows = spark.read.schema(_META_SCHEMA).json(_meta_path(path)).collect()
+        meta = rows[0] if rows and rows[0]["subj_buckets"] is not None else None
+    except Exception:
+        meta = None
     try:
         df = spark.read.parquet(path)
     except Exception:
-        # a store whose every bucket was emptied (sparql_update deletes)
-        # has no parquet files left to infer a schema from — fall back to
-        # the schema recorded at write time
-        import json as _json
-
-        from pyspark.sql.types import IntegerType, StructType
-
-        meta_row = spark.read.json(path.rstrip("/") + "/_kg_meta").collect()[0]
-        schema_json = meta_row["schema_json"] if "schema_json" in meta_row else None
-        if schema_json is None:
+        # a store whose every bucket was emptied has no parquet files left
+        # to infer a schema from — fall back to the schema recorded at
+        # write time
+        if meta is None or meta["schema_json"] is None:
             raise
-        schema = StructType.fromJson(_json.loads(schema_json)).add(
-            "subj_bucket", IntegerType()
-        )
-        df = spark.createDataFrame([], schema)
-        df._kg_subj_buckets = int(meta_row["subj_buckets"])
-        return df
-    try:
-        n = spark.read.json(path.rstrip("/") + "/_kg_meta").collect()[0]["subj_buckets"]
-        df._kg_subj_buckets = int(n)
-    except Exception:
-        pass  # plain parquet without the meta sidecar: no pruning rewrite
+        schema = StructType.fromJson(json.loads(meta["schema_json"])).add(_BUCKET, IntegerType())
+        df = driver_frame(spark, [], schema)
+    if meta is not None:
+        df._kg_subj_buckets = int(meta["subj_buckets"])
     return df
+
+
+def subject_scan(triples: DataFrame, subj: str | None) -> DataFrame:
+    """The (subj, pred, obj) scan behind one triple pattern. Given a
+    constant subject and a ``read_triples`` store, it also filters the
+    subject's bucket, which the file index folds to a partition filter —
+    a point lookup reads 1/n of the store's files. Any other frame, or a
+    variable subject (``None``), scans whole."""
+    n_buckets = getattr(triples, "_kg_subj_buckets", None)
+    if subj is not None and n_buckets and _BUCKET in triples.columns:
+        triples = triples.filter(F.col(_BUCKET) == subj_bucket_of(subj, n_buckets))
+    return triples.select(*_SPO)
+
+
+def open_store(spark, path: str) -> DataFrame:
+    """``read_triples`` for callers that change the store: refuses plain
+    parquet, because appends and rewrites need the bucket layout to stay
+    bucket-local."""
+    store = read_triples(spark, path)
+    if getattr(store, "_kg_subj_buckets", None) is None:
+        raise ValueError(
+            f"{path}: not a write_triples store (missing _kg_meta) — "
+            "updates need the bucket layout to stay bucket-local"
+        )
+    return store
+
+
+def _counters(**changed) -> dict:
+    return {"deleted": 0, "inserted": 0, "buckets_rewritten": [], "buckets_appended": [], **changed}
+
+
+def _bucket_ids(bucketed: DataFrame) -> list[int]:
+    # ≤ n_buckets values — driver-scale by construction
+    return sorted(r[0] for r in bucketed.select(_BUCKET).distinct().collect())
+
+
+def _align(rows: DataFrame, store: DataFrame) -> DataFrame:
+    """``rows`` in the store's column order: metadata columns it lacks
+    are null-filled, extra ones dropped."""
+    for c in store.columns:
+        if c not in rows.columns:
+            rows = rows.withColumn(c, F.lit(None).cast(store.schema[c].dataType))
+    return rows.select(*store.columns)
+
+
+def _materialize(triples: DataFrame, store: DataFrame) -> DataFrame:
+    """Bucket and materialize an incoming frame once, BEFORE any write:
+    it is read again for its bucket ids and for the comparison, and it
+    usually derives from the store scan being changed, which a lazy
+    re-read after a rewrite would find replaced."""
+    return _with_bucket(triples, store._kg_subj_buckets).localCheckpoint(eager=True)
+
+
+def append_triples(store: DataFrame, path: str, triples: DataFrame) -> dict:
+    """Append the rows of ``triples`` that the store does not already hold
+    (RDF set semantics on (subj, pred, obj)). ``store`` is the
+    :func:`open_store` frame of ``path``. Only the buckets ``triples``
+    falls in are compared against or written; nothing rewrites. Returns
+    the lineage counters (``inserted``, ``buckets_appended``)."""
+    return _append(store, path, _materialize(triples, store))
+
+
+def _append(store: DataFrame, path: str, ins: DataFrame) -> dict:
+    buckets = _bucket_ids(ins)
+    if not buckets:
+        return _counters()
+    existing = store.filter(F.col(_BUCKET).isin(buckets)).select(*_SPO)
+    new = _align(ins.join(existing, on=_SPO, how="left_anti"), store).localCheckpoint(eager=True)
+    n_new = new.count()
+    if not n_new:
+        return _counters()
+    _write_buckets(new, path, "append")
+    return _counters(inserted=n_new, buckets_appended=_bucket_ids(new))
+
+
+def _hadoop_fs(spark, path: str):
+    """The JVM Hadoop FileSystem holding ``path`` and the JVM ``Path``
+    class: works for file://, hdfs://, s3a:// alike."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    return jpath(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
+
+
+def _bucket_dirs(fs, jpath, path: str) -> dict:
+    """``{bucket id: Path}`` of the ``subj_bucket=N`` children of ``path``."""
+    root = jpath(path)
+    out = {}
+    if fs.exists(root):
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if name.startswith(f"{_BUCKET}="):
+                out[int(name.split("=", 1)[1])] = st.getPath()
+    return out
+
+
+def rewrite_buckets(
+    store: DataFrame, path: str, deletes: DataFrame, inserts: DataFrame | None = None
+) -> dict:
+    """Delete, then insert (the SPARQL Update §3.1.3 order). Every store
+    row matching a ``deletes`` row on (subj, pred, obj) leaves, all of its
+    copies (bag semantics); ``inserts`` rows then land with set semantics
+    against the post-delete content, so a triple deleted and re-inserted
+    by one call survives. ``store`` is the :func:`open_store` frame of
+    ``path``; returns the lineage counters.
+
+    Only buckets holding deletions are rewritten: their new content
+    streams to a ``_staging_rewrite`` dir while the originals stay
+    readable, then each bucket dir swaps in via one FS rename (an emptied
+    bucket's dir is removed). Zero extra memory residency — a first cut
+    localCheckpoint'd the whole rewritten content, which on the 405
+    M-triple probe rung materialized the entire store in executor
+    storage. Inserts into other buckets take parquet appends. A crash
+    while staging leaves the store untouched; one mid-swap can leave some
+    buckets changed and others not."""
+    spark = store.sparkSession
+    deletes = _materialize(deletes.select(*_SPO), store)
+    inserts = None if inserts is None else _materialize(inserts, store)
+    rewritten = _bucket_ids(deletes)
+    out = _counters()
+    if rewritten:
+        in_rewritten = F.col(_BUCKET).isin(rewritten)
+        affected = store.filter(in_rewritten)
+        gone = deletes.select(*_SPO)
+        kept = affected.join(gone, on=_SPO, how="left_anti")
+        content = kept
+        if inserts is not None:
+            fresh = inserts.filter(in_rewritten).join(kept, on=_SPO, how="left_anti")
+            content = kept.unionByName(_align(fresh, store))
+            inserts = inserts.filter(~in_rewritten)
+        staging = path.rstrip("/") + "/_staging_rewrite"
+        _write_buckets(content, staging, "overwrite")
+        n_before = affected.count()
+        n_deleted = affected.join(gone, on=_SPO, how="left_semi").count()
+        # list the staged bucket dirs through the FS — an all-deleted
+        # rewrite stages zero rows, which parquet can't infer a schema from
+        fs, jpath = _hadoop_fs(spark, path)
+        staged = _bucket_dirs(fs, jpath, staging)
+        n_content = spark.read.parquet(staging).count() if staged else 0
+        old = _bucket_dirs(fs, jpath, path)
+        for b in rewritten:
+            if b in old:
+                fs.delete(old[b], True)
+            if b in staged:
+                fs.rename(staged[b], jpath(path, f"{_BUCKET}={b}"))
+        fs.delete(jpath(staging), True)
+        out = _counters(
+            deleted=n_deleted,
+            inserted=n_content - (n_before - n_deleted),
+            buckets_rewritten=rewritten,
+        )
+    if inserts is not None:
+        appended = _append(store, path, inserts)
+        out["inserted"] += appended["inserted"]
+        out["buckets_appended"] = appended["buckets_appended"]
+    return out
+
+
+def clear_store(store: DataFrame, path: str) -> dict:
+    """Empty the store by dropping every bucket DIRECTORY — an
+    O(buckets) metadata operation; no data is read or rewritten beyond
+    the footer-only row count for the ``deleted`` counter. The
+    ``_kg_meta`` sidecar survives, so the emptied store stays readable
+    and re-insertable."""
+    n_rows = store.count()
+    fs, jpath = _hadoop_fs(store.sparkSession, path)
+    dirs = _bucket_dirs(fs, jpath, path)
+    for d in dirs.values():
+        fs.delete(d, True)
+    return _counters(deleted=n_rows, buckets_rewritten=sorted(dirs))

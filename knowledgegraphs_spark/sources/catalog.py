@@ -13,14 +13,17 @@ URI forms:
 Write-side contract at scale: triple tables are written
 partitioned-by-bucket(subj) so downstream subject-keyed joins are
 co-located; with Iceberg this becomes a real bucket partition transform
-(``bucket(N, subj)``), with parquet a ``subj_bucket`` column +
-``partitionBy`` — same layout, same pruning behavior.
+(``bucket(N, subj)``), with parquet a ``<col>_bucket`` column +
+``partitionBy`` — for ``bucket_col="subj"`` the triple store's bucket hash
+(``triples.subj_bucket_of``), same pruning behavior.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.triples import subj_bucket_of
 
 ICEBERG_PREFIX = "iceberg:"
 TABLE_PREFIX = "table:"
@@ -70,9 +73,7 @@ def write_table(
         df.write.mode(mode).saveAsTable(uri[len(TABLE_PREFIX):])
         return
     if bucket_col is not None:
-        df = df.withColumn(
-            f"{bucket_col}_bucket", F.pmod(F.hash(F.col(bucket_col)), F.lit(n_buckets))
-        )
+        df = df.withColumn(f"{bucket_col}_bucket", subj_bucket_of(F.col(bucket_col), n_buckets))
         df.write.mode(mode).partitionBy(f"{bucket_col}_bucket").parquet(uri)
     else:
         df.write.mode(mode).parquet(uri)

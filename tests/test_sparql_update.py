@@ -326,3 +326,55 @@ def test_mgmt_in_migration_script(spark, tmp_path):
     assert spo(spark, path) == sorted(
         [(EX + "n", EX + "role", "seed"), (EX + "m", EX + "role", "tail")]
     )
+
+
+# --------------------------------------------------------------------------
+# store API behavior the update path relies on (operators/triples.py)
+# --------------------------------------------------------------------------
+
+
+def test_where_clause_prunes_to_the_subject_bucket(spark, tmp_path, monkeypatch):
+    """A constant-subject WHERE reads one bucket: the solution frame's
+    scan carries a subj_bucket PARTITION filter, as a query would."""
+    from knowledgegraphs_spark.operators import sparql_update as su
+
+    path = build_store(spark, tmp_path)
+    solutions = []
+
+    def capture(triples, group):
+        sol = real(triples, group)
+        solutions.append(sol)
+        return sol
+
+    real = su._eval_group
+    monkeypatch.setattr(su, "_eval_group", capture)
+    stats = sparql_update(spark, path, PFX + "DELETE WHERE { ex:a ?p ?o . }")
+    assert stats["deleted"] == 2 and len(stats["buckets_rewritten"]) == 1
+    (sol,) = solutions
+    plan = sol._jdf.queryExecution().executedPlan().toString()
+    assert "subj_bucket" in plan.split("PartitionFilters:")[1].split("]")[0], plan
+    assert spo(spark, path) == sorted(t for t in BASE if t[0] != EX + "a")
+
+
+def test_append_evaluates_a_lazy_input_once(spark, tmp_path):
+    """A lazy input (an entailment closure, a LOAD dedup) is paid once:
+    a UDF in it runs once per row, not once for the bucket list and
+    again for the comparison."""
+    from knowledgegraphs_spark.operators.triples import append_triples, open_store
+
+    path = build_store(spark, tmp_path)
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def subj_of(i):
+        calls.add(1)
+        return f"{EX}n{i}"
+
+    n = 50
+    ins = spark.range(n).select(
+        subj_of("id").alias("subj"), F.lit(EX + "p").alias("pred"), F.lit("v").alias("obj")
+    )
+    stats = append_triples(open_store(spark, path), path, ins)
+    assert stats["inserted"] == n
+    assert calls.value == n
+    assert len(spo(spark, path)) == len(BASE) + n
