@@ -42,7 +42,6 @@ class MatchConfig:
     bes_reject: float = 40.0      # F3: drop candidates below these floors
     pj_reject: float = 0.0
     num_raw_candidates: int = 200  # J4 blocking-join cap per source element
-    num_best: int = 20             # top-k kept per source element
     embedding_dim: int = 256       # hashing-trick encoder width
     ngram_range: tuple[int, int] = (2, 3)  # char n-grams fed to the encoder
     salt_buckets: int = 8          # salting factor for head-entity skew

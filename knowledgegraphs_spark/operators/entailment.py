@@ -1,45 +1,66 @@
-"""RDFS forward-chaining entailment materialization over the triple table.
+"""Forward-chaining entailment materialization over the triple table:
+RDFS and OWL 2 RL as ONE stratified pass.
 
 The reference delegates inference to GraphDB — its repository config asks
-for an RDFS ruleset and every uploaded graph is implicitly closed under
-it (E_CreateKG/GraphDB.java creates the repo, queries then see entailed
-triples). This engine makes that explicit and distributed: one stratified
-pass over the standard rho-df rule set materializes the entailment so
-downstream SPARQL/BGP queries (operators/sparql.py) read inferred triples
-at scan speed instead of paying inference per query.
+for a ruleset (``rdfs``, or ``owl-horst``/``owl2-rl`` on top of it) and
+every uploaded graph is implicitly closed under it (E_CreateKG/GraphDB.java
+creates the repo, queries then see entailed triples). This engine makes
+that explicit and distributed: one stratified pass materializes the
+entailment so downstream SPARQL/BGP queries (operators/sparql.py) read
+inferred triples at scan speed instead of paying inference per query.
 
-Rules (names from the W3C RDFS entailment rules / OWL 2 RL tables):
+Rules (names from the W3C RDFS entailment rules / OWL 2 RL tables), in
+stratum order; the OWL-only strata are marked:
 
-- ``scm-spo``  subPropertyOf transitivity   (closure, pointer doubling)
-- ``scm-sco``  subClassOf transitivity      (closure, pointer doubling)
+- ``scm-spo``  subPropertyOf transitivity   (closure, pointer doubling;
+  OWL: ``scm-eqp1/2`` feed ``owl:equivalentProperty`` in both directions)
 - ``prp-spo1`` (s p o), (p sub+ q) -> (s q o)
+- OWL ``prp-inv``  (p inverseOf q), (s p o) -> (o q s), and the mirror
+- OWL ``prp-symp`` (p type SymmetricProperty), (s p o) -> (o p s)
+- OWL ``prp-trp``  (p type TransitiveProperty): per-predicate closure
+  over the instance edges of p
 - ``prp-dom``  (s p o), (p domain c) -> (s rdf:type c)
 - ``prp-rng``  (s p o), (p range  c) -> (o rdf:type c)
+- ``scm-sco``  subClassOf transitivity      (closure, pointer doubling;
+  OWL: ``scm-eqc1/2`` feed ``owl:equivalentClass`` in both directions)
 - ``cax-sco``  (x rdf:type c), (c sub+ d) -> (x rdf:type d)
+- OWL ``prp-fp`` / ``prp-ifp``: functional identities as ``owl:sameAs``
 
-Stratification makes one pass complete: property-closure first, then
+The RDFS ruleset IS the OWL 2 RL pass with its OWL strata switched off:
+no TBox collect, no inverse / symmetric / transitive / functional
+strata, no OWL predicates in the surface-form vote, no pinned ``g1`` —
+so its plan is the plain rho-df pipeline. ``rdfs_materialize`` and
+``owl_rl_materialize`` are thin calls into that one closure, and
+``rdfs_materialize_delta`` / ``owl_rl_materialize_delta`` into one
+semi-naive increment.
+
+Stratification makes one pass complete: property closure first, then
 ``prp-spo1`` (so a subproperty of ``rdfs:subClassOf``/``domain``/``range``
-contributes schema triples before those are read), then domain/range,
-then class closure, then ``cax-sco`` over every type triple base or
-derived. The only derivations a single pass cannot reach are the
-pathological meta-loops (a *derived* ``rdfs:subPropertyOf`` triple, i.e.
-a subproperty OF ``rdfs:subPropertyOf`` itself) — the same finite
-fragment every production materializer (GraphDB's rdfs ruleset included)
-evaluates; documented here rather than hidden behind a fixpoint loop
-that would re-scan the instance data for a case real ontologies don't
-contain.
+contributes schema triples before those are read), then the direction
+and transitive rules, then domain/range, then class closure, then
+``cax-sco`` over every type triple base or derived, then the functional
+identities. Each stratum reads every earlier stratum's output. The only
+derivations a single pass cannot reach are the pathological meta-loops
+(a *derived* ``rdfs:subPropertyOf`` triple, i.e. a subproperty OF
+``rdfs:subPropertyOf`` itself; rules re-deriving schema from instance
+output) — the same finite fragment every production materializer
+(GraphDB's rulesets included) evaluates; documented here rather than
+hidden behind a fixpoint loop that would re-scan the instance data for a
+case real ontologies don't contain.
 
 Scale shape (the part that matters at 100 TB): the schema side of every
-rule — the two closures plus the domain/range maps — is TBox-sized
-(thousands of rows when the instance side is billions), so each rule is
-a **broadcast hash join against the instance scan**: zero instance-side
-shuffle, no iteration over instance data (the only loops are the
-pointer-doubling closures over schema edges, O(log depth) rounds on a
-vocabulary-sized relation). The one full-width shuffle is the final
-set-semantics dedup, and the store-side entry point avoids even that by
-handing the derived triples to the store's bucket-pruned set-semantic
-append, the one SPARQL Update inserts use (``triples.append_triples``):
-untouched buckets are never read or written.
+rule — the closures, the domain/range maps, the OWL pair axioms — is
+TBox-sized (thousands of rows when the instance side is billions), so
+each rule is a **broadcast hash join against the instance scan**: zero
+instance-side shuffle; OWL property-class membership compiles to
+``isin`` literal filters. The instance-scale work is ``prp-trp``
+(pointer doubling over the transitive predicates' edges only) and the
+functional groupBys (map-side combinable). The one full-width shuffle is
+the final set-semantics dedup, and the store-side entry point avoids
+even that by handing the derived triples to the store's bucket-pruned
+set-semantic append, the one SPARQL Update inserts use
+(``triples.append_triples``): untouched buckets are never read or
+written.
 
 Reference parity anchors: GraphDB-side inference E_CreateKG/GraphDB.java
 (repo config ruleset), the ancestor walk util/Ontology.java:174-209
@@ -49,8 +70,11 @@ vocabulary Resources of the POextractor package.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import driver_frame
 from .ontology import ancestor_closure_df
 
 __all__ = [
@@ -65,6 +89,7 @@ __all__ = [
 
 _RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 _RDFS = "http://www.w3.org/2000/01/rdf-schema#"
+_OWL = "http://www.w3.org/2002/07/owl#"
 
 # each vocabulary term in both surface forms the triple table uses:
 # compact (the engine's kg-emission convention) and full IRI (Turtle /
@@ -77,15 +102,48 @@ _FORMS = {
     "range": ("rdfs:range", _RDFS + "range"),
 }
 _VOCAB_PREDS = [v for forms in _FORMS.values() for v in forms]
+_OWL_FORMS = {
+    "inverseOf": ("owl:inverseOf", _OWL + "inverseOf"),
+    "equivalentProperty": ("owl:equivalentProperty", _OWL + "equivalentProperty"),
+    "equivalentClass": ("owl:equivalentClass", _OWL + "equivalentClass"),
+    "SymmetricProperty": ("owl:SymmetricProperty", _OWL + "SymmetricProperty"),
+    "TransitiveProperty": ("owl:TransitiveProperty", _OWL + "TransitiveProperty"),
+    "FunctionalProperty": ("owl:FunctionalProperty", _OWL + "FunctionalProperty"),
+    "InverseFunctionalProperty": (
+        "owl:InverseFunctionalProperty",
+        _OWL + "InverseFunctionalProperty",
+    ),
+}
+_SAMEAS = ("owl:sameAs", _OWL + "sameAs")
+
+# the OWL TBox: pair axioms in predicate position, property classes in the
+# object position of a type declaration
+_OWL_PAIR_TERMS = ("inverseOf", "equivalentProperty", "equivalentClass")
+_OWL_PROP_CLASSES = (
+    "SymmetricProperty",
+    "TransitiveProperty",
+    "FunctionalProperty",
+    "InverseFunctionalProperty",
+)
+_OWL_PAIR_PREDS = [v for k in _OWL_PAIR_TERMS for v in _OWL_FORMS[k]]
+_OWL_CLASS_OBJS = [v for k in _OWL_PROP_CLASSES for v in _OWL_FORMS[k]]
+_RDFS_SCHEMA_PREDS = [
+    v for k in ("subClassOf", "subPropertyOf", "domain", "range") for v in _FORMS[k]
+]
+
+# separator for predicate-scoped closure node keys (prp-trp): control char
+# that cannot appear in an IRI per RFC 3987, so closures of different
+# transitive predicates can share one pointer-doubling pass without mixing
+_TRP_SEP = "\x1f"
 
 
-def _emit_form(triples: DataFrame, extra_preds: tuple = ()) -> int:
+def _emit_form(triples: DataFrame, extra_preds: list | tuple = ()) -> int:
     """0 = compact (``rdf:type``), 1 = full IRI — whichever convention
     the input's own vocabulary triples use (majority vote over the
     vocabulary predicates actually present; vocabulary-sized collect).
     Derived triples are emitted in the same convention so they join and
     dedupe against the base graph instead of forking a parallel
-    vocabulary. ``extra_preds`` widens the vote (the OWL 2 RL path adds
+    vocabulary. ``extra_preds`` widens the vote (the OWL 2 RL ruleset adds
     its predicate-position vocabulary: inverseOf, equivalent*, sameAs)."""
     counts = (
         triples.filter(F.col("pred").isin(_VOCAB_PREDS + list(extra_preds)))
@@ -105,13 +163,207 @@ def _edges(triples: DataFrame, term: str) -> DataFrame:
     )
 
 
+def _owl_tbox(triples: DataFrame) -> dict[str, list]:
+    """The OWL axioms of ``triples`` in ONE TBox-sized collect: the
+    ``(p, q)`` pairs of each pair axiom (``_OWL_PAIR_TERMS``) and the
+    sorted properties declared into each property class
+    (``_OWL_PROP_CLASSES``). One filtered scan instead of one per term
+    (the type-row side stays bounded because it is filtered on the OWL
+    class vocabulary in the object position, never all rdf:type rows);
+    collected to the driver — the ``_emit_form`` scale judgment — so
+    class membership compiles to ``isin`` literal filters, not joins."""
+    rows = (
+        triples.filter(
+            F.col("pred").isin(_OWL_PAIR_PREDS)
+            | (F.col("pred").isin(list(_FORMS["type"])) & F.col("obj").isin(_OWL_CLASS_OBJS))
+        )
+        .select("subj", "pred", "obj")
+        .distinct()
+        .collect()
+    )
+    tbox: dict[str, list] = {
+        term: [(r["subj"], r["obj"]) for r in rows if r["pred"] in _OWL_FORMS[term]]
+        for term in _OWL_PAIR_TERMS
+    }
+    for cls in _OWL_PROP_CLASSES:
+        tbox[cls] = sorted(
+            {r["subj"] for r in rows if r["pred"] in _FORMS["type"] and r["obj"] in _OWL_FORMS[cls]}
+        )
+    return tbox
+
+
+def _both_dirs(pairs: DataFrame) -> DataFrame:
+    """(child, parent) edges of an equivalence, in both directions."""
+    return pairs.select(F.col("p").alias("child"), F.col("q").alias("parent")).unionByName(
+        pairs.select(F.col("q").alias("child"), F.col("p").alias("parent"))
+    )
+
+
+def _closure(
+    triples: DataFrame,
+    owl: bool,
+    include_base: bool,
+    broadcast_schema: bool,
+    anti_join_base: bool,
+    max_trans_iters: int = 50,
+    tbox: dict | None = None,
+) -> DataFrame:
+    """The stratified closure of ``triples`` under the RDFS ruleset
+    (``owl=False``) or the OWL 2 RL one — see the module docstring for
+    the strata. ``tbox`` hands in an already-collected :func:`_owl_tbox`
+    of the input (the semi-naive increment has one)."""
+    spo = ["subj", "pred", "obj"]
+    base = triples.select(*spo)
+    form = _emit_form(base, _OWL_PAIR_PREDS + list(_SAMEAS) if owl else ())
+    t_type, t_sco, t_spo = (_FORMS[k][form] for k in ("type", "subClassOf", "subPropertyOf"))
+
+    def _b(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if broadcast_schema else df
+
+    spo_edges = _edges(base, "subPropertyOf")
+    if owl:
+        tbox = _owl_tbox(base) if tbox is None else tbox
+        eqp, eqc, inv = (
+            driver_frame(base.sparkSession, tbox[k], "p string, q string")
+            for k in ("equivalentProperty", "equivalentClass", "inverseOf")
+        )
+        spo_edges = spo_edges.unionByName(_both_dirs(eqp))
+
+    # -- stratum 1: property hierarchy, then prp-spo1 ---------------------
+    spo_cl = ancestor_closure_df(spo_edges).localCheckpoint(eager=True)
+    derived_spo1 = base.join(_b(spo_cl), base["pred"] == spo_cl["node"]).select(
+        "subj", F.col("anc").alias("pred"), "obj"
+    )
+    # schema statements derived through a subproperty of a vocabulary term
+    # (e.g. ex:narrowerThan <= rdfs:subClassOf) must feed later strata,
+    # so the graph the remaining rules read is base + spo1 derivations
+    g1 = base.unionByName(derived_spo1)
+    derived = [derived_spo1]
+    g = g1  # the instance graph every later stratum reads
+
+    if owl:
+        # g1 is read by every later stratum (direction rules, transitive
+        # edges, domain/range, class typing, functional groupings) and its
+        # lineage embeds the full input scan; pinning it once keeps the final
+        # plan from replicating that scan per branch (~6x) and keeps the
+        # analyzed plan driver-tractable when the input is itself a deep
+        # union.  One instance-sized copy on executor storage, spill-backed.
+        g = g1 = g1.localCheckpoint(eager=True)
+
+        # -- stratum 2: direction rules (prp-inv both mirrors, prp-symp) --
+        inv_map = inv.unionByName(inv.select(F.col("q").alias("p"), F.col("p").alias("q")))
+        derived.append(
+            g1.join(_b(inv_map), g1["pred"] == inv_map["p"]).select(
+                F.col("obj").alias("subj"), F.col("q").alias("pred"), F.col("subj").alias("obj")
+            )
+        )
+        if tbox["SymmetricProperty"]:
+            derived.append(
+                g1.filter(F.col("pred").isin(tbox["SymmetricProperty"])).select(
+                    F.col("obj").alias("subj"), "pred", F.col("subj").alias("obj")
+                )
+            )
+        g = reduce(DataFrame.unionByName, derived[1:], g1)
+
+        # -- stratum 3: prp-trp — one pointer-doubling pass over ALL
+        # transitive predicates' instance edges, node keys scoped by
+        # predicate ------------------------------------------------------
+        if tbox["TransitiveProperty"]:
+            t_edges = g.filter(F.col("pred").isin(tbox["TransitiveProperty"])).select(
+                F.concat("pred", F.lit(_TRP_SEP), "subj").alias("child"),
+                F.concat("pred", F.lit(_TRP_SEP), "obj").alias("parent"),
+            )
+            t_cl = ancestor_closure_df(t_edges, max_iters=max_trans_iters)
+            # split on the FIRST separator only: the predicate (an IRI)
+            # cannot contain it, while an object-position literal
+            # theoretically could
+            _node_rest = "substring({c}, length(substring_index({c}, chr(31), 1)) + 2)"
+            # the later strata and the final union each re-reference this
+            # relation; without a checkpoint the whole O(log depth)
+            # pointer-doubling job DAG re-executes once per consumer (~5x).
+            # The closure is already materialized round-by-round inside
+            # ancestor_closure_df, so pinning adds no asymptotic memory.
+            derived_trp = t_cl.select(
+                F.expr(_node_rest.format(c="node")).alias("subj"),
+                F.substring_index("node", _TRP_SEP, 1).alias("pred"),
+                F.expr(_node_rest.format(c="anc")).alias("obj"),
+            ).localCheckpoint(eager=True)
+            derived.append(derived_trp)
+            g = g.unionByName(derived_trp)
+
+    # -- domain / range over every instance edge derived so far ----------
+    dom = _edges(g1, "domain").select(F.col("child").alias("p"), F.col("parent").alias("c"))
+    rng = _edges(g1, "range").select(F.col("child").alias("p"), F.col("parent").alias("c"))
+    derived_dom = g.join(_b(dom), g["pred"] == dom["p"]).select(
+        "subj", F.lit(t_type).alias("pred"), F.col("c").alias("obj")
+    )
+    derived_rng = g.join(_b(rng), g["pred"] == rng["p"]).select(
+        F.col("obj").alias("subj"), F.lit(t_type).alias("pred"), F.col("c").alias("obj")
+    )
+
+    # -- class hierarchy, then cax-sco -----------------------------------
+    sco_edges = _edges(g1, "subClassOf")
+    if owl:
+        sco_edges = sco_edges.unionByName(_both_dirs(eqc))
+    sco_cl = ancestor_closure_df(sco_edges).localCheckpoint(eager=True)
+    types0 = (
+        g.filter(F.col("pred").isin(list(_FORMS["type"])))
+        .select(*spo)
+        .unionByName(derived_dom)
+        .unionByName(derived_rng)
+    )
+    derived_cax = types0.join(_b(sco_cl), types0["obj"] == sco_cl["node"]).select(
+        "subj", F.lit(t_type).alias("pred"), F.col("anc").alias("obj")
+    )
+
+    # -- schema transitivity output (scm-sco / scm-spo) ------------------
+    derived_scm = sco_cl.select(
+        F.col("node").alias("subj"), F.lit(t_sco).alias("pred"), F.col("anc").alias("obj")
+    ).unionByName(
+        spo_cl.select(
+            F.col("node").alias("subj"), F.lit(t_spo).alias("pred"), F.col("anc").alias("obj")
+        )
+    )
+    derived += [derived_dom, derived_rng, derived_cax, derived_scm]
+
+    # -- OWL: functional identities (prp-fp / prp-ifp), each group member
+    # linked to the group minimum ------------------------------------------
+    if owl:
+        for cls, keys, member in (
+            ("FunctionalProperty", ["subj", "pred"], "obj"),
+            ("InverseFunctionalProperty", ["pred", "obj"], "subj"),
+        ):
+            if tbox[cls]:
+                group = g.filter(F.col("pred").isin(tbox[cls]))
+                canon = group.groupBy(*keys).agg(F.min(member).alias("canonical"))
+                derived.append(
+                    group.join(canon, keys)
+                    .filter(F.col(member) != F.col("canonical"))
+                    .select(
+                        F.col(member).alias("subj"),
+                        F.lit(_SAMEAS[form]).alias("pred"),
+                        F.col("canonical").alias("obj"),
+                    )
+                )
+
+    out = reduce(DataFrame.unionByName, derived)
+    if include_base:
+        return base.unionByName(out).dropDuplicates(spo)
+    out = out.dropDuplicates(spo)
+    # anti_join_base=False skips the full-input anti-join for callers that
+    # enforce set semantics themselves (materialize_store's bucket-pruned
+    # append anti-joins per touched bucket — the store-wide shuffle here
+    # would be paid twice)
+    return out.join(base, on=spo, how="left_anti") if anti_join_base else out
+
+
 def rdfs_materialize(
     triples: DataFrame,
     include_base: bool = True,
     broadcast_schema: bool = True,
     anti_join_base: bool = True,
 ) -> DataFrame:
-    """The RDFS closure of ``triples`` as ``(subj, pred, obj)``.
+    """The RDFS (rho-df) closure of ``triples`` as ``(subj, pred, obj)``.
 
     ``include_base=False`` returns only the *derived* triples not already
     asserted (the store-side append path wants exactly these).
@@ -120,114 +372,7 @@ def rdfs_materialize(
     degenerate graph whose schema rivals its instance data, where the
     shuffle join is the safe plan.
     """
-    spo = ["subj", "pred", "obj"]
-    base = triples.select(*spo)
-    form = _emit_form(base)
-    t_type, t_sco, t_spo = (_FORMS[k][form] for k in ("type", "subClassOf", "subPropertyOf"))
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_schema else df
-
-    # -- stratum 1: property hierarchy, then prp-spo1 ---------------------
-    spo_cl = ancestor_closure_df(_edges(base, "subPropertyOf")).localCheckpoint(eager=True)
-    derived_spo1 = (
-        base.join(_b(spo_cl), base["pred"] == spo_cl["node"])
-        .select("subj", F.col("anc").alias("pred"), "obj")
-    )
-    # schema statements derived through a subproperty of a vocabulary term
-    # (e.g. ex:narrowerThan <= rdfs:subClassOf) must feed later strata,
-    # so the graph the remaining rules read is base + spo1 derivations
-    g1 = base.unionByName(derived_spo1)
-
-    # -- stratum 2: domain / range ---------------------------------------
-    dom = _edges(g1, "domain").select(F.col("child").alias("p"), F.col("parent").alias("c"))
-    rng = _edges(g1, "range").select(F.col("child").alias("p"), F.col("parent").alias("c"))
-    derived_dom = g1.join(_b(dom), g1["pred"] == dom["p"]).select(
-        "subj", F.lit(t_type).alias("pred"), F.col("c").alias("obj")
-    )
-    derived_rng = g1.join(_b(rng), g1["pred"] == rng["p"]).select(
-        F.col("obj").alias("subj"), F.lit(t_type).alias("pred"), F.col("c").alias("obj")
-    )
-
-    # -- stratum 3: class hierarchy, then cax-sco ------------------------
-    sco_cl = ancestor_closure_df(_edges(g1, "subClassOf")).localCheckpoint(eager=True)
-    types0 = (
-        g1.filter(F.col("pred").isin(list(_FORMS["type"])))
-        .select(*spo)
-        .unionByName(derived_dom)
-        .unionByName(derived_rng)
-    )
-    derived_cax = (
-        types0.join(_b(sco_cl), types0["obj"] == sco_cl["node"])
-        .select("subj", F.lit(t_type).alias("pred"), F.col("anc").alias("obj"))
-    )
-
-    # -- schema transitivity output (scm-sco / scm-spo) ------------------
-    derived_scm = (
-        sco_cl.select(
-            F.col("node").alias("subj"), F.lit(t_sco).alias("pred"), F.col("anc").alias("obj")
-        )
-        .unionByName(
-            spo_cl.select(
-                F.col("node").alias("subj"), F.lit(t_spo).alias("pred"), F.col("anc").alias("obj")
-            )
-        )
-    )
-
-    derived = (
-        derived_spo1.unionByName(derived_dom)
-        .unionByName(derived_rng)
-        .unionByName(derived_cax)
-        .unionByName(derived_scm)
-    )
-    if include_base:
-        return base.unionByName(derived).dropDuplicates(spo)
-    out = derived.dropDuplicates(spo)
-    # anti_join_base=False skips the full-input anti-join for callers that
-    # enforce set semantics themselves (materialize_store's bucket-pruned
-    # append anti-joins per touched bucket — the store-wide shuffle here
-    # would be paid twice)
-    return out.join(base, on=spo, how="left_anti") if anti_join_base else out
-
-
-_OWL = "http://www.w3.org/2002/07/owl#"
-
-# OWL 2 RL property-axiom vocabulary, both surface forms (compact engine
-# convention / full IRI from ontology-file sources) like _FORMS above
-_OWL_FORMS = {
-    "inverseOf": ("owl:inverseOf", _OWL + "inverseOf"),
-    "equivalentProperty": ("owl:equivalentProperty", _OWL + "equivalentProperty"),
-    "equivalentClass": ("owl:equivalentClass", _OWL + "equivalentClass"),
-    "SymmetricProperty": ("owl:SymmetricProperty", _OWL + "SymmetricProperty"),
-    "TransitiveProperty": ("owl:TransitiveProperty", _OWL + "TransitiveProperty"),
-    "FunctionalProperty": ("owl:FunctionalProperty", _OWL + "FunctionalProperty"),
-    "InverseFunctionalProperty": (
-        "owl:InverseFunctionalProperty",
-        _OWL + "InverseFunctionalProperty",
-    ),
-}
-
-# separator for predicate-scoped closure node keys (prp-trp): control char
-# that cannot appear in an IRI per RFC 3987, so closures of different
-# transitive predicates can share one pointer-doubling pass without mixing
-_TRP_SEP = "\x1f"
-
-
-def _typed_props(triples: DataFrame, cls: str) -> list[str]:
-    """Properties declared ``rdf:type owl:<cls>`` — TBox-sized, collected
-    to the driver (same scale judgment as ``_emit_form``: thousands of
-    schema rows against billions of instance rows) so membership tests
-    compile to an ``isin`` literal filter instead of a join."""
-    return [
-        r[0]
-        for r in triples.filter(
-            F.col("pred").isin(list(_FORMS["type"]))
-            & F.col("obj").isin(list(_OWL_FORMS[cls]))
-        )
-        .select("subj")
-        .distinct()
-        .collect()
-    ]
+    return _closure(triples, False, include_base, broadcast_schema, anti_join_base)
 
 
 def owl_rl_materialize(
@@ -248,7 +393,8 @@ def owl_rl_materialize(
     - ``prp-inv``  (p inverseOf q), (s p o) → (o q s) — and the mirror.
     - ``prp-symp`` (p type SymmetricProperty), (s p o) → (o p s).
     - ``prp-trp``  (p type TransitiveProperty): per-predicate transitive
-      closure over the *instance* edges of p.
+      closure over the *instance* edges of p (at most
+      ``max_trans_iters`` pointer-doubling rounds).
     - ``prp-fp``   (p type FunctionalProperty), (x p y1), (x p y2)
       → y1 sameAs y2; ``prp-ifp`` the subject-side mirror. Emitted as the
       **generating set** — each group member links to the group minimum —
@@ -257,229 +403,14 @@ def owl_rl_materialize(
       :func:`owl_sameas_smush` exists to avoid. Feed the result to the
       smusher to apply the identities.
 
-    Stratification (single documented pass, same philosophy as the RDFS
-    core): property closure → ``prp-spo1`` → direction rules (inverse /
-    symmetric) → ``prp-trp`` → domain / range → class closure →
-    ``cax-sco`` → functional identities. Each stratum reads every earlier
-    stratum's output, so e.g. an inverse-derived edge of a transitive
-    property closes transitively, and a triple derived through
-    ``equivalentProperty`` picks up the domain typing. The derivations a
-    single pass cannot reach are the meta-loops (rules re-deriving
-    *schema* from instance output) — the same finite fragment noted on
-    :func:`rdfs_materialize`.
-
-    Scale shape: every schema relation (inverse map, equivalence maps,
-    property/class closures) is TBox-sized and broadcast; symmetric /
-    transitive / functional membership compiles to ``isin`` literal
-    filters. The instance-scale work is ``prp-trp`` (pointer doubling
-    over the transitive predicates' edges only — O(log depth) rounds,
-    edges keyed by predicate so one pass closes all transitive
-    predicates) and the functional groupBys (map-side combinable, keyed
-    by (subj, pred) / (pred, obj) over the functional predicates only).
-
-    Reference parity: GraphDB repository rulesets beyond ``rdfs``
-    (E_CreateKG/GraphDB.java creates the repo; the ruleset is repo
-    config), made explicit and distributed.
+    Each stratum reads every earlier stratum's output, so e.g. an
+    inverse-derived edge of a transitive property closes transitively,
+    and a triple derived through ``equivalentProperty`` picks up the
+    domain typing. The other parameters are :func:`rdfs_materialize`'s.
     """
-    spo = ["subj", "pred", "obj"]
-    base = triples.select(*spo)
-    owl_pred_vocab = tuple(
-        v
-        for k in ("inverseOf", "equivalentProperty", "equivalentClass")
-        for v in _OWL_FORMS[k]
-    ) + _SAMEAS
-    form = _emit_form(base, extra_preds=owl_pred_vocab)
-    t_type, t_sco, t_spo = (_FORMS[k][form] for k in ("type", "subClassOf", "subPropertyOf"))
-    t_same = _SAMEAS[form]
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_schema else df
-
-    # ONE TBox collect instead of seven per-term scans: the pair axioms
-    # (inverseOf / equivalent*) and the four property-class declarations
-    # are all TBox-sized, so a single filtered pass pulls them together
-    # (the type-row side stays bounded because it is filtered on the OWL
-    # class vocabulary in the object position, never all rdf:type rows).
-    # At instance scale this is one scan of the input where the previous
-    # shape re-scanned it per schema relation.
-    spark = base.sparkSession
-    pair_preds = [
-        v for k in ("inverseOf", "equivalentProperty", "equivalentClass") for v in _OWL_FORMS[k]
-    ]
-    prop_classes = (
-        "SymmetricProperty",
-        "TransitiveProperty",
-        "FunctionalProperty",
-        "InverseFunctionalProperty",
+    return _closure(
+        triples, True, include_base, broadcast_schema, anti_join_base, max_trans_iters
     )
-    class_forms = [v for k in prop_classes for v in _OWL_FORMS[k]]
-    type_forms = list(_FORMS["type"])
-    tbox_rows = (
-        base.filter(
-            F.col("pred").isin(pair_preds)
-            | (F.col("pred").isin(type_forms) & F.col("obj").isin(class_forms))
-        )
-        .select(*spo)
-        .distinct()
-        .collect()
-    )
-
-    def _pairs_of(term: str) -> DataFrame:
-        forms = set(_OWL_FORMS[term])
-        rows = [(r["subj"], r["obj"]) for r in tbox_rows if r["pred"] in forms]
-        return spark.createDataFrame(rows, "p string, q string")
-
-    def _props_of(cls: str) -> list[str]:
-        forms = set(_OWL_FORMS[cls])
-        return sorted({r["subj"] for r in tbox_rows if r["pred"] in type_forms and r["obj"] in forms})
-
-    eqp = _pairs_of("equivalentProperty")
-    eqc = _pairs_of("equivalentClass")
-    inv = _pairs_of("inverseOf")
-    sym_props = _props_of("SymmetricProperty")
-    trans_props = _props_of("TransitiveProperty")
-    fp_props = _props_of("FunctionalProperty")
-    ifp_props = _props_of("InverseFunctionalProperty")
-
-    def _both_dirs(pairs: DataFrame) -> DataFrame:
-        return pairs.select(F.col("p").alias("child"), F.col("q").alias("parent")).unionByName(
-            pairs.select(F.col("q").alias("child"), F.col("p").alias("parent"))
-        )
-
-    # -- stratum 1: property hierarchy (sub ∪ equivalence), then prp-spo1 --
-    spo_edges = _edges(base, "subPropertyOf").unionByName(_both_dirs(eqp))
-    spo_cl = ancestor_closure_df(spo_edges).localCheckpoint(eager=True)
-    derived_spo1 = base.join(_b(spo_cl), base["pred"] == spo_cl["node"]).select(
-        "subj", F.col("anc").alias("pred"), "obj"
-    )
-    # g1 is read by every later stratum (direction rules, transitive
-    # edges, domain/range, class typing, functional groupings) and its
-    # lineage embeds the full input scan; pinning it once keeps the final
-    # plan from replicating that scan per branch (~6x) and keeps the
-    # analyzed plan driver-tractable when the input is itself a deep
-    # union.  One instance-sized copy on executor storage, spill-backed.
-    g1 = base.unionByName(derived_spo1).localCheckpoint(eager=True)
-
-    # -- stratum 2: direction rules (prp-inv both mirrors, prp-symp) ------
-    inv_map = inv.unionByName(inv.select(F.col("q").alias("p"), F.col("p").alias("q")))
-    derived_inv = g1.join(_b(inv_map), g1["pred"] == inv_map["p"]).select(
-        F.col("obj").alias("subj"), F.col("q").alias("pred"), F.col("subj").alias("obj")
-    )
-    derived_sym = (
-        g1.filter(F.col("pred").isin(sym_props)).select(
-            F.col("obj").alias("subj"), "pred", F.col("subj").alias("obj")
-        )
-        if sym_props
-        else None
-    )
-    g2 = g1.unionByName(derived_inv)
-    if derived_sym is not None:
-        g2 = g2.unionByName(derived_sym)
-
-    # -- stratum 3: prp-trp — one pointer-doubling pass over ALL transitive
-    # predicates' instance edges, node keys scoped by predicate ----------
-    derived_trp = None
-    if trans_props:
-        t_edges = g2.filter(F.col("pred").isin(trans_props)).select(
-            F.concat("pred", F.lit(_TRP_SEP), "subj").alias("child"),
-            F.concat("pred", F.lit(_TRP_SEP), "obj").alias("parent"),
-        )
-        t_cl = ancestor_closure_df(t_edges, max_iters=max_trans_iters)
-        # split on the FIRST separator only: the predicate (an IRI) cannot
-        # contain it, while an object-position literal theoretically could
-        _node_rest = "substring({c}, length(substring_index({c}, chr(31), 1)) + 2)"
-        derived_trp = t_cl.select(
-            F.expr(_node_rest.format(c="node")).alias("subj"),
-            F.substring_index("node", _TRP_SEP, 1).alias("pred"),
-            F.expr(_node_rest.format(c="anc")).alias("obj"),
-        )
-        # Strata 4-6 and the final union each re-reference this relation;
-        # without a checkpoint the whole O(log depth) pointer-doubling job
-        # DAG re-executes once per consumer (~5x).  The closure is already
-        # materialized round-by-round inside ancestor_closure_df, so
-        # pinning the final result adds no asymptotic memory.
-        derived_trp = derived_trp.localCheckpoint(eager=True)
-    g3 = g2.unionByName(derived_trp) if derived_trp is not None else g2
-
-    # -- stratum 4: domain / range over every derived edge so far --------
-    dom = _edges(g1, "domain").select(F.col("child").alias("p"), F.col("parent").alias("c"))
-    rng = _edges(g1, "range").select(F.col("child").alias("p"), F.col("parent").alias("c"))
-    derived_dom = g3.join(_b(dom), g3["pred"] == dom["p"]).select(
-        "subj", F.lit(t_type).alias("pred"), F.col("c").alias("obj")
-    )
-    derived_rng = g3.join(_b(rng), g3["pred"] == rng["p"]).select(
-        F.col("obj").alias("subj"), F.lit(t_type).alias("pred"), F.col("c").alias("obj")
-    )
-
-    # -- stratum 5: class hierarchy (sub ∪ equivalence), then cax-sco ----
-    sco_edges = _edges(g1, "subClassOf").unionByName(_both_dirs(eqc))
-    sco_cl = ancestor_closure_df(sco_edges).localCheckpoint(eager=True)
-    types0 = (
-        g3.filter(F.col("pred").isin(list(_FORMS["type"])))
-        .select(*spo)
-        .unionByName(derived_dom)
-        .unionByName(derived_rng)
-    )
-    derived_cax = types0.join(_b(sco_cl), types0["obj"] == sco_cl["node"]).select(
-        "subj", F.lit(t_type).alias("pred"), F.col("anc").alias("obj")
-    )
-
-    # -- stratum 6: functional identities (prp-fp / prp-ifp) -------------
-    def _group_min_links(df: DataFrame, keys: list[str], member: str) -> DataFrame:
-        canon = df.groupBy(*keys).agg(F.min(member).alias("canonical"))
-        return (
-            df.join(canon, keys)
-            .filter(F.col(member) != F.col("canonical"))
-            .select(
-                F.col(member).alias("subj"),
-                F.lit(t_same).alias("pred"),
-                F.col("canonical").alias("obj"),
-            )
-        )
-
-    identity_parts = []
-    if fp_props:
-        identity_parts.append(
-            _group_min_links(g3.filter(F.col("pred").isin(fp_props)), ["subj", "pred"], "obj")
-        )
-    if ifp_props:
-        identity_parts.append(
-            _group_min_links(g3.filter(F.col("pred").isin(ifp_props)), ["pred", "obj"], "subj")
-        )
-
-    # -- schema transitivity output (scm-*) -------------------------------
-    derived_scm = sco_cl.select(
-        F.col("node").alias("subj"), F.lit(t_sco).alias("pred"), F.col("anc").alias("obj")
-    ).unionByName(
-        spo_cl.select(
-            F.col("node").alias("subj"), F.lit(t_spo).alias("pred"), F.col("anc").alias("obj")
-        )
-    )
-
-    derived = derived_spo1.unionByName(derived_inv)
-    if derived_sym is not None:
-        derived = derived.unionByName(derived_sym)
-    if derived_trp is not None:
-        derived = derived.unionByName(derived_trp)
-    derived = (
-        derived.unionByName(derived_dom)
-        .unionByName(derived_rng)
-        .unionByName(derived_cax)
-        .unionByName(derived_scm)
-    )
-    for part in identity_parts:
-        derived = derived.unionByName(part)
-    if include_base:
-        return base.unionByName(derived).dropDuplicates(spo)
-    out = derived.dropDuplicates(spo)
-    # anti_join_base=False skips the full-input anti-join for callers that
-    # enforce set semantics themselves (materialize_store's bucket-pruned
-    # append anti-joins per touched bucket — the store-wide shuffle here
-    # would be paid twice)
-    return out.join(base, on=spo, how="left_anti") if anti_join_base else out
-
-
-_SAMEAS = ("owl:sameAs", "http://www.w3.org/2002/07/owl#sameAs")
 
 
 def owl_sameas_smush(
@@ -580,45 +511,27 @@ def owl_sameas_smush(
 # incremental (semi-naive) entailment: close a DELTA against a closed store
 # ---------------------------------------------------------------------------
 
-# predicate-position schema vocabulary per ruleset — a delta containing any
-# of these (or an owl property-class type declaration) can entail new
-# conclusions over OLD instance data, which only a full re-materialization
-# reaches; the delta paths refuse and the store wrapper falls back.
-_RDFS_SCHEMA_PREDS = [
-    v for k in ("subClassOf", "subPropertyOf", "domain", "range") for v in _FORMS[k]
-]
+# ruleset name -> OWL strata on; the one table both store entry points read
+_RULESETS = {"rdfs": False, "owl-rl": True}
 
 
-def _owl_schema_preds() -> list[str]:
-    return _RDFS_SCHEMA_PREDS + [
-        v
-        for k in ("inverseOf", "equivalentProperty", "equivalentClass")
-        for v in _OWL_FORMS[k]
-    ]
+def _ruleset_owl(ruleset: str, caller: str) -> bool:
+    if ruleset not in _RULESETS:
+        raise ValueError(f"{caller}: unknown ruleset {ruleset!r} (rdfs | owl-rl)")
+    return _RULESETS[ruleset]
 
 
-def _owl_class_objs() -> list[str]:
-    return [
-        v
-        for k in (
-            "SymmetricProperty",
-            "TransitiveProperty",
-            "FunctionalProperty",
-            "InverseFunctionalProperty",
-        )
-        for v in _OWL_FORMS[k]
-    ]
-
-
-def _is_schema(triples: DataFrame, owl: bool) -> "DataFrame":
-    """The schema-bearing rows of ``triples`` under the given ruleset."""
-    preds = _owl_schema_preds() if owl else _RDFS_SCHEMA_PREDS
-    cond = F.col("pred").isin(preds)
-    if owl:
-        cond = cond | (
-            F.col("pred").isin(list(_FORMS["type"])) & F.col("obj").isin(_owl_class_objs())
-        )
-    return triples.filter(cond)
+def _is_schema(triples: DataFrame, owl: bool) -> DataFrame:
+    """The schema-bearing rows of ``triples`` under the given ruleset — a
+    delta containing any of these can entail new conclusions over OLD
+    instance data, which only a full re-materialization reaches; the
+    delta paths refuse and the store wrapper falls back."""
+    if not owl:
+        return triples.filter(F.col("pred").isin(_RDFS_SCHEMA_PREDS))
+    return triples.filter(
+        F.col("pred").isin(_RDFS_SCHEMA_PREDS + _OWL_PAIR_PREDS)
+        | (F.col("pred").isin(list(_FORMS["type"])) & F.col("obj").isin(_OWL_CLASS_OBJS))
+    )
 
 
 def _require_instance_only(delta: DataFrame, owl: bool, caller: str) -> None:
@@ -631,69 +544,70 @@ def _require_instance_only(delta: DataFrame, owl: bool, caller: str) -> None:
         )
 
 
+def _closure_delta(
+    store: DataFrame, delta: DataFrame, owl: bool, broadcast_schema: bool
+) -> DataFrame:
+    """Conclusions entailed by an instance-only ``delta`` against a
+    ``store`` already closed under the same ruleset — the semi-naive
+    increment, run as :func:`_closure` over ``delta`` + the store's
+    TBox-sized schema slice (pinned once: every stratum reads it).
+
+    Every rho-df rule has exactly ONE instance antecedent, so for RDFS
+    that is the whole increment: cost O(delta), never O(store). Two OWL 2
+    RL families have MULTIPLE instance antecedents — a new edge of a
+    transitive predicate can close through OLD edges (prp-trp), and a new
+    functional assertion can identify against an OLD one sharing its
+    (subject, predicate) group (prp-fp / prp-ifp) — so the OWL increment
+    adds the store's **rule-relevant instance slices**: the triples of
+    transitive / functional / inverse-functional predicates only (cost
+    O(delta + those predicate families)). The OWL axioms are collected
+    once from the schema slice and handed to the closure.
+
+    Output may repeat triples the store already holds (pure-old
+    combinations re-derive them; the store path's per-bucket anti-join
+    drops them — and prp-fp's group minimum may shift to a new member:
+    the old links plus the new ones still generate the same identity
+    clusters, the documented generating-set semantics).
+    """
+    spo = ["subj", "pred", "obj"]
+    store_spo = store.select(*spo)
+    schema = _is_schema(store_spo, owl).localCheckpoint(eager=True)
+    inc = delta.select(*spo).unionByName(schema)
+    tbox = None
+    if owl:
+        tbox = _owl_tbox(schema)
+        multi = (
+            tbox["TransitiveProperty"]
+            + tbox["FunctionalProperty"]
+            + tbox["InverseFunctionalProperty"]
+        )
+        if multi:
+            inc = inc.unionByName(store_spo.filter(F.col("pred").isin(multi)))
+    return _closure(
+        inc, owl, include_base=False, broadcast_schema=broadcast_schema,
+        anti_join_base=True, tbox=tbox,
+    )
+
+
 def rdfs_materialize_delta(
     store: DataFrame, delta: DataFrame, broadcast_schema: bool = True
 ) -> DataFrame:
     """Conclusions entailed by ``delta`` against a ``store`` already closed
-    under :func:`rdfs_materialize` — the semi-naive increment.
-
-    Every rho-df rule has exactly ONE instance antecedent (the other
-    antecedents are schema), so the increment is the full rule pipeline
-    applied to ``delta`` plus the store's TBox-sized schema slice: cost is
-    O(delta), never O(store). ``delta`` must be instance-only (raises
-    otherwise — see :func:`materialize_store_delta` for the fallback).
-    Output may repeat triples the store already holds (pure-old
-    conclusions are closed by assumption and never re-derived; delta
-    conclusions already asserted are the caller's anti-join, which the
-    store path does per-bucket).
-    """
-    _require_instance_only(delta, owl=False, caller="rdfs_materialize_delta")
-    spo = ["subj", "pred", "obj"]
-    tbox = _is_schema(store.select(*spo), owl=False)
-    return rdfs_materialize(
-        delta.select(*spo).unionByName(tbox),
-        include_base=False,
-        broadcast_schema=broadcast_schema,
-    )
+    under :func:`rdfs_materialize` (see :func:`_closure_delta`). ``delta``
+    must be instance-only (raises otherwise — see
+    :func:`materialize_store_delta` for the fallback)."""
+    _require_instance_only(delta, False, "rdfs_materialize_delta")
+    return _closure_delta(store, delta, False, broadcast_schema)
 
 
 def owl_rl_materialize_delta(
     store: DataFrame, delta: DataFrame, broadcast_schema: bool = True
 ) -> DataFrame:
     """Conclusions entailed by ``delta`` against a ``store`` already closed
-    under :func:`owl_rl_materialize`.
-
-    Unlike rho-df, two owl-rl rule families have MULTIPLE instance
-    antecedents — a new edge of a transitive predicate can close through
-    OLD edges (prp-trp), and a new functional assertion can identify
-    against an OLD one sharing its (subject, predicate) group (prp-fp /
-    prp-ifp). The increment therefore runs over ``delta`` + the store's
-    schema slice + the store's **rule-relevant instance slices**: the
-    triples of transitive / functional / inverse-functional predicates
-    only. Cost is O(delta + those predicate families), never O(store) —
-    the bounded price of the multi-antecedent rules. Pure-old
-    combinations re-derive triples the store already holds; the store
-    path's per-bucket anti-join drops them (and prp-fp's group minimum
-    may shift to a new member — the old links plus the new ones still
-    generate the same identity clusters, the documented generating-set
-    semantics).
-    """
-    _require_instance_only(delta, owl=True, caller="owl_rl_materialize_delta")
-    spo = ["subj", "pred", "obj"]
-    store_spo = store.select(*spo)
-    tbox = _is_schema(store_spo, owl=True).localCheckpoint(eager=True)
-    multi = (
-        _typed_props(tbox, "TransitiveProperty")
-        + _typed_props(tbox, "FunctionalProperty")
-        + _typed_props(tbox, "InverseFunctionalProperty")
-    )
-    relevant = store_spo.filter(F.col("pred").isin(multi)) if multi else None
-    inc = delta.select(*spo).unionByName(tbox)
-    if relevant is not None:
-        inc = inc.unionByName(relevant)
-    return owl_rl_materialize(
-        inc, include_base=False, broadcast_schema=broadcast_schema
-    )
+    under :func:`owl_rl_materialize` (see :func:`_closure_delta`); OWL
+    axioms in ``delta`` count as schema."""
+    _require_instance_only(delta, True, "owl_rl_materialize_delta")
+    return _closure_delta(store, delta, True, broadcast_schema)
 
 
 def materialize_store_delta(
@@ -709,27 +623,21 @@ def materialize_store_delta(
     """
     from .triples import append_triples, open_store
 
-    deltas = {"rdfs": rdfs_materialize_delta, "owl-rl": owl_rl_materialize_delta}
-    if ruleset not in deltas:
-        raise ValueError(f"materialize_store_delta: unknown ruleset {ruleset!r} (rdfs | owl-rl)")
+    owl = _ruleset_owl(ruleset, "materialize_store_delta")
     store = open_store(spark, store_path)
-    spo = ["subj", "pred", "obj"]
-    delta = delta.select(*spo).localCheckpoint(eager=True)
+    delta = delta.select("subj", "pred", "obj").localCheckpoint(eager=True)
     stats = append_triples(store, store_path, delta)
-    stats["inserted_delta"] = stats["inserted"]
 
-    owl = ruleset == "owl-rl"
-    if not _is_schema(delta, owl).isEmpty():
+    fallback = not _is_schema(delta, owl).isEmpty()
+    if fallback:
         derived = materialize_store(spark, store_path, ruleset=ruleset)
-        fallback = True
     else:
         store = open_store(spark, store_path)
-        derived = append_triples(store, store_path, deltas[ruleset](store.select(*spo), delta))
-        fallback = False
+        derived = append_triples(store, store_path, _closure_delta(store, delta, owl, True))
     return {
         **derived,
         "inserted": stats["inserted"] + derived["inserted"],
-        "inserted_delta": stats["inserted_delta"],
+        "inserted_delta": stats["inserted"],
         "buckets_appended": sorted(
             set(stats["buckets_appended"]) | set(derived["buckets_appended"])
         ),
@@ -751,11 +659,10 @@ def materialize_store(spark, store_path: str, ruleset: str = "rdfs") -> dict:
     """
     from .triples import append_triples, open_store
 
-    closures = {"rdfs": rdfs_materialize, "owl-rl": owl_rl_materialize}
-    if ruleset not in closures:
-        raise ValueError(f"materialize_store: unknown ruleset {ruleset!r} (rdfs | owl-rl)")
+    owl = _ruleset_owl(ruleset, "materialize_store")
     store = open_store(spark, store_path)
-    derived = closures[ruleset](
-        store.select("subj", "pred", "obj"), include_base=False, anti_join_base=False
+    derived = _closure(
+        store.select("subj", "pred", "obj"), owl,
+        include_base=False, broadcast_schema=True, anti_join_base=False,
     )
     return append_triples(store, store_path, derived)

@@ -326,6 +326,10 @@ CENTROID_LITERAL_MAX = 64
 
 
 def _centroid_table(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
+    # _assign_best packs (2^31 - cid) into the low 32 bits of one long: a
+    # negative id would carry into the cosine field and corrupt the argmax
+    if any(int(cid) < 0 for cid, _ in centroids):
+        raise ValueError("centroid ids must be non-negative")
     return spark.createDataFrame(
         [(int(cid), [float(x) for x in cvec]) for cid, cvec in centroids],
         "cid int, cvec array<double>",
@@ -457,7 +461,9 @@ def ivf_topk(
     n_centroids ≫ executors, AQE splits residual skew). Above the literal
     ceiling, assignment flips to the equality-tested broadcast-join path
     (:func:`_assign_best` / :func:`_assign_probes`) — same rows, and the
-    √N-centroid regime stays reachable."""
+    √N-centroid regime stays reachable; it needs non-negative centroid
+    ids (the argmax packs them into one long) and raises ``ValueError``
+    otherwise."""
     if centroids is None:
         cent_rows = (
             corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))

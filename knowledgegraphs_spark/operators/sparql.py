@@ -102,6 +102,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import driver_frame
 from .triples import subject_scan
 
 __all__ = [
@@ -1348,7 +1349,7 @@ def _eval_group(triples: DataFrame, group: Group) -> DataFrame:
             # acc is None: {} MINUS G2 keeps the empty solution — no-op
         elif isinstance(el, InlineData):
             schema = ", ".join(f"{n} string" for n in el.var_names)
-            inline = triples.sparkSession.createDataFrame(el.rows, schema)
+            inline = driver_frame(triples.sparkSession, el.rows, schema)
             acc = inline if acc is None else _join(acc, inline)
         elif isinstance(el, SubSelect):
             sub = _eval_query(triples, el.query)
@@ -1620,7 +1621,7 @@ def _template_graph(spark, sol: DataFrame | None, template: list) -> DataFrame:
     schema = "subj string, pred string, obj string"
     if sol is None:
         rows = [(s.text, p.text, o.text) for s, p, o in template]
-        return spark.createDataFrame(rows, schema).dropDuplicates()
+        return driver_frame(spark, rows, schema).dropDuplicates()
     parts = []
     for s, p, o in template:
         cols, ok = [], True
@@ -1635,7 +1636,7 @@ def _template_graph(spark, sol: DataFrame | None, template: list) -> DataFrame:
         if ok:
             parts.append(sol.select(*cols).na.drop())
     if not parts:
-        return spark.createDataFrame([], schema)
+        return driver_frame(spark, [], schema)
     out = parts[0]
     for p_df in parts[1:]:
         out = out.unionByName(p_df)
@@ -1673,9 +1674,9 @@ def sparql_describe(triples: DataFrame, query: str | DescribeQuery) -> DataFrame
             sources.append(sol.select(F.col(n).cast("string").alias("__res")))
     consts = [r.text for r in q.resources if isinstance(r, Term)]
     if consts:
-        sources.append(spark.createDataFrame([(c,) for c in consts], "__res string"))
+        sources.append(driver_frame(spark, [(c,) for c in consts], "__res string"))
     if not sources:
-        return spark.createDataFrame([], "subj string, pred string, obj string")
+        return driver_frame(spark, [], "subj string, pred string, obj string")
     res = sources[0]
     for s_df in sources[1:]:
         res = res.unionByName(s_df)

@@ -9,6 +9,7 @@ file lists; idempotent second pass).
 """
 
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,6 +18,86 @@ from knowledgegraphs_spark.operators.entailment import materialize_store, rdfs_m
 from knowledgegraphs_spark.operators.triples import read_triples, write_triples
 
 SCHEMA = "subj string, pred string, obj string"
+
+
+_FULL_IRI = {
+    "rdf:type": "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
+    **{
+        f"rdfs:{t}": "http://www.w3.org/2000/01/rdf-schema#" + t
+        for t in ("subClassOf", "subPropertyOf", "domain", "range")
+    },
+    **{
+        f"owl:{t}": "http://www.w3.org/2002/07/owl#" + t
+        for t in (
+            "TransitiveProperty", "FunctionalProperty", "SymmetricProperty",
+            "InverseFunctionalProperty", "inverseOf", "equivalentClass",
+        )
+    },
+}
+
+
+def in_form(rows, full_iri):
+    """``rows`` with their vocabulary terms in the full-IRI surface form."""
+    return [tuple(_FULL_IRI.get(t, t) for t in r) for r in rows] if full_iri else rows
+
+
+def random_graph(seed, owl=False):
+    """A seeded (schema, instances) pair: random class and property
+    hierarchies (cycles and self-loops allowed) with domain/range, typed
+    nodes and property edges. ``owl=True`` adds a transitive, a
+    functional and an inverse-functional predicate with their edges, a
+    subproperty of the transitive one and a class equivalence — kept
+    inside the fragment one stratified pass closes (the transitive
+    predicate has no superproperty and no inverse, so no stratum before
+    prp-trp reads its derived edges)."""
+    rng = random.Random(seed)
+    cls = [f"ex:C{i}" for i in range(6)]
+    props = [f"ex:p{i}" for i in range(5)]
+    nodes = [f"ex:n{i}" for i in range(10)]
+    schema = {(rng.choice(cls), "rdfs:subClassOf", rng.choice(cls)) for _ in range(6)}
+    schema |= {(rng.choice(props), "rdfs:subPropertyOf", rng.choice(props)) for _ in range(4)}
+    schema |= {
+        (rng.choice(props), rng.choice(("rdfs:domain", "rdfs:range")), rng.choice(cls))
+        for _ in range(4)
+    }
+    inst = {(rng.choice(nodes), rng.choice(props), rng.choice(nodes)) for _ in range(12)}
+    inst |= {(rng.choice(nodes), "rdf:type", rng.choice(cls)) for _ in range(6)}
+    if owl:
+        schema |= {
+            ("ex:t", "rdf:type", "owl:TransitiveProperty"),
+            ("ex:f", "rdf:type", "owl:FunctionalProperty"),
+            ("ex:i", "rdf:type", "owl:InverseFunctionalProperty"),
+            (rng.choice(props), "rdfs:subPropertyOf", "ex:t"),
+            ("ex:t", "rdfs:domain", rng.choice(cls)),
+            (rng.choice(cls), "owl:equivalentClass", rng.choice(cls)),
+        }
+        inst |= {
+            (rng.choice(nodes), p, rng.choice(nodes)) for p in ("ex:t", "ex:f", "ex:i") for _ in range(5)
+        }
+    return sorted(schema), sorted(inst)
+
+
+def identity_normal(triples):
+    """(triples other than owl:sameAs, the sameAs identity clusters) — the
+    form in which prp-fp's generating sets compare (a delta may link to a
+    new group minimum while the old links stay)."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    rest = set()
+    for s, p, o in triples:
+        if p == "owl:sameAs":
+            parent[find(s)] = find(o)
+        else:
+            rest.add((s, p, o))
+    clusters = {}
+    for x in parent:
+        clusters.setdefault(find(x), set()).add(x)
+    return rest, {frozenset(c) for c in clusters.values()}
 
 
 def mat(spark, rows, **kw):
@@ -313,6 +394,23 @@ def test_owl_rl_is_superset_of_rdfs_on_rdfs_input(spark):
         ("ex:acme", "ex:shipsTo", "ex:france"),
     ]
     assert rl(spark, rows) == mat(spark, rows)
+    # seeded random RDFS graphs in both vocabulary forms: the OWL strata
+    # add nothing, and OWL axioms added to the OWL-free graph are inert
+    # under RDFS (its closure gains exactly the axiom triples)
+    axioms = [
+        ("ex:p0", "rdf:type", "owl:TransitiveProperty"),
+        ("ex:p1", "rdf:type", "owl:SymmetricProperty"),
+        ("ex:p2", "rdf:type", "owl:FunctionalProperty"),
+        ("ex:p3", "owl:inverseOf", "ex:p4"),
+        ("ex:C0", "owl:equivalentClass", "ex:C1"),
+    ]
+    for seed, full_iri in ((21, False), (22, True)):
+        schema, inst = random_graph(seed)
+        g = in_form(schema + inst, full_iri)
+        closed = mat(spark, g)
+        assert rl(spark, g) == closed, (seed, full_iri)
+        owl = in_form(axioms, full_iri)
+        assert mat(spark, g + owl) == sorted(set(closed) | set(owl)), (seed, full_iri)
 
 
 def test_owl_rl_full_iri_form(spark):
@@ -420,6 +518,19 @@ def test_delta_rdfs_equals_full_rebuild(spark, tmp_path):
     stats2 = materialize_store_delta(spark, path, spark.createDataFrame(delta, SCHEMA))
     assert stats2["inserted"] == 0
 
+    # the same equality over seeded random graphs
+    for seed in (11, 12):
+        schema, inst = random_graph(seed)
+        base_r, delta_r = schema + inst[::2], inst[1::2]
+        path_r = os.path.join(str(tmp_path), f"d_store_{seed}")
+        write_triples(spark.createDataFrame(base_r, SCHEMA), path_r, n_buckets=4)
+        materialize_store(spark, path_r)
+        stats_r = materialize_store_delta(spark, path_r, spark.createDataFrame(delta_r, SCHEMA))
+        assert stats_r["full_fallback"] is False, seed
+        assert store_triples(spark, path_r) == closed_set(
+            spark, base_r + delta_r, rdfs_materialize
+        ), seed
+
 
 def test_delta_owl_rl_multi_antecedent_rules_see_old_instances(spark, tmp_path):
     """The two multi-antecedent families must close ACROSS the old/new
@@ -454,6 +565,22 @@ def test_delta_owl_rl_multi_antecedent_rules_see_old_instances(spark, tmp_path):
     # delta u:14 must identify against the OLD kg:Customer_7 assertion
     assert ("u:14", "owl:sameAs", "kg:Customer_7") in got
     assert got == closed_set(spark, base + delta, owl_rl_materialize)
+
+    # seeded random graphs: equal up to prp-fp's generating set, whose
+    # group minimum may move to a delta member (same identity clusters)
+    for seed in (31, 32):
+        schema, inst = random_graph(seed, owl=True)
+        base_r, delta_r = schema + inst[::2], inst[1::2]
+        path_r = os.path.join(str(tmp_path), f"d_store_rl_{seed}")
+        write_triples(spark.createDataFrame(base_r, SCHEMA), path_r, n_buckets=4)
+        materialize_store(spark, path_r, ruleset="owl-rl")
+        stats_r = materialize_store_delta(
+            spark, path_r, spark.createDataFrame(delta_r, SCHEMA), ruleset="owl-rl"
+        )
+        assert stats_r["full_fallback"] is False, seed
+        assert identity_normal(store_triples(spark, path_r)) == identity_normal(
+            closed_set(spark, base_r + delta_r, owl_rl_materialize)
+        ), seed
 
 
 def test_delta_with_schema_raises_and_store_falls_back(spark, tmp_path):

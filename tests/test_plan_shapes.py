@@ -128,6 +128,8 @@ def test_driver_paths_hand_off_local_relations(spark, tmp_path):
         compute_match_edges,
         cross_match_edges,
     )
+    from knowledgegraphs_spark.operators.sparql import _template_graph, parse_update, sparql_select
+    from knowledgegraphs_spark.session import driver_frame
     from knowledgegraphs_spark.streaming.maintenance import CATALOG_SCHEMA, _read_or_empty
 
     surfaces = spark.createDataFrame(
@@ -140,12 +142,19 @@ def test_driver_paths_hand_off_local_relations(spark, tmp_path):
     edges = compute_match_edges(surfaces)
     cross = cross_match_edges(surfaces, prior, vocab_driver_threshold=10)
     ids = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    store = driver_frame(spark, [("s1", "p", "o1")], "subj string, pred string, obj string")
+    values = sparql_select(store, "SELECT ?s ?o WHERE { VALUES ?s { s1 s2 } ?s p ?o . }")
+    assert [tuple(r) for r in values.collect()] == [("s1", "o1")]
     frames = {
         "compute_match_edges": edges,
         "cross_match_edges": cross,
         "canonical_mapping": canonical_mapping(surfaces, edges),
         "connected_components": connected_components(ids),
         "_read_or_empty": _read_or_empty(spark, str(tmp_path / "absent"), CATALOG_SCHEMA),
+        "sparql VALUES": values,
+        "INSERT DATA template": _template_graph(
+            spark, None, parse_update("INSERT DATA { s1 p o1 . s2 p o2 . }")[0].insert_template
+        ),
     }
     for name, df in frames.items():
         plan = df._jdf.queryExecution().executedPlan().toString()

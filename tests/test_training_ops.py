@@ -563,6 +563,23 @@ def test_centroid_assignment_join_path_equals_literal_at_256(spark):
     assert sd_lit == sd_jn and len(sd_jn) == 300
 
 
+def test_gated_centroid_path_rejects_negative_ids(spark):
+    """Above the literal ceiling the argmax packs (2^31 - cid) into the
+    low 32 bits of one long, so a negative centroid id would carry into
+    the cosine field and pick the wrong list. Both public entries refuse
+    it instead of assigning silently wrong centroids."""
+    from knowledgegraphs_spark.operators.simsearch import ivf_topk, semantic_dedup
+
+    emb = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(4)], "vec_id int, embedding array<double>"
+    )
+    centroids = [(-1, [1.0, 0.0]), (1, [0.0, 1.0])]
+    with pytest.raises(ValueError, match="non-negative"):
+        ivf_topk(emb, emb, k=1, n_probe=1, centroids=centroids, literal_max=0)
+    with pytest.raises(ValueError, match="non-negative"):
+        semantic_dedup(emb, centroids=centroids, literal_max=0)
+
+
 def test_ivf_trained_quantizer_improves_objective_and_stays_exact(spark):
     """Spherical-k-means quantizer (train_ivf_centroids): (a) Lloyd rounds
     strictly improve the quantization objective over the sampled init,
