@@ -28,6 +28,12 @@ Modes:
   each stage fingerprinted and checkpointed under ``<workdir>``; a
   re-submit after a crash skips completed stages).
 
+``--workdir`` may be any Hadoop FileSystem URI — a local path, ``file:``,
+``hdfs://``, ``s3a://``: the stage outputs, the ``_manifest.json`` resume
+manifest and the ``_SUCCESS`` checks all go through the file system
+resolved from it (``knowledgegraphs_spark/storage.py``), so resume works
+on every scheme.
+
 Prints ONE JSON summary line (rows, stages ran/skipped, seconds) so a
 workflow scheduler can assert on the run without scraping logs.
 """

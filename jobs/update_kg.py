@@ -25,6 +25,11 @@ lifecycle; safe precisely because ``availableNow`` has stopped the
 stream. ``--continuous`` instead keeps the query running until killed
 (the always-on deployment; ``--compact`` is refused there).
 
+``--store`` (and ``--checkpoint``) may be any Hadoop FileSystem URI —
+a local path, ``file:``, ``hdfs://``, ``s3a://``: batch writes, the
+delta listing and the compaction swap all go through the file system
+resolved from the store path (``knowledgegraphs_spark/storage.py``).
+
 Prints ONE JSON summary line (triples, catalog entities, batches folded,
 seconds) as the LAST stdout line for scheduler assertions.
 """

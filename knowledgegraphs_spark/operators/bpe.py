@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import driver_frame
 from .text_analysis import alpha_tokens
 
 __all__ = ["word_vocab", "learn_bpe_merges", "train_bpe", "apply_merge", "segment_vocab"]
@@ -168,8 +169,8 @@ def learn_bpe_merges(
     pass ``batch_size`` in the hundreds — rounds, and therefore driver
     round-trips, shrink ~batch_size-fold."""
     merges, _, _ = _train(docs, n_merges, text_col, batch_size)
-    return docs.sparkSession.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_count bigint"
+    return driver_frame(
+        docs.sparkSession, merges, "rank int, lhs string, rhs string, pair_count bigint"
     )
 
 
@@ -184,8 +185,8 @@ def train_bpe(
     scan total. ``rounds`` is the number of count→argmax→fold rounds
     actually executed (the batching win, surfaced for assertions)."""
     merges, vocab, rounds = _train(docs, n_merges, text_col, batch_size)
-    merges_df = docs.sparkSession.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_count bigint"
+    merges_df = driver_frame(
+        docs.sparkSession, merges, "rank int, lhs string, rhs string, pair_count bigint"
     )
     return merges_df, vocab.withColumn("n_subtokens", F.size("syms")), rounds
 

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import driver_frame
+
 
 def pagerank(
     edges: DataFrame, damping: float = 0.85, iters: int = 10
@@ -747,9 +749,7 @@ def scc(edges: DataFrame, max_peels: int = 16, driver_finish_threshold: int = 10
             pairs = [(r["src"], r["dst"]) for r in edges.collect()]
             comp = scc_py(pairs)
             rows = [(n, comp.get(n, n)) for n in sorted(remaining)]
-            parts.append(
-                spark.createDataFrame(rows, "node string, scc_id string")
-            )
+            parts.append(driver_frame(spark, rows, "node string, scc_id string"))
             break
         labs = _fb_min_labels(edges, nodes)
         assigned = (
@@ -769,7 +769,7 @@ def scc(edges: DataFrame, max_peels: int = 16, driver_finish_threshold: int = 10
         if not nodes.isEmpty():
             raise ValueError(f"scc: nodes remain after {max_peels} peel rounds")
     if not parts:
-        return spark.createDataFrame([], "node string, scc_id string")
+        return driver_frame(spark, [], "node string, scc_id string")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import driver_frame
+
 # XSD datatype families — the exact reference sets (XSDmappers.java:16-18):
 # int = {integer, unsignedInt, unsignedShort, short, positiveInteger,
 # nonPositiveInteger, nonNegativeInteger}; decimal = {double, float,
@@ -753,9 +755,7 @@ def flag_pii(
     """matches(element, do_class) → self+ancestors → broadcast DPV dict →
     grouped PII classes per element (PIIidentification.java:158-256)."""
     dpv = F.broadcast(
-        spark.createDataFrame(
-            sorted(dpv_dict.items()), "do_class: string, pii_class: string"
-        )
+        driver_frame(spark, sorted(dpv_dict.items()), "do_class string, pii_class string")
     )
     c = F.broadcast(closure.select("node", "anc"))
     self_rows = matches.select("element", F.col("do_class").alias("hit"))

@@ -39,6 +39,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import driver_frame
+
 
 @dataclass(frozen=True)
 class Shape:
@@ -138,7 +140,9 @@ def validate(triples: DataFrame, shapes: list[Shape]) -> DataFrame:
             parts.append(_report(dangling, shape, "Class", F.col("obj")))
 
     if not parts:
-        return triples.sparkSession.createDataFrame(
-            [], "focus_node string, shape_id string, component string, detail string"
+        return driver_frame(
+            triples.sparkSession,
+            [],
+            "focus_node string, shape_id string, component string, detail string",
         )
     return reduce(lambda a, b: a.unionByName(b), parts)

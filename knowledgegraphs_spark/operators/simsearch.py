@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..functions.embeddings import cosine_col
+from ..session import driver_frame
 
 
 def brute_force_topk(
@@ -330,7 +331,8 @@ def _centroid_table(spark, centroids: list[tuple[int, list[float]]]) -> DataFram
     # negative id would carry into the cosine field and corrupt the argmax
     if any(int(cid) < 0 for cid, _ in centroids):
         raise ValueError("centroid ids must be non-negative")
-    return spark.createDataFrame(
+    return driver_frame(
+        spark,
         [(int(cid), [float(x) for x in cvec]) for cid, cvec in centroids],
         "cid int, cvec array<double>",
     )
@@ -389,8 +391,12 @@ def _assign_best(
     (zero-shuffle); broadcast join + struct-max aggregation above.
 
     The argmax crosses the aggregation as ONE primitive long:
-    ``(round(cos*1e6) + 1e6) * 2^32 + (2^31 - cid)`` — max of that long
-    is exactly (rounded cosine desc, cid asc), the literal path's order.
+    ``(round(round(cos, 6) * 1e6) + 1e6) * 2^32 + (2^31 - cid)`` — max
+    of that long is exactly (rounded cosine desc, cid asc), the literal
+    path's order. The long derives from the literal path's own
+    ``round(cos, 6)``: Spark rounds a double HALF_UP on its shortest
+    decimal string, so ``round(cos * 1e6)`` alone can land one unit off
+    (0.1250005 → 125000, against 0.125001) and break a tie differently.
     A primitive ``max(long)`` buffer keeps the plan a codegen'd
     HashAggregate with map-side combine: the k-fold fan-out collapses to
     one row per key inside each task and never crosses a shuffle; the
@@ -410,7 +416,8 @@ def _assign_best(
             .drop("__best")
         )
     cent = F.broadcast(_centroid_table(df.sparkSession, centroids))
-    mcos = F.round(cosine_col(F.col("__v"), F.col("cvec")) * 1_000_000, 0).cast("long")
+    cos6 = F.round(cosine_col(F.col("__v"), F.col("cvec")), 6)
+    mcos = F.round(cos6 * 1_000_000, 0).cast("long")
     enc = (mcos + 1_000_000) * F.lit(1 << 32).cast("long") + (
         F.lit(1 << 31).cast("long") - F.col("cid")
     )
@@ -709,4 +716,4 @@ def matryoshka_recall(
         )
         hits = tk.join(gt, ["query_id", "neighbor_id"]).count()
         rows.append((d, round(hits / total, 6) if total else 0.0))
-    return corpus.sparkSession.createDataFrame(rows, "dim int, recall double")
+    return driver_frame(corpus.sparkSession, rows, "dim int, recall double")

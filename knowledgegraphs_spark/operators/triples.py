@@ -22,7 +22,10 @@ and schema in a ``_kg_meta`` sidecar). Later stages — SPARQL Update,
 entailment materialization, BGP/SPARQL lookups — go through its store
 API with plain (subj, pred, obj, …) frames: ``write_triples``,
 ``read_triples``/``open_store``, ``subject_scan``, ``append_triples``,
-``rewrite_buckets``, ``clear_store``.
+``rewrite_buckets``, ``clear_store``. The store path may be any Hadoop
+FileSystem URI (local, ``file:``, ``hdfs://``, ``s3a://``): the bucket
+listing, swap and removal go through ``storage``, like Spark's own reads
+and writes.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructType
 
+from .. import storage
 from ..config import BASE_PREFIX, RDF_TYPE
 from ..functions import naming
 from ..session import driver_frame
@@ -361,25 +365,6 @@ def _append(store: DataFrame, path: str, ins: DataFrame) -> dict:
     return _counters(inserted=n_new, buckets_appended=_bucket_ids(new))
 
 
-def _hadoop_fs(spark, path: str):
-    """The JVM Hadoop FileSystem holding ``path`` and the JVM ``Path``
-    class: works for file://, hdfs://, s3a:// alike."""
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    return jpath(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
-
-
-def _bucket_dirs(fs, jpath, path: str) -> dict:
-    """``{bucket id: Path}`` of the ``subj_bucket=N`` children of ``path``."""
-    root = jpath(path)
-    out = {}
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith(f"{_BUCKET}="):
-                out[int(name.split("=", 1)[1])] = st.getPath()
-    return out
-
-
 def rewrite_buckets(
     store: DataFrame, path: str, deletes: DataFrame, inserts: DataFrame | None = None
 ) -> dict:
@@ -398,7 +383,8 @@ def rewrite_buckets(
     M-triple probe rung materialized the entire store in executor
     storage. Inserts into other buckets take parquet appends. A crash
     while staging leaves the store untouched; one mid-swap can leave some
-    buckets changed and others not."""
+    buckets changed and others not. A rename the file system refuses
+    raises (``storage.move``) instead of silently dropping the bucket."""
     spark = store.sparkSession
     deletes = _materialize(deletes.select(*_SPO), store)
     inserts = None if inserts is None else _materialize(inserts, store)
@@ -420,16 +406,15 @@ def rewrite_buckets(
         n_deleted = affected.join(gone, on=_SPO, how="left_semi").count()
         # list the staged bucket dirs through the FS — an all-deleted
         # rewrite stages zero rows, which parquet can't infer a schema from
-        fs, jpath = _hadoop_fs(spark, path)
-        staged = _bucket_dirs(fs, jpath, staging)
+        staged = storage.partition_dirs(spark, staging, _BUCKET)
         n_content = spark.read.parquet(staging).count() if staged else 0
-        old = _bucket_dirs(fs, jpath, path)
+        old = storage.partition_dirs(spark, path, _BUCKET)
         for b in rewritten:
             if b in old:
-                fs.delete(old[b], True)
+                storage.delete(spark, old[b])
             if b in staged:
-                fs.rename(staged[b], jpath(path, f"{_BUCKET}={b}"))
-        fs.delete(jpath(staging), True)
+                storage.move(spark, staged[b], f"{path.rstrip('/')}/{_BUCKET}={b}")
+        storage.delete(spark, staging)
         out = _counters(
             deleted=n_deleted,
             inserted=n_content - (n_before - n_deleted),
@@ -449,8 +434,8 @@ def clear_store(store: DataFrame, path: str) -> dict:
     ``_kg_meta`` sidecar survives, so the emptied store stays readable
     and re-insertable."""
     n_rows = store.count()
-    fs, jpath = _hadoop_fs(store.sparkSession, path)
-    dirs = _bucket_dirs(fs, jpath, path)
+    spark = store.sparkSession
+    dirs = storage.partition_dirs(spark, path, _BUCKET)
     for d in dirs.values():
-        fs.delete(d, True)
+        storage.delete(spark, d)
     return _counters(deleted=n_rows, buckets_rewritten=sorted(dirs))

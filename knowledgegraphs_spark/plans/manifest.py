@@ -8,28 +8,39 @@ counts, wall seconds}; a re-run with the same fingerprint reads the parquet
 back instead of recomputing. Fingerprints chain: stage fp = hash(stage name,
 config, parent fps), so editing a mid-pipeline stage invalidates exactly the
 suffix that depends on it.
+
+The workdir may be any Hadoop FileSystem URI (a local path, ``file:``,
+``hdfs://``, ``s3a://``): the manifest file and each stage's ``_SUCCESS``
+marker are read and written through ``storage``, the same file system
+Spark writes the stage outputs to, so a resumed run finds them on every
+scheme.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
 import time
 from typing import Any
+
+from pyspark.sql import SparkSession
+
+from .. import storage
 
 
 class Manifest:
     FILENAME = "_manifest.json"
 
-    def __init__(self, workdir: str):
-        self.workdir = workdir
-        self.path = os.path.join(workdir, self.FILENAME)
-        os.makedirs(workdir, exist_ok=True)
+    def __init__(self, spark: SparkSession, workdir: str):
+        self.spark = spark
+        self.workdir = workdir.rstrip("/")
+        self.path = f"{self.workdir}/{self.FILENAME}"
+        text = storage.read_text(spark, self.path)
         self.stages: dict[str, dict[str, Any]] = {}
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                self.stages = json.load(f).get("stages", {})
+        if text is None:
+            self._save()  # creates the workdir
+        else:
+            self.stages = json.loads(text).get("stages", {})
 
     @staticmethod
     def fingerprint(*parts: Any) -> str:
@@ -40,14 +51,14 @@ class Manifest:
         return h.hexdigest()[:16]
 
     def output_path(self, stage: str) -> str:
-        return os.path.join(self.workdir, stage)
+        return f"{self.workdir}/{stage}"
 
     def is_complete(self, stage: str, fp: str) -> bool:
         entry = self.stages.get(stage)
         return (
             entry is not None
             and entry.get("fingerprint") == fp
-            and os.path.exists(os.path.join(self.output_path(stage), "_SUCCESS"))
+            and storage.exists(self.spark, f"{self.output_path(stage)}/_SUCCESS")
         )
 
     def record(
@@ -70,7 +81,6 @@ class Manifest:
         self._save()
 
     def _save(self) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"stages": self.stages}, f, indent=2, sort_keys=True)
-        os.replace(tmp, self.path)
+        storage.write_text(
+            self.spark, self.path, json.dumps({"stages": self.stages}, indent=2, sort_keys=True)
+        )

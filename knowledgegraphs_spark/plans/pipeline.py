@@ -175,7 +175,7 @@ def run_pipeline(
     resume: bool = True,
 ) -> PipelineResult:
     cfg = cfg or EngineConfig()
-    man = Manifest(workdir)
+    man = Manifest(spark, workdir)
     stats: dict = {"skipped": [], "ran": []}
 
     def stage(name: str, parent_fp: str, build, store: bool = False) -> tuple[DataFrame, str]:

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import storage
+
 DEFAULT_PREFIXES = {
     "kg": "http://example.org/kg/",
     "rdf": "http://www.w3.org/1999/02/22-rdf-syntax-ns#",
@@ -72,22 +74,14 @@ def write_turtle(
     """Distributed TTL write: N part files of statements + a driver-side
     ``_prefixes.ttl`` header (concatenate for a standalone document).
 
-    The sidecar goes through the JVM Hadoop FileSystem resolved from the
-    store path — the same handle ``read_turtle``'s sidecar reader uses
-    (``turtle_source._read_sidecar_header``) — so ``hdfs://`` / ``s3a://``
-    destinations work symmetrically; a local ``open()`` here would fail
-    on any non-local scheme after the part files already landed."""
+    The sidecar is written through ``storage`` — the Hadoop FileSystem
+    resolved from the destination, which ``read_turtle`` reads it back
+    through — so ``file:`` / ``hdfs://`` / ``s3a://`` destinations work
+    like local paths."""
     ttl_lines(triples).write.mode("overwrite").text(path)
-    spark = triples.sparkSession
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    side = jvm.org.apache.hadoop.fs.Path(path, "_prefixes.ttl")
-    fs = side.getFileSystem(conf)
-    stream = fs.create(side, True)
-    try:
-        stream.write(bytearray(prefix_header(prefixes).encode("utf-8")))
-    finally:
-        stream.close()
+    storage.write_text(
+        triples.sparkSession, f"{path.rstrip('/')}/_prefixes.ttl", prefix_header(prefixes)
+    )
 
 
 def turtle_string(triples: DataFrame, prefixes: dict[str, str] | None = None) -> str:

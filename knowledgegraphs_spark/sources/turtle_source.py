@@ -42,6 +42,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import storage
+
 TRIPLE_SCHEMA = "subj string, pred string, obj string, obj_dtype string, is_literal boolean"
 
 _XSD_NS = "http://www.w3.org/2001/XMLSchema#"
@@ -343,26 +345,10 @@ def parse_turtle(
 
 
 def _read_sidecar_header(spark: SparkSession, path: str) -> str:
-    """Contents of ``{path}/_prefixes.ttl`` via the JVM Hadoop FileSystem
-    (works for file://, hdfs://, s3a:// alike), or '' when absent or when
-    ``path`` is a single file. Driver-side, one small read."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    if not (fs.exists(p) and fs.getFileStatus(p).isDirectory()):
-        return ""
-    side = jvm.org.apache.hadoop.fs.Path(path, "_prefixes.ttl")
-    if not fs.exists(side):
-        return ""
-    stream = fs.open(side)
-    try:
-        baos = jvm.java.io.ByteArrayOutputStream()
-        # copy entirely JVM-side; the sidecar is a handful of @prefix lines
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, conf, False)
-        return bytes(baos.toByteArray()).decode("utf-8")
-    finally:
-        stream.close()
+    """Contents of ``{path}/_prefixes.ttl`` through ``storage`` (any
+    Hadoop FileSystem URI), or '' when absent — including when ``path`` is
+    a single file. Driver-side, one small read."""
+    return storage.read_text(spark, f"{path.rstrip('/')}/_prefixes.ttl") or ""
 
 
 def read_turtle(
@@ -380,10 +366,6 @@ def read_turtle(
 
     header = extra_prefix_header or ""
     if not header:
-        # resolve the sidecar through the Hadoop FileSystem API, not
-        # os.path — the store path can be hdfs:// or s3a:// (ADVICE r3:
-        # the local-only check silently skipped the sidecar on remote
-        # stores, making expand_prefixes parses fail on every prefix)
         header = _read_sidecar_header(spark, path)
 
     files = spark.read.text(path, wholetext=True)

@@ -6,7 +6,8 @@ entities, emit only delta triples). This module lifts that into the job a
 cluster actually schedules: a ``foreachBatch`` streaming sink where every
 micro-batch of arriving turns extends a persisted catalog + triple store.
 
-Store layout (all parquet, under ``store_path``)::
+Store layout (all parquet, under ``store_path`` — any Hadoop FileSystem
+URI: a local path, ``file:``, ``hdfs://``, ``s3a://``)::
 
     catalog_base/             bootstrap + compacted (mention, canonical) map
     catalog_delta/batch_id=N/ novel-surface rows minted/attached by batch N
@@ -16,7 +17,10 @@ Store layout (all parquet, under ``store_path``)::
 A long-running stream accretes one small delta dir per micro-batch;
 ``compact_store`` (run in a maintenance window, stream stopped) folds the
 committed deltas into the base dirs so the file count stays bounded — the
-small-files lifecycle every continuously-maintained table needs.
+small-files lifecycle every continuously-maintained table needs. Its
+listing, swap and removal go through ``storage``, the Hadoop FileSystem
+resolved from the store path, so compaction works on every scheme the
+batches were written to.
 
 Exactly-once without a transactional table format: the streaming checkpoint
 pins each source file to one ``batch_id`` forever; every per-batch write is
@@ -41,15 +45,12 @@ extension of its resume machinery (S17) to continuous ingest.
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
+from .. import storage
 from ..config import EngineConfig
 from ..session import driver_frame
 from .incremental import TRANSCRIPT_SCHEMA
@@ -112,23 +113,19 @@ def read_maintained_triples(spark: SparkSession, store_path: str) -> DataFrame:
 
 
 def _delta_batch_ids(store_path: str, sub: str) -> list[int]:
-    d = os.path.join(store_path, sub)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for name in os.listdir(d):
-        m = re.fullmatch(r"batch_id=(\d+)", name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    """Ids of the ``batch_id=N`` delta dirs under ``store_path/sub``."""
+    return sorted(storage.partition_dirs(SparkSession.active(), f"{store_path}/{sub}", "batch_id"))
 
 
-def _swap_in(new_dir: str, dst_dir: str) -> None:
+def _swap_in(spark: SparkSession, new_dir: str, dst_dir: str) -> None:
     old = dst_dir + "_old"
-    if os.path.isdir(dst_dir):
-        os.rename(dst_dir, old)
-    os.rename(new_dir, dst_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    # a crash mid-swap may have left one; a rename onto an existing dir
+    # would nest inside it
+    storage.delete(spark, old)
+    if storage.exists(spark, dst_dir):
+        storage.move(spark, dst_dir, old)
+    storage.move(spark, new_dir, dst_dir)
+    storage.delete(spark, old)
 
 
 def compact_store(
@@ -151,9 +148,7 @@ def compact_store(
     ``before_batch``, which cannot exclude rows already folded into the
     base. Structured Streaming replays at most the first uncommitted batch,
     so with the stream stopped (the only sane time to compact),
-    ``through_batch=None`` = fold everything present is safe. Local-FS
-    layout only (the in-sandbox store); object-store layouts go through a
-    table format instead.
+    ``through_batch=None`` = fold everything present is safe.
     """
     cat_ids = _delta_batch_ids(store_path, "catalog_delta")
     trip_ids = _delta_batch_ids(store_path, "triples")
@@ -178,12 +173,12 @@ def compact_store(
     )
     new_trip.write.mode("overwrite").parquet(f"{store_path}/triples_base_new")
 
-    _swap_in(f"{store_path}/catalog_base_new", f"{store_path}/catalog_base")
-    _swap_in(f"{store_path}/triples_base_new", f"{store_path}/triples_base")
+    _swap_in(spark, f"{store_path}/catalog_base_new", f"{store_path}/catalog_base")
+    _swap_in(spark, f"{store_path}/triples_base_new", f"{store_path}/triples_base")
     for b in fold_cat:
-        shutil.rmtree(f"{store_path}/catalog_delta/batch_id={b}", ignore_errors=True)
+        storage.delete(spark, f"{store_path}/catalog_delta/batch_id={b}")
     for b in fold_trip:
-        shutil.rmtree(f"{store_path}/triples/batch_id={b}", ignore_errors=True)
+        storage.delete(spark, f"{store_path}/triples/batch_id={b}")
     return {
         "through_batch": through_batch,
         "folded_batches": sorted(set(fold_cat) | set(fold_trip)),

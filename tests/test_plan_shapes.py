@@ -119,11 +119,14 @@ def test_driver_paths_hand_off_local_relations(spark, tmp_path):
     """Results computed on the driver come back as JVM local relations: a
     pickled Python RDD (``Scan ExistingRDD``) would re-run in Python
     workers on every evaluation. The pruned cross match scores on the
-    driver, so its plan carries no Arrow UDF either."""
+    driver, so its plan carries no Arrow UDF either. SCC finishes a small
+    remainder on the driver, and BPE learns its merges there."""
+    from knowledgegraphs_spark.operators.bpe import learn_bpe_merges
     from knowledgegraphs_spark.operators.canonicalize import (
         canonical_mapping,
         connected_components,
     )
+    from knowledgegraphs_spark.operators.graph_analytics import scc
     from knowledgegraphs_spark.operators.matching import (
         compute_match_edges,
         cross_match_edges,
@@ -154,6 +157,13 @@ def test_driver_paths_hand_off_local_relations(spark, tmp_path):
         "sparql VALUES": values,
         "INSERT DATA template": _template_graph(
             spark, None, parse_update("INSERT DATA { s1 p o1 . s2 p o2 . }")[0].insert_template
+        ),
+        # below driver_finish_threshold the whole graph finishes on the driver
+        "scc driver finish": scc(
+            spark.createDataFrame([("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string")
+        ),
+        "bpe merges": learn_bpe_merges(
+            spark.createDataFrame([("lower lowest newer",)], "text string"), n_merges=3
         ),
     }
     for name, df in frames.items():

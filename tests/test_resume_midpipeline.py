@@ -6,6 +6,8 @@ import json
 import os
 import shutil
 
+import pytest
+
 from knowledgegraphs_spark.plans.pipeline import run_pipeline
 from knowledgegraphs_spark.sources.transcripts import synthesize_transcripts
 
@@ -16,8 +18,12 @@ def _triples(res):
     return {tuple(r) for r in res.triples.select("subj", "pred", "obj").collect()}
 
 
-def test_resume_after_simulated_kill(spark, tmp_path):
-    workdir = str(tmp_path / "run")
+@pytest.mark.parametrize("scheme", ["", "file:"], ids=["path", "file-uri"])
+def test_resume_after_simulated_kill(spark, tmp_path, scheme):
+    """The workdir may be a plain path or a Hadoop ``file:`` URI of the
+    same directory; the crash is simulated on the local directory."""
+    local = str(tmp_path / "run")
+    workdir = scheme + local
     raw = synthesize_transcripts(spark, 40, seed=9)
 
     full = run_pipeline(spark, raw, workdir, input_fingerprint="fp9")
@@ -25,12 +31,12 @@ def test_resume_after_simulated_kill(spark, tmp_path):
 
     # simulate a crash between 'canonical' and 'triples': wipe the outputs
     # and manifest entries of the suffix, as if the job died mid-write
-    with open(os.path.join(workdir, "_manifest.json")) as f:
+    with open(os.path.join(local, "_manifest.json")) as f:
         man = json.load(f)
     for stage in ["triples", "entities"]:
-        shutil.rmtree(os.path.join(workdir, stage), ignore_errors=True)
+        shutil.rmtree(os.path.join(local, stage), ignore_errors=True)
         man["stages"].pop(stage, None)
-    with open(os.path.join(workdir, "_manifest.json"), "w") as f:
+    with open(os.path.join(local, "_manifest.json"), "w") as f:
         json.dump(man, f)
 
     res = run_pipeline(spark, raw, workdir, input_fingerprint="fp9")

@@ -146,12 +146,15 @@ def test_replay_heals_partial_batch_write(spark, tmp_path):
         assert _catalog(read_catalog(spark, store)) == want_cat
 
 
-def test_compaction_preserves_reads_and_uri_stability(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file:"], ids=["path", "file-uri"])
+def test_compaction_preserves_reads_and_uri_stability(spark, tmp_path, scheme):
     """Folding committed deltas into the base dirs must not change what
     read_catalog / read_maintained_triples return, must physically remove
     the folded batch dirs, and batches processed AFTER compaction must
-    still attach to the pre-compaction entity URIs."""
-    store = str(tmp_path / "store")
+    still attach to the pre-compaction entity URIs. The store may be a
+    plain path or a Hadoop ``file:`` URI of the same directory."""
+    local = str(tmp_path / "store")
+    store = scheme + local
     fn = maintenance_batch_fn(store)
     fn(_turns(spark, B1), 0)
     fn(_turns(spark, B2), 1)
@@ -164,9 +167,9 @@ def test_compaction_preserves_reads_and_uri_stability(spark, tmp_path):
     assert _trips(read_maintained_triples(spark, store)) == trips
     assert _catalog(read_catalog(spark, store)) == cat
     # folded dirs gone, the uncommittable-looking tail (batch 2) untouched
-    assert not os.path.exists(f"{store}/catalog_delta/batch_id=0")
-    assert not os.path.exists(f"{store}/triples/batch_id=1")
-    assert os.path.exists(f"{store}/triples/batch_id=2")
+    assert not os.path.exists(f"{local}/catalog_delta/batch_id=0")
+    assert not os.path.exists(f"{local}/triples/batch_id=1")
+    assert os.path.exists(f"{local}/triples/batch_id=2")
 
     # a second, full compaction folds the tail; reads still identical
     stats = compact_store(spark, store)

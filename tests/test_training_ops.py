@@ -508,12 +508,18 @@ def test_ivf_probe_all_equals_brute_force_and_partial_recall(spark):
 def test_centroid_assignment_join_path_equals_literal_at_256(spark):
     """The gated-twin contract for the centroid-count ceiling: above
     CENTROID_LITERAL_MAX the inlined-literal projection flips to a
-    broadcast join + struct-max / rank. At 256 centroids (4x the gate)
-    both paths must produce IDENTICAL rows for ivf_topk and
+    broadcast join + struct-max / rank. At 256 centroids (4x the gate,
+    plus two placed on a rounding boundary) both paths must produce IDENTICAL rows for ivf_topk and
     semantic_dedup — same rounded cosines, same lower-id tie break —
     so the sqrt(N)-cluster regime is reachable without a semantics
-    change."""
+    change.
+
+    Vector 300 sits on a rounding boundary: its cosine to centroid 256 is
+    the double just below a 7-decimal value ending in 5, which
+    ``round(cos, 6)`` rounds down, below centroid 257's cosine, while
+    ``round(cos * 1e6)`` of the product rounds up into a tie with it."""
     import hashlib
+    import math
 
     from pyspark.sql import functions as F
 
@@ -527,10 +533,31 @@ def test_centroid_assignment_join_path_equals_literal_at_256(spark):
         h = hashlib.md5(f"v{seed}".encode()).digest()
         return [b / 255.0 - 0.5 for b in h[:8]]
 
-    emb = spark.createDataFrame(
-        [(i, vec(i)) for i in range(300)], "vec_id int, embedding array<double>"
+    def unit(c):
+        """[c, s, 0, ...] with c*c + s*s == 1.0 exactly: its cosine to
+        e1 = [1, 0, ...] is c itself, bit for bit."""
+        s = math.sqrt(1.0 - c * c)
+        while c * c + s * s != 1.0:
+            s = math.nextafter(s, 0.0 if c * c + s * s > 1.0 else 1.0)
+        return [c, s] + [0.0] * 6
+
+    # the first 0.99xxxx5 whose predecessor times 1e6 still reaches .5
+    k = next(
+        k for k in range(990000, 999999)
+        if math.nextafter(float(f"0.{k}5"), 0.0) * 1e6 >= k + 0.5
     )
-    centroids = [(i, vec(1000 + 7 * i)) for i in range(256)]
+    below, up = math.nextafter(float(f"0.{k}5"), 0.0), float(f"0.{k + 1}")
+    probe = spark.range(1).select(
+        F.round(F.lit(below), 6).alias("cos6"),
+        F.round(F.lit(below) * 1_000_000, 0).cast("long").alias("mcos"),
+    ).first()
+    assert probe.cos6 == float(f"0.{k}") and probe.mcos == k + 1  # the roundings disagree
+
+    emb = spark.createDataFrame(
+        [(i, vec(i)) for i in range(300)] + [(300, [1.0] + [0.0] * 7)],
+        "vec_id int, embedding array<double>",
+    )
+    centroids = [(i, vec(1000 + 7 * i)) for i in range(256)] + [(256, unit(below)), (257, unit(up))]
     assert len(centroids) > CENTROID_LITERAL_MAX
     q = emb.filter(F.col("vec_id") < 8)
 
@@ -560,7 +587,8 @@ def test_centroid_assignment_join_path_equals_literal_at_256(spark):
         tuple(r)
         for r in semantic_dedup(emb, threshold=0.97, centroids=centroids, literal_max=0).collect()
     }
-    assert sd_lit == sd_jn and len(sd_jn) == 300
+    assert sd_lit == sd_jn and len(sd_jn) == 301
+    assert {r[1] for r in sd_jn if r[0] == 300} == {257}
 
 
 def test_gated_centroid_path_rejects_negative_ids(spark):
