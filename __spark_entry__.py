@@ -1058,7 +1058,7 @@ def q_entity_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     turns = _turns_from_events(spark, sf_dir)
     _, canonical = build_kg(spark, turns)
-    mentions = extract_mentions(ingest(turns, None))
+    mentions = extract_mentions(ingest(turns))
     m_canon = mentions.join(
         F.broadcast(canonical.select("mention", "canonical")), "mention"
     )

@@ -23,10 +23,12 @@ tests/test_catalog.py for the sandbox scope-out).
 Modes:
 - ``structural``: per-turn row-to-triple emission only (shuffle-free
   scan → explode), bucketed store written to ``<workdir>/store``.
-- ``full``: the manifest'd resumable pipeline (plans/pipeline.py:
-  mentions → match edges → canonicalization → triples + entity catalog,
-  each stage fingerprinted and checkpointed under ``<workdir>``; a
-  re-submit after a crash skips completed stages).
+- ``full``: the manifest'd resumable pipeline (``plans/pipeline.py
+  run_pipeline``: mentions → match edges → canonicalization → triples +
+  entity catalog). It runs the same stage plan as ``build_kg``, the build
+  the benchmark measures; each stage is fingerprinted and checkpointed
+  under ``<workdir>``, so a re-submit after a crash skips completed
+  stages.
 
 ``--workdir`` may be any Hadoop FileSystem URI — a local path, ``file:``,
 ``hdfs://``, ``s3a://``: the stage outputs, the ``_manifest.json`` resume
@@ -61,16 +63,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--app-name", default="kg-build")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from knowledgegraphs_spark.session import submit_session
 
-    # engine-required analytics confs only — master, memory, executor
-    # topology and shuffle parallelism belong to the submit command
-    from knowledgegraphs_spark.session import ENGINE_SQL_CONFS
-
-    builder = SparkSession.builder.appName(args.app_name)
-    for k, v in ENGINE_SQL_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = submit_session(args.app_name)
 
     t0 = time.time()
     turns = spark.table(args.table) if args.table else spark.read.parquet(args.input)
@@ -82,7 +77,7 @@ def main(argv: list[str] | None = None) -> int:
         from knowledgegraphs_spark.sources.transcripts import ingest
         from knowledgegraphs_spark.operators.triples import write_triples
 
-        triples = emit_transcript_triples(ingest(turns, None), transcript_po())
+        triples = emit_transcript_triples(ingest(turns), transcript_po())
         store = args.workdir.rstrip("/") + "/store"
         n_buckets = args.store_buckets or int(
             spark.conf.get("spark.sql.shuffle.partitions")

@@ -51,15 +51,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--app-name", default="corpus-curate")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from knowledgegraphs_spark.session import ENGINE_SQL_CONFS
+    from knowledgegraphs_spark.session import submit_session
 
-    builder = SparkSession.builder.appName(args.app_name)
-    for k, v in ENGINE_SQL_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = submit_session(args.app_name)
 
     from knowledgegraphs_spark.config import EngineConfig
     from knowledgegraphs_spark.operators.canonicalize import connected_components

@@ -64,15 +64,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.entail:
         if args.output:
             ap.error("--output is not valid for --entail (no bindings)")
-        from pyspark.sql import SparkSession
-
         from knowledgegraphs_spark.operators.entailment import materialize_store
-        from knowledgegraphs_spark.session import ENGINE_SQL_CONFS
+        from knowledgegraphs_spark.session import submit_session
 
-        builder = SparkSession.builder.appName(args.app_name)
-        for k, v in ENGINE_SQL_CONFS.items():
-            builder = builder.config(k, v)
-        spark = builder.getOrCreate()
+        spark = submit_session(args.app_name)
         t0 = time.time()
         stats = materialize_store(spark, args.store, ruleset=args.entail)
         summary = {"store": args.store, "form": "entail", "ruleset": args.entail, **stats}
@@ -89,21 +84,16 @@ def main(argv: list[str] | None = None) -> int:
 
     import re
 
-    from pyspark.sql import SparkSession
-
     from knowledgegraphs_spark.operators.sparql import sparql_query
     from knowledgegraphs_spark.operators.triples import read_triples
-    from knowledgegraphs_spark.session import ENGINE_SQL_CONFS
+    from knowledgegraphs_spark.session import submit_session
 
     # form detection: the first keyword after the prologue decides
     # query (SELECT/ASK/CONSTRUCT/DESCRIBE) vs update (INSERT/DELETE)
     body = re.sub(r"(?is)^\s*(?:PREFIX\s+\S+\s+<[^>]*>\s*)*", "", query_text)
     is_update = body.split(None, 1)[0].upper() in ("INSERT", "DELETE") if body.split() else False
 
-    builder = SparkSession.builder.appName(args.app_name)
-    for k, v in ENGINE_SQL_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = submit_session(args.app_name)
 
     t0 = time.time()
     if is_update:

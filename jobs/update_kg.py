@@ -61,9 +61,7 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("--compact requires the drain-and-stop mode (it folds "
                  "delta dirs only the stopped stream has committed)")
 
-    from pyspark.sql import SparkSession
-
-    from knowledgegraphs_spark.session import ENGINE_SQL_CONFS
+    from knowledgegraphs_spark.session import submit_session
     from knowledgegraphs_spark.streaming.maintenance import (
         compact_store,
         read_catalog,
@@ -71,10 +69,7 @@ def main(argv: list[str] | None = None) -> int:
         stream_kg_maintenance,
     )
 
-    builder = SparkSession.builder.appName(args.app_name)
-    for k, v in ENGINE_SQL_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = submit_session(args.app_name)
 
     t0 = time.time()
     query = stream_kg_maintenance(

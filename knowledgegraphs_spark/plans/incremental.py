@@ -140,7 +140,7 @@ def incremental_update(
     triples ride the ``turn_idx == 0`` marker row exactly as in streaming,
     so a conversation split across batches is declared exactly once."""
     cfg = cfg or EngineConfig()
-    turns = ingest(new_turns_raw, None)
+    turns = ingest(new_turns_raw)
     mentions = extract_mentions(turns)
     surf = distinct_surfaces(mentions).select("mention").localCheckpoint(eager=True)
     delta = incremental_canonical(surf, prior_canonical, cfg).localCheckpoint(eager=True)

@@ -23,8 +23,8 @@ def _java_opts(driver_mem: str) -> str:
 
 
 # Engine-required SQL confs, independent of deployment: shared by
-# :func:`get_spark` (local/test sessions) and ``jobs/build_kg.py`` (the
-# spark-submit path, where master/memory/parallelism come from the submit
+# :func:`get_spark` (local/test sessions) and :func:`submit_session` (the
+# spark-submit jobs, where master/memory/parallelism come from the submit
 # command and must NOT be overridden here).
 ENGINE_SQL_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -103,6 +103,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def submit_session(app_name: str) -> SparkSession:
+    """A spark-submit job's session: the engine's SQL confs only — master,
+    memory, executor topology and parallelism belong to the submit command."""
+    return SparkSession.builder.appName(app_name).config(map=dict(ENGINE_SQL_CONFS)).getOrCreate()
 
 
 def driver_frame(spark: SparkSession, rows: list[tuple], schema: str | StructType) -> DataFrame:

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.nulls import is_nullish
+from ..session import driver_frame
 
 UNKNOWN_HEADER = "Unknown_Header_"
 PK_COL = "PKCol"
@@ -389,11 +390,11 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
 
     rows, max_cells = _parse_xlsx_rows(path)
     if not rows or max_cells == 0:
-        return spark.createDataFrame([], "value string").limit(0)
+        return driver_frame(spark, [], "value string")
     headers = repair_headers([str(h) for h in rows[0]], max_cells=max_cells)
     data = [
         tuple((r + [""] * max_cells)[:max_cells]) for r in rows[1:]
     ]
     schema = T.StructType([T.StructField(h, T.StringType()) for h in headers])
-    df = spark.createDataFrame(data, schema)
+    df = driver_frame(spark, data, schema)
     return drop_empty_unknown_columns(df)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.nulls import normalize_nulls
+from ..session import driver_frame
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -92,7 +93,7 @@ def synthesize_transcripts(
     n_partitions: int | None = None,
 ) -> DataFrame:
     rows = synthesize_rows(n_conversations, avg_turns, seed)
-    df = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    df = driver_frame(spark, rows, TRANSCRIPT_SCHEMA)
     if n_partitions:
         df = df.repartition(n_partitions, "conv_id")
     return df
@@ -174,9 +175,23 @@ def transcripts_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ingest(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Stage 1 — enforce schema, normalize null sentinels (F1), repartition
-    by ``conv_id`` so every later per-conversation op is co-located.
+def read_transcript_stream(
+    spark: SparkSession, input_path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """A file-source stream of the transcript parquet files under
+    ``input_path`` (a file source reads every field as nullable)."""
+    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(input_path)
+
+
+def ingest(df: DataFrame) -> DataFrame:
+    """Stage 1 — enforce schema and normalize null sentinels (F1). No
+    repartition: every op up to triple emission is per-row, so a conv_id
+    shuffle before the 15× explode only lets AQE coalesce away parallelism
+    (BENCH/BASELINE.md); grouped per-conversation stages repartition
+    themselves when they need co-location.
 
     The reference appends a synthetic row-position PK
     (``TabularFilesReader.java:394-401``); for transcripts the natural key
@@ -191,7 +206,4 @@ def ingest(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
         F.col("tool").cast("string").alias("tool"),
         F.col("ts").cast("timestamp").alias("ts"),
     )
-    out = normalize_nulls(out, ["role", "text", "tool"])
-    if n_partitions:
-        out = out.repartition(n_partitions, "conv_id")
-    return out
+    return normalize_nulls(out, ["role", "text", "tool"])

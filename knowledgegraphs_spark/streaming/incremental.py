@@ -12,18 +12,8 @@ mode a 1000-executor cluster would run on a schedule.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ]
-)
+from ..sources.transcripts import ingest, read_transcript_stream
 
 
 def streaming_triples(stream: DataFrame) -> DataFrame:
@@ -35,9 +25,8 @@ def streaming_triples(stream: DataFrame) -> DataFrame:
     dedup state store, no watermark, nothing to size."""
     from ..operators.po_extraction import transcript_po
     from ..operators.triples import emit_transcript_triples
-    from ..sources.transcripts import ingest
 
-    return emit_transcript_triples(ingest(stream, n_partitions=0), transcript_po())
+    return emit_transcript_triples(ingest(stream), transcript_po())
 
 
 def stream_transcript_triples(
@@ -53,11 +42,7 @@ def stream_transcript_triples(
     ``available_now=True`` drains the backlog and stops (incremental batch);
     otherwise the query runs continuously. Returns the StreamingQuery —
     caller owns ``awaitTermination``."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    triples = streaming_triples(stream)
+    triples = streaming_triples(read_transcript_stream(spark, input_path, max_files_per_trigger))
     writer = (
         triples.writeStream.format("parquet")
         .option("path", output_path)

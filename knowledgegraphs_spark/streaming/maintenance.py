@@ -53,7 +53,7 @@ from pyspark.sql.utils import AnalysisException
 from .. import storage
 from ..config import EngineConfig
 from ..session import driver_frame
-from .incremental import TRANSCRIPT_SCHEMA
+from ..sources.transcripts import read_transcript_stream
 
 CATALOG_SCHEMA = T.StructType(
     [
@@ -81,35 +81,38 @@ def _read_or_empty(spark: SparkSession, path: str, schema: T.StructType) -> Data
         return driver_frame(spark, [], schema)
 
 
+def _base_and_deltas(
+    spark: SparkSession, store_path: str, base: str, deltas: str, schema: T.StructType,
+    before_batch: int | None = None,
+) -> DataFrame:
+    """``base`` ∪ the ``batch_id=N`` delta dirs under ``deltas`` (only
+    those with ``N < before_batch`` when given: hive partition discovery
+    turns the dir names into a filterable column, so the filter is
+    partition pruning, not a scan)."""
+    delta_schema = T.StructType(list(schema.fields) + [T.StructField("batch_id", T.IntegerType())])
+    delta_rows = _read_or_empty(spark, f"{store_path}/{deltas}", delta_schema)
+    if before_batch is not None:
+        delta_rows = delta_rows.filter(F.col("batch_id") < F.lit(before_batch))
+    return _read_or_empty(spark, f"{store_path}/{base}", schema).unionByName(
+        delta_rows.select(*schema.fieldNames())
+    )
+
+
 def read_catalog(
     spark: SparkSession, store_path: str, before_batch: int | None = None
 ) -> DataFrame:
     """The maintained (mention, canonical) map: bootstrap ∪ per-batch deltas.
 
     ``before_batch=N`` reconstructs the catalog as it stood BEFORE batch N —
-    the replay-idempotency read (hive partition discovery turns the
-    ``batch_id=N`` dir names into a filterable column, so the filter is
-    partition pruning, not a scan)."""
-    base = _read_or_empty(spark, f"{store_path}/catalog_base", CATALOG_SCHEMA)
-    delta_schema = T.StructType(
-        list(CATALOG_SCHEMA.fields) + [T.StructField("batch_id", T.IntegerType())]
+    the replay-idempotency read."""
+    return _base_and_deltas(
+        spark, store_path, "catalog_base", "catalog_delta", CATALOG_SCHEMA, before_batch
     )
-    deltas = _read_or_empty(spark, f"{store_path}/catalog_delta", delta_schema)
-    if before_batch is not None:
-        deltas = deltas.filter(F.col("batch_id") < F.lit(before_batch))
-    return base.unionByName(deltas.select("mention", "canonical"))
 
 
 def read_maintained_triples(spark: SparkSession, store_path: str) -> DataFrame:
     """The maintained triple store: compacted base ∪ every batch's delta."""
-    schema = T.StructType(
-        list(TRIPLE_SCHEMA.fields) + [T.StructField("batch_id", T.IntegerType())]
-    )
-    base = _read_or_empty(spark, f"{store_path}/triples_base", TRIPLE_SCHEMA)
-    deltas = _read_or_empty(spark, f"{store_path}/triples", schema).select(
-        "subj", "pred", "obj", "obj_dtype", "is_literal"
-    )
-    return base.unionByName(deltas)
+    return _base_and_deltas(spark, store_path, "triples_base", "triples", TRIPLE_SCHEMA)
 
 
 def _delta_batch_ids(store_path: str, sub: str) -> list[int]:
@@ -163,13 +166,8 @@ def compact_store(
     # swap; the folded delta dirs are only removed after both swaps land
     new_cat = read_catalog(spark, store_path, before_batch=through_batch + 1)
     new_cat.write.mode("overwrite").parquet(f"{store_path}/catalog_base_new")
-    trip_schema = T.StructType(
-        list(TRIPLE_SCHEMA.fields) + [T.StructField("batch_id", T.IntegerType())]
-    )
-    new_trip = _read_or_empty(spark, f"{store_path}/triples_base", TRIPLE_SCHEMA).unionByName(
-        _read_or_empty(spark, f"{store_path}/triples", trip_schema)
-        .filter(F.col("batch_id") <= F.lit(through_batch))
-        .select("subj", "pred", "obj", "obj_dtype", "is_literal")
+    new_trip = _base_and_deltas(
+        spark, store_path, "triples_base", "triples", TRIPLE_SCHEMA, before_batch=through_batch + 1
     )
     new_trip.write.mode("overwrite").parquet(f"{store_path}/triples_base_new")
 
@@ -224,10 +222,7 @@ def stream_kg_maintenance(
     ``available_now=True`` drains the backlog and stops — the scheduled
     incremental-batch deployment; otherwise the query runs continuously.
     Returns the StreamingQuery; caller owns ``awaitTermination``."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
+    stream = read_transcript_stream(spark, input_path, max_files_per_trigger)
     writer = (
         stream.writeStream.foreachBatch(maintenance_batch_fn(store_path, cfg))
         .option("checkpointLocation", checkpoint_path)

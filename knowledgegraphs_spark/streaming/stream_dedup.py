@@ -75,12 +75,9 @@ def stream_dedup_turns(
     StreamingQuery (caller awaits). ``max_files_per_trigger=1`` gives
     the tests one micro-batch per file so the watermark provably
     advances between a first arrival and its redelivery."""
-    from .incremental import TRANSCRIPT_SCHEMA
+    from ..sources.transcripts import read_transcript_stream
 
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    deduped = dedup_turns_stream(reader.parquet(input_path), delay)
+    deduped = dedup_turns_stream(read_transcript_stream(spark, input_path, max_files_per_trigger), delay)
     return (
         deduped.writeStream.format("parquet")
         .option("path", output_path)

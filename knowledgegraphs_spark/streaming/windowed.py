@@ -87,12 +87,10 @@ def stream_windowed_turn_stats(
     ``max_files_per_trigger=1`` forces one micro-batch per input file —
     the tests use it to advance the watermark between files and prove
     the late-drop semantics deterministically."""
-    from .incremental import TRANSCRIPT_SCHEMA
+    from ..sources.transcripts import read_transcript_stream
 
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stats = windowed_turn_stats(reader.parquet(input_path), window, watermark)
+    stream = read_transcript_stream(spark, input_path, max_files_per_trigger)
+    stats = windowed_turn_stats(stream, window, watermark)
     return (
         stats.writeStream.format("parquet")
         .option("path", output_path)

@@ -120,7 +120,8 @@ def test_driver_paths_hand_off_local_relations(spark, tmp_path):
     pickled Python RDD (``Scan ExistingRDD``) would re-run in Python
     workers on every evaluation. The pruned cross match scores on the
     driver, so its plan carries no Arrow UDF either. SCC finishes a small
-    remainder on the driver, and BPE learns its merges there."""
+    remainder on the driver, and BPE learns its merges there. The seeded
+    transcript generator and the Excel scan build their rows there."""
     from knowledgegraphs_spark.operators.bpe import learn_bpe_merges
     from knowledgegraphs_spark.operators.canonicalize import (
         canonical_mapping,
@@ -133,7 +134,13 @@ def test_driver_paths_hand_off_local_relations(spark, tmp_path):
     )
     from knowledgegraphs_spark.operators.sparql import _template_graph, parse_update, sparql_select
     from knowledgegraphs_spark.session import driver_frame
+    from knowledgegraphs_spark.sources.tabular import read_excel
+    from knowledgegraphs_spark.sources.transcripts import synthesize_transcripts
     from knowledgegraphs_spark.streaming.maintenance import CATALOG_SCHEMA, _read_or_empty
+    from tests.test_tabular import _write_min_xlsx
+
+    xlsx = str(tmp_path / "mini.xlsx")
+    _write_min_xlsx(xlsx)
 
     surfaces = spark.createDataFrame(
         [(s,) for s in ("Acme Corp", "Acme Corporation", "Data Hub", "Data Hub Central")],
@@ -165,6 +172,8 @@ def test_driver_paths_hand_off_local_relations(spark, tmp_path):
         "bpe merges": learn_bpe_merges(
             spark.createDataFrame([("lower lowest newer",)], "text string"), n_merges=3
         ),
+        "synthesize_transcripts": synthesize_transcripts(spark, 5),
+        "read_excel": read_excel(spark, xlsx),
     }
     for name, df in frames.items():
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -57,10 +57,8 @@ def test_stateful_streaming_episodes_match_batch(spark, tmp_path):
     carry across micro-batches AND across query restarts (checkpoint state
     recovery), producing exactly the batch window's episode ids."""
     from knowledgegraphs_spark.operators.episodes import episode_ids
-    from knowledgegraphs_spark.streaming.incremental import (
-        TRANSCRIPT_SCHEMA,
-        stream_episode_ids,
-    )
+    from knowledgegraphs_spark.sources.transcripts import read_transcript_stream
+    from knowledgegraphs_spark.streaming.incremental import stream_episode_ids
 
     inp = str(tmp_path / "turns_in")
     out = str(tmp_path / "eps_out")
@@ -74,7 +72,7 @@ def test_stateful_streaming_episodes_match_batch(spark, tmp_path):
     b2 = all_turns.filter(all_turns.turn_idx > 3)
 
     def run_stream():
-        stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(inp)
+        stream = read_transcript_stream(spark, inp)
         q = (
             stream_episode_ids(stream, gap_seconds=300)
             .writeStream.format("parquet")

@@ -12,7 +12,7 @@ from tests.oracle_kg import expected_structural_triples, triple_precision_recall
 
 
 def test_structural_triples_match_oracle(spark):
-    df = ingest(synthesize_transcripts(spark, n_conversations=60, seed=42), n_partitions=8)
+    df = ingest(synthesize_transcripts(spark, n_conversations=60, seed=42).repartition(8, "conv_id"))
     po = transcript_po()
     got = {
         (r.subj, r.pred, r.obj)
@@ -45,6 +45,8 @@ def test_partitioning_does_not_change_output(spark):
     """Deterministic URIs → identical triple set under any partitioning."""
     po = transcript_po()
     base = synthesize_transcripts(spark, n_conversations=20, seed=1)
-    t1 = {(r.subj, r.pred, r.obj) for r in emit_transcript_triples(ingest(base, 2), po).collect()}
-    t2 = {(r.subj, r.pred, r.obj) for r in emit_transcript_triples(ingest(base, 13), po).collect()}
+    t1, t2 = (
+        {(r.subj, r.pred, r.obj) for r in emit_transcript_triples(ingest(df), po).collect()}
+        for df in (base.repartition(2, "conv_id"), base.repartition(13, "conv_id"))
+    )
     assert t1 == t2
