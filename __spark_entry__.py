@@ -1051,18 +1051,12 @@ def q_entity_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact: one row per canonical entity with usage statistics, produced
     by the same mention→match→canonicalize stages as kg_triples_full and
     checked against the independent pure-Python twin's canonical map
-    (mrows) aggregated in DuckDB."""
-    from knowledgegraphs_spark.operators.mentions import extract_mentions
-    from knowledgegraphs_spark.plans.pipeline import build_kg, entity_catalog
-    from knowledgegraphs_spark.sources.transcripts import ingest
+    (mrows) aggregated in DuckDB. The catalog is the build plan's own
+    entities stage, not a second mention⋈canonical join."""
+    from knowledgegraphs_spark.plans.pipeline import build_entity_catalog
 
     turns = _turns_from_events(spark, sf_dir)
-    _, canonical = build_kg(spark, turns)
-    mentions = extract_mentions(ingest(turns))
-    m_canon = mentions.join(
-        F.broadcast(canonical.select("mention", "canonical")), "mention"
-    )
-    return entity_catalog(m_canon).select(
+    return build_entity_catalog(spark, turns).select(
         "entity_uri",
         F.col("canonical").alias("label"),
         "n_mentions",

@@ -11,7 +11,8 @@ run resumes mid-pipeline. Stage outputs are the same IR boundaries the
 reference persists as files between stages (``Config.java:258-268``). The
 triples stage is written by ``write_triples`` (the one writer of the
 subject-bucketed store layout) and reopened with ``read_triples``, so
-constant-subject lookups on it prune to one bucket.
+constant-subject lookups on it prune to one bucket; the other stages are
+written by ``write_parquet``, with the same column encoding as the store.
 """
 
 from __future__ import annotations
@@ -30,7 +31,13 @@ from ..operators.matching import compute_match_edges
 from ..operators.mentions import distinct_surfaces, extract_mentions
 from ..operators.po_extraction import transcript_po
 from ..operators.skew import join_small_dim
-from ..operators.triples import class_uri, emit_transcript_triples, read_triples, write_triples
+from ..operators.triples import (
+    class_uri,
+    emit_transcript_triples,
+    read_triples,
+    write_parquet,
+    write_triples,
+)
 from ..sources.transcripts import ingest
 from .manifest import Manifest
 
@@ -187,19 +194,29 @@ def build_kg_triples(
     return build_kg(spark, turns_raw, cfg)[0]
 
 
+def _plan(name: str, build, store: bool = False) -> DataFrame:
+    """The lazy stage hook: each stage is its plan. The canonical map feeds
+    both emission branches: pinned, or each re-executes the whole matching
+    DAG (blocking + UDF + CC)."""
+    return build().localCheckpoint(eager=True) if name == "canonical" else build()
+
+
 def build_kg(
     spark: SparkSession, turns_raw: DataFrame, cfg: EngineConfig | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`build_kg_triples` plus the (mention, canonical) map — the state
     an incremental caller (``plans/incremental.py``) carries between batches."""
-
-    def plan(name: str, build, store: bool = False) -> DataFrame:
-        # the canonical map feeds both emission branches: pinned, or each
-        # re-executes the whole matching DAG (blocking + UDF + CC)
-        return build().localCheckpoint(eager=True) if name == "canonical" else build()
-
-    _mentions, canonical, triples, _entities = _compose(turns_raw, cfg or EngineConfig(), plan)
+    _mentions, canonical, triples, _entities = _compose(turns_raw, cfg or EngineConfig(), _plan)
     return triples, canonical
+
+
+def build_entity_catalog(
+    spark: SparkSession, turns_raw: DataFrame, cfg: EngineConfig | None = None
+) -> DataFrame:
+    """The entity catalog (:func:`entity_catalog`) of the same lazy plan
+    :func:`build_kg` composes, so a catalog caller takes the plan's own
+    mention⋈canonical join instead of deriving the mentions again."""
+    return _compose(turns_raw, cfg or EngineConfig(), _plan)[3]
 
 
 def run_pipeline(
@@ -238,7 +255,7 @@ def run_pipeline(
             }
             rows = sum(parts.values())
         else:
-            build().write.mode("overwrite").parquet(out)
+            write_parquet(build(), out)
             result = read()
             parts, rows = {}, result.count()
         man.record(name, fp, rows, time.time() - t0, parts)

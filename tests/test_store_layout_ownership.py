@@ -1,8 +1,9 @@
 """The triple store's physical layout (subject-hash bucket directories, the
 ``_kg_meta`` sidecar, the bucket count a read attaches to its frame) is
 known to ``operators/triples.py`` alone; every other module goes through
-its store API. This guard reads the package's source and needs no Spark
-session."""
+its store API, and every KG parquet write goes through its one writer
+(``write_parquet``, which carries the store encoding). This guard reads the
+package's source and needs no Spark session."""
 
 import ast
 from pathlib import Path
@@ -42,3 +43,44 @@ def test_no_private_imports_from_sparql_update():
                     if a.name.startswith("_")
                 ]
     assert not leaks, leaks
+
+
+KG_WRITERS = ("operators/triples.py", "streaming/maintenance.py", "plans/pipeline.py")
+
+
+def _receiver_attrs(node: ast.AST) -> set[str]:
+    """Attribute names along a call chain's receiver (``a.read.schema(s)``
+    → {read, schema})."""
+    names = set()
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            names.add(node.attr)
+            node = node.value
+        else:
+            node = node.func
+    return names
+
+
+def test_kg_parquet_writes_go_through_the_shared_writer():
+    """A ``.parquet(...)`` call that is not a read is a write; in the KG
+    writers it may only stand inside ``triples.write_parquet``."""
+    bypasses = []
+    for rel in KG_WRITERS:
+        tree = ast.parse((PACKAGE / rel).read_text())
+        owner = {
+            id(n)
+            for fn in tree.body
+            if isinstance(fn, ast.FunctionDef) and rel == "operators/triples.py" and fn.name == "write_parquet"
+            for n in ast.walk(fn)
+        }
+        assert rel != "operators/triples.py" or owner, "write_parquet is missing"
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("parquet", "save", "saveAsTable", "insertInto")
+                and not {"read", "readStream"} & _receiver_attrs(node.func.value)
+                and id(node) not in owner
+            ):
+                bypasses.append(f"{rel}:{node.lineno}")
+    assert not bypasses, bypasses

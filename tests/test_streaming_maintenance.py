@@ -9,7 +9,9 @@ Surface families reuse the test_incremental.py corpus: ("Acme Corp",
 are singletons — asserted in tests/test_similarity.py's golden suite."""
 
 import datetime
+import hashlib
 import os
+from pathlib import Path
 
 import pytest
 
@@ -102,20 +104,32 @@ def test_stream_equals_sequential_incremental_and_uris_stable(spark, tmp_path):
     assert _trips(read_maintained_triples(spark, store)) == got_trips
 
 
+def _content_hashes(path):
+    """Sorted content digests of a dir's parquet files (their names carry a
+    random UUID per write, their bytes do not)."""
+    return sorted(
+        hashlib.sha256(f.read_bytes()).hexdigest() for f in Path(path).glob("*.parquet")
+    )
+
+
 def test_batch_replay_is_idempotent(spark, tmp_path):
     """Simulate a foreachBatch replay: after batches 0 and 1 are in the
     store, re-running batch 1's closure must reconstruct the pre-batch
-    catalog (batch_id < 1) and rewrite identical data."""
+    catalog (batch_id < 1) and rewrite byte-identical files."""
     store = str(tmp_path / "store")
     fn = maintenance_batch_fn(store)
     fn(_turns(spark, B1), 0)
     fn(_turns(spark, B2), 1)
     trips = _trips(read_maintained_triples(spark, store))
     cat = _catalog(read_catalog(spark, store))
+    batch_dirs = [f"{store}/triples/batch_id=1", f"{store}/catalog_delta/batch_id=1"]
+    files = [_content_hashes(d) for d in batch_dirs]
+    assert all(files), files
 
     fn(_turns(spark, B2), 1)  # replay
     assert _trips(read_maintained_triples(spark, store)) == trips
     assert _catalog(read_catalog(spark, store)) == cat
+    assert [_content_hashes(d) for d in batch_dirs] == files
 
 
 def test_replay_heals_partial_batch_write(spark, tmp_path):
