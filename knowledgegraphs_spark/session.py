@@ -38,6 +38,15 @@ ENGINE_SQL_CONFS: dict[str, str] = {
     # equal wall time (BENCH/BASELINE.md) — at 100 TB the triples table
     # size is the cost driver.
     "spark.sql.parquet.compression.codec": "zstd",
+    # Generated-code cache (static: set before the context starts). The
+    # default 100 entries is smaller than one maintenance cycle: a
+    # bootstrap build uses 64 distinct generated classes, a warm
+    # batch-batch-compaction cycle 146. The cache evicts least recently
+    # used first, so at 100 every class was gone before its next use and
+    # each cycle ran Janino again (43, 23 and 10 compiles for the two
+    # batches and the compaction, every cycle) and handed the JIT fresh
+    # classes. At 1024 a warm cycle compiles nothing.
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 

@@ -82,21 +82,37 @@ def read_text(spark: SparkSession, path: str) -> str | None:
 def write_text(spark: SparkSession, path: str, text: str) -> None:
     """Write ``text`` (UTF-8) to ``path``, replacing any file there: the
     bytes go to a ``.tmp`` sibling first, then take the name in one
-    rename, so a reader sees the old file, the new one, or (on file
-    systems whose rename refuses an existing target, e.g. HDFS) briefly
-    none — never half a file.
+    replacing rename, so a reader sees the old file or the new one, never
+    half a file and never none.
 
-    On a checksummed local file system the bytes bypass the checksum
-    layer: no ``.crc`` sidecar is written (and the rename drops a stale
-    one), so a file later edited by hand stays readable."""
+    On a checksummed (local) file system the bytes and the rename go
+    through the raw file system: its rename is one ``rename(2)``, while
+    the checksum layer's refuses an existing target. No ``.crc`` sidecar
+    is written and a stale one is deleted first (the old file reads
+    without it), so a file later edited by hand stays readable. Elsewhere
+    the rename is ``FileContext.rename`` with ``OVERWRITE``: one NameNode
+    operation on HDFS. (On the local file system that call deletes, then
+    renames.)"""
     fs, p = _fs(spark, path)
     tmp = p.suffix(".tmp")
     checksummed = is_instance_of(spark.sparkContext._gateway, fs, _CHECKSUM_FS)
-    stream = (fs.getRawFileSystem() if checksummed else fs).create(tmp, True)
+    if checksummed:
+        stale_crc = fs.getChecksumFile(p)
+        fs = fs.getRawFileSystem()
+        fs.delete(stale_crc, False)
+    stream = fs.create(tmp, True)
     try:
         stream.write(bytearray(text.encode("utf-8")))
     finally:
         stream.close()
-    if not fs.rename(tmp, p):
-        fs.delete(p, False)
-        move(spark, tmp.toString(), path)
+    if checksummed:
+        if not fs.rename(tmp, p):
+            raise OSError(f"rename {tmp.toString()} -> {path} failed")
+    else:
+        sc = spark.sparkContext
+        hadoop_fs = sc._jvm.org.apache.hadoop.fs
+        options = sc._gateway.new_array(hadoop_fs.Options.Rename, 1)
+        options[0] = hadoop_fs.Options.Rename.OVERWRITE
+        hadoop_fs.FileContext.getFileContext(p.toUri(), sc._jsc.hadoopConfiguration()).rename(
+            tmp, p, options
+        )

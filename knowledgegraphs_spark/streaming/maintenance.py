@@ -28,7 +28,9 @@ so the URI and free-text columns (``subj``, ``obj``, ``mention``,
 that dictionary repeats almost every value — and ``compact_store`` writes
 its bases in one total order (triples by (subj, pred, obj), the catalog
 by (mention, canonical)), so adjacent URIs share prefixes inside zstd's
-window and a compacted store's bytes are a function of its rows alone.
+window and a compacted store's size repeats run for run. (Not a function
+of the rows alone: where the sort splits its output into files follows
+the range partitioner's sample of the input files' layout.)
 Bases written before this encoding (or by another writer) read, fold and
 compact alongside the new files: each file is decoded by its own footer.
 
@@ -44,6 +46,14 @@ attempt's (asserted in ``tests/test_streaming_maintenance.py``). On a
 cluster the same closure lands on Iceberg tables and the dir-per-batch
 idempotency becomes a real ``MERGE``; the plan inside is unchanged.
 
+Delta dirs are selected by listing, not by a per-row filter: a read lists
+the ``batch_id=N`` dirs (``storage.partition_dirs``) and reads the chosen
+ones by path. A ``batch_id < N`` row filter would inline ``N`` into the
+generated scan code, and a long-running stream would compile one new
+class on the first batch after every compaction, forever; by path, a
+warm batch-batch-compaction cycle reuses every generated class the
+previous cycle compiled.
+
 URI-stability contract is inherited from the incremental plan: an entity
 URI, once minted by any earlier batch, never changes (see
 ``plans/incremental.py`` module docstring for the one documented divergence
@@ -57,7 +67,6 @@ extension of its resume machinery (S17) to continuous ingest.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
@@ -98,16 +107,15 @@ def _base_and_deltas(
     before_batch: int | None = None,
 ) -> DataFrame:
     """``base`` ∪ the ``batch_id=N`` delta dirs under ``deltas`` (only
-    those with ``N < before_batch`` when given: hive partition discovery
-    turns the dir names into a filterable column, so the filter is
-    partition pruning, not a scan)."""
-    delta_schema = T.StructType(list(schema.fields) + [T.StructField("batch_id", T.IntegerType())])
-    delta_rows = _read_or_empty(spark, f"{store_path}/{deltas}", delta_schema)
-    if before_batch is not None:
-        delta_rows = delta_rows.filter(F.col("batch_id") < F.lit(before_batch))
-    return _read_or_empty(spark, f"{store_path}/{base}", schema).unionByName(
-        delta_rows.select(*schema.fieldNames())
-    )
+    those with ``N < before_batch`` when given), picked from a listing and
+    read by path — no row filter on the batch id, whose literal the
+    generated code would inline (module docstring)."""
+    dirs = storage.partition_dirs(spark, f"{store_path}/{deltas}", "batch_id")
+    paths = [dirs[n] for n in sorted(dirs) if before_batch is None or n < before_batch]
+    frame = _read_or_empty(spark, f"{store_path}/{base}", schema)
+    if paths:
+        frame = frame.unionByName(spark.read.schema(schema).parquet(*paths))
+    return frame
 
 
 def read_catalog(

@@ -2,9 +2,9 @@
 store paths: only it resolves a Hadoop FileSystem, and the modules that
 keep stores (the triple store, delta compaction, the resume manifest, the
 Turtle sidecar) call it instead of the driver's local ``os``/``shutil``,
-which would misread a ``file:``/``hdfs://``/``s3a://`` path. These tests
-read the package's source or stub the file system and need no Spark
-session."""
+which would misread a ``file:``/``hdfs://``/``s3a://`` path. Most tests
+here read the package's source or stub the file system; the ``write_text``
+tests run against the local file system through a Spark session."""
 
 import ast
 from pathlib import Path
@@ -77,3 +77,40 @@ def test_move_raises_when_rename_returns_false(monkeypatch):
     monkeypatch.setattr(storage, "_fs", lambda spark, path: (_RefusingFS(), path))
     with pytest.raises(OSError, match="rename"):
         storage.move(None, "store/_staging_rewrite/subj_bucket=3", "store/subj_bucket=3")
+
+
+@pytest.mark.parametrize("scheme", ["", "file:"], ids=["path", "file-uri"])
+def test_write_text_replaces_an_existing_file(spark, tmp_path, scheme):
+    """Overwriting leaves the new text and nothing beside it: no ``.tmp``,
+    and no ``.crc`` — not even the stale one of a file first written
+    through the checksummed file system."""
+    target = tmp_path / "_manifest.json"
+    fs, p = storage._fs(spark, str(target))
+    stream = fs.create(p, True)  # checksummed: writes a .crc sidecar
+    stream.write(bytearray(b"old"))
+    stream.close()
+    assert (tmp_path / "._manifest.json.crc").exists()
+
+    storage.write_text(spark, scheme + str(target), '{"stages": {}}')
+    assert target.read_text() == '{"stages": {}}'
+    assert storage.read_text(spark, scheme + str(target)) == '{"stages": {}}'
+    assert [f.name for f in tmp_path.iterdir()] == ["_manifest.json"]
+
+
+def test_write_text_replaces_through_file_context_off_the_checksummed_fs(
+    spark, tmp_path, monkeypatch
+):
+    """A file system without the checksum layer (HDFS, object stores)
+    replaces through ``FileContext.rename`` with ``OVERWRITE``: here the
+    raw local file system stands in for one."""
+    target = tmp_path / "_manifest.json"
+    target.write_text("old")
+    fs, _ = storage._fs(spark, str(target))
+    raw = fs.getRawFileSystem()
+    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    monkeypatch.setattr(
+        storage, "_fs", lambda spark, path: (raw, raw.makeQualified(jvm_path(path)))
+    )
+    storage.write_text(spark, str(target), "new")
+    assert target.read_text() == "new"
+    assert [f.name for f in tmp_path.iterdir()] == ["_manifest.json"]

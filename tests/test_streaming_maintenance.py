@@ -2,7 +2,8 @@
 stream over plans/incremental must equal the same batches run sequentially
 through incremental_update, survive a checkpointed restart exactly-once,
 keep entity URIs stable across batches, and rewrite byte-identical data on
-a batch replay (idempotency via the before_batch catalog reconstruction).
+a batch replay (idempotency via the before_batch catalog reconstruction),
+and run a warm batch-batch-compaction cycle without generating new code.
 
 Surface families reuse the test_incremental.py corpus: ("Acme Corp",
 "Acme Corporation") is a near-dup pair, "Widget Works"/"Gizmo Industries"
@@ -289,3 +290,65 @@ def test_sparql_over_live_store(spark, tmp_path):
     assert after_b1[widget[0]] == 1 and after_b2[widget[0]] == 2
     # URI stability: batch 2 did not mint a second Acme entity
     assert len([e for e in after_b2 if "Acme" in e]) == 1
+
+
+def _family(i):
+    """Two letter-only tokens private to family ``i`` (digits would change
+    how mentions are extracted)."""
+    digest = hashlib.md5(str(i).encode()).hexdigest()
+    digest = digest.translate(str.maketrans("0123456789", "qrstuvwxyz"))
+    return f"Entity{digest[:10]}", digest[10:16].capitalize()
+
+
+def _surface(i, attach=False):
+    head, word = _family(i)
+    return f"{head} {word}s" if attach else f"{head} {word}"
+
+
+def _compiles(spark):
+    """Janino compilations so far in this JVM (one per generated class
+    that missed the code cache)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_maintenance_cycle_compiles_no_new_code(spark, tmp_path):
+    """A long-running stream repeats one batch-batch-compaction cycle. Once
+    one cycle has run, the next must reuse every generated class: nothing
+    may put a per-batch value into generated code (a ``batch_id < N``
+    filter did), and the code cache must hold the whole cycle (the
+    default 100 entries did not). Every batch has the same shape, so the
+    same branches run: a known surface, a novel spelling of a known
+    family (attached) and a new family (minted)."""
+    from knowledgegraphs_spark.operators.triples import write_parquet
+
+    store = str(tmp_path / "store")
+    boot = [(f"b{i}", 0, f"Please contact {_surface(i)} about the review.") for i in range(8)]
+    triples, canonical = build_kg(spark, _turns(spark, boot))
+    write_parquet(canonical, f"{store}/catalog_base")
+    write_parquet(triples, f"{store}/triples_base")
+    booted = {c for (_m, c) in _catalog(canonical)}
+    fn = maintenance_batch_fn(store)
+
+    def batch(b):
+        rows = [
+            (f"l{b}", 0, f"Please contact {_surface(b + 4)} about the review."),
+            (f"l{b}", 1, f"then {_surface(b, attach=True)} replied late"),
+            (f"l{b}", 2, f"and {_surface(100 + b)} joined the call"),
+        ]
+        fn(_turns(spark, rows), b)
+
+    def cycle(first):
+        batch(first)
+        batch(first + 1)
+        assert compact_store(spark, store)["folded_batches"] == [first, first + 1]
+
+    cycle(0)  # warm: the first run of each plan generates its code
+    before = _compiles(spark)
+    cycle(2)
+    assert _compiles(spark) == before
+
+    by_mention = dict(_catalog(read_catalog(spark, store)))
+    for b in range(4):
+        assert by_mention[_surface(b, attach=True)] == by_mention[_surface(b)]  # attached
+        assert by_mention[_surface(100 + b)] not in booted  # minted
