@@ -19,7 +19,9 @@ only for entities this batch mints — then stops:
 Exactly-once across crash/resubmit comes from the Structured Streaming
 checkpoint plus the batch-id-keyed delta overwrites
 (``streaming/maintenance.py``: a replayed batch rewrites its own
-``batch_id=N`` dirs to identical contents). ``--compact`` folds committed
+``batch_id=N`` dirs with the same rows; the files are byte-identical only
+when the replay runs in the same JVM, since parquet-mr's footer order can
+differ between processes). ``--compact`` folds committed
 per-batch delta dirs into the base AFTER the drain — the small-files
 lifecycle; safe precisely because ``availableNow`` has stopped the
 stream. ``--continuous`` instead keeps the query running until killed

@@ -61,6 +61,9 @@ class MatchConfig:
 
 @dataclass(frozen=True)
 class EngineConfig:
+    # the durable store's bucket count: its one reader is run_pipeline's
+    # write_triples(n_buckets=...). It does not set Spark's
+    # spark.sql.shuffle.partitions (session.get_spark does that).
     shuffle_partitions: int = 32
     match: MatchConfig = field(default_factory=MatchConfig)
     # canonical-representative tie-break (reference

@@ -15,10 +15,16 @@ partitioning; replaces the reference's insertion-order counters. (We join PK
 parts with '_' instead of bare concat for injectivity on composite keys.)
 
 Output schema: triples(subj, pred, obj, obj_dtype, is_literal) — the engine's
-fundamental table. This module is also the triple STORE: the only code
-that knows its physical layout (parquet partitioned by ``subj_bucket =
-pmod(xxhash64(subj), N)``, subj-sorted inside each bucket, bucket count
-and schema in a ``_kg_meta`` sidecar). Later stages — SPARQL Update,
+fundamental table. This module is the only code that spells that row out
+(:data:`TRIPLE_SCHEMA`, :func:`triple_struct`, :func:`empty_triples`,
+:func:`explode_triples`) and the only code that builds an individual URI
+(:func:`indiv_uri`): every source, plan and the maintained store take both
+from here, so the row format and the URI scheme are each decided once.
+
+It is also the triple STORE: the only code that knows its physical layout
+(parquet partitioned by ``subj_bucket = pmod(xxhash64(subj), N)``,
+subj-sorted inside each bucket, bucket count and schema in a ``_kg_meta``
+sidecar). Later stages — SPARQL Update,
 entailment materialization, BGP/SPARQL lookups — go through its store
 API with plain (subj, pred, obj, …) frames: ``write_triples``,
 ``read_triples``/``open_store``, ``subject_scan``, ``append_triples``,
@@ -34,7 +40,14 @@ import json
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .. import storage
 from ..config import BASE_PREFIX, RDF_TYPE
@@ -42,11 +55,20 @@ from ..functions import naming
 from ..session import driver_frame
 from .po_extraction import PutativeOntology, TableSpec
 
-TRIPLE_COLS = ["subj", "pred", "obj", "obj_dtype", "is_literal"]
+TRIPLE_SCHEMA = StructType(
+    [
+        StructField("subj", StringType()),
+        StructField("pred", StringType()),
+        StructField("obj", StringType()),
+        StructField("obj_dtype", StringType()),
+        StructField("is_literal", BooleanType()),
+    ]
+)
 
 
 def indiv_uri(class_name: str, table_id: int, pk_cols: list[str]) -> Column:
-    """Deterministic individual URI from PK column values."""
+    """Deterministic individual URI from PK column values. (On string keys
+    the cast is string→string, which the optimizer drops.)"""
     parts = [F.lit(f"{BASE_PREFIX}{class_name}_{table_id}")] + [
         F.col(c).cast("string") for c in pk_cols
     ]
@@ -73,7 +95,8 @@ def literal_repr(c: Column, dtype: str) -> Column:
     return c.cast("string")
 
 
-def _triple_struct(subj: Column, pred: Column | str, obj: Column, dtype: str | None, literal: bool) -> Column:
+def triple_struct(subj: Column, pred: Column | str, obj: Column, dtype: str | None, literal: bool) -> Column:
+    """One triple row as a struct of :data:`TRIPLE_SCHEMA`."""
     p = F.lit(pred) if isinstance(pred, str) else pred
     return F.struct(
         subj.alias("subj"),
@@ -82,6 +105,17 @@ def _triple_struct(subj: Column, pred: Column | str, obj: Column, dtype: str | N
         F.lit(dtype).cast("string").alias("obj_dtype"),
         F.lit(literal).alias("is_literal"),
     )
+
+
+def empty_triples() -> Column:
+    """The empty ``array<triple>``: the ``otherwise`` branch of a row that
+    emits nothing. (A function, not a constant: a Column needs a session.)"""
+    return F.array().cast(ArrayType(TRIPLE_SCHEMA))
+
+
+def explode_triples(frame: DataFrame, triples_col: Column) -> DataFrame:
+    """``frame``'s ``array<triple>`` column, one triple row per element."""
+    return frame.select(F.explode(triples_col).alias("t")).select("t.*")
 
 
 def emit_table_triples_single_pass(
@@ -111,16 +145,12 @@ def emit_table_triples_single_pass(
         indiv_uri(spec.class_name, spec.table_id, spec.pks).alias("__uri_subj")
     ]
     arrays: list[Column] = [
-        F.array(_triple_struct(subj, RDF_TYPE, class_uri(spec.class_name), None, False))
+        F.array(triple_struct(subj, RDF_TYPE, class_uri(spec.class_name), None, False))
     ]
     for i, fk in enumerate(spec.fks):
         ref_spec = po.tables[fk.ref_table]
         pre_cols.append(
-            F.concat_ws(
-                "_",
-                F.lit(f"{BASE_PREFIX}{ref_spec.class_name}_{ref_spec.table_id}"),
-                F.col(fk.column).cast("string"),
-            ).alias(f"__uri_fk_{i}")
+            indiv_uri(ref_spec.class_name, ref_spec.table_id, [fk.column]).alias(f"__uri_fk_{i}")
         )
         tgt = F.col(f"__uri_fk_{i}")
         fwd = naming.pure_obj_property(spec.class_name, ref_spec.class_name)
@@ -129,35 +159,30 @@ def emit_table_triples_single_pass(
             F.when(
                 F.col(fk.column).isNotNull(),
                 F.array(
-                    _triple_struct(subj, fwd, tgt, None, False),
-                    _triple_struct(tgt, inv, subj, None, False),
+                    triple_struct(subj, fwd, tgt, None, False),
+                    triple_struct(tgt, inv, subj, None, False),
                 ),
-            ).otherwise(F.array().cast("array<struct<subj:string,pred:string,obj:string,obj_dtype:string,is_literal:boolean>>"))
+            ).otherwise(empty_triples())
         )
     for i, path in enumerate(p for p in po.column_paths if p.table == spec.name):
         pre_cols.append(
-            F.concat_ws(
-                "_",
-                F.lit(f"{BASE_PREFIX}{path.attr_class}_{spec.table_id}"),
-                *[F.col(c).cast("string") for c in spec.pks],
-            ).alias(f"__uri_attr_{i}")
+            indiv_uri(path.attr_class, spec.table_id, spec.pks).alias(f"__uri_attr_{i}")
         )
         attr_indiv = F.col(f"__uri_attr_{i}")
         arrays.append(
             F.when(
                 F.col(path.column).isNotNull(),
                 F.array(
-                    _triple_struct(subj, path.obj_prop, attr_indiv, None, False),
-                    _triple_struct(attr_indiv, RDF_TYPE, class_uri(path.attr_class), None, False),
-                    _triple_struct(
+                    triple_struct(subj, path.obj_prop, attr_indiv, None, False),
+                    triple_struct(attr_indiv, RDF_TYPE, class_uri(path.attr_class), None, False),
+                    triple_struct(
                         attr_indiv, path.data_prop, literal_repr(F.col(path.column), path.dtype), path.dtype, True
                     ),
                 ),
-            ).otherwise(F.array().cast("array<struct<subj:string,pred:string,obj:string,obj_dtype:string,is_literal:boolean>>"))
+            ).otherwise(empty_triples())
         )
     arrays.extend(extra_arrays or [])
-    exploded = df.select("*", *pre_cols).select(F.explode(F.concat(*arrays)).alias("t"))
-    return exploded.select("t.subj", "t.pred", "t.obj", "t.obj_dtype", "t.is_literal")
+    return explode_triples(df.select("*", *pre_cols), F.concat(*arrays))
 
 
 def emit_transcript_triples(turns: DataFrame, po: PutativeOntology) -> DataFrame:
@@ -175,17 +200,11 @@ def emit_transcript_triples(turns: DataFrame, po: PutativeOntology) -> DataFrame
     """
     conv_spec = po.tables["conversation"]
     turn_spec = po.tables["turn"]
-    conv_subj = F.concat_ws(
-        "_", F.lit(f"{BASE_PREFIX}{conv_spec.class_name}_{conv_spec.table_id}"),
-        F.col("conv_id").cast("string"),
-    )
-    empty = F.array().cast(
-        "array<struct<subj:string,pred:string,obj:string,obj_dtype:string,is_literal:boolean>>"
-    )
+    conv_subj = indiv_uri(conv_spec.class_name, conv_spec.table_id, conv_spec.pks)
     conv_type = F.when(
         F.col("turn_idx") == 0,
-        F.array(_triple_struct(conv_subj, RDF_TYPE, class_uri(conv_spec.class_name), None, False)),
-    ).otherwise(empty)
+        F.array(triple_struct(conv_subj, RDF_TYPE, class_uri(conv_spec.class_name), None, False)),
+    ).otherwise(empty_triples())
     return emit_table_triples_single_pass(turns, turn_spec, po, extra_arrays=[conv_type])
 
 

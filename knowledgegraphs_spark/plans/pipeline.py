@@ -29,12 +29,15 @@ from ..functions import naming
 from ..operators.canonicalize import canonical_mapping
 from ..operators.matching import compute_match_edges
 from ..operators.mentions import distinct_surfaces, extract_mentions
-from ..operators.po_extraction import transcript_po
+from ..operators.po_extraction import TURN_SPEC, transcript_po
 from ..operators.skew import join_small_dim
 from ..operators.triples import (
     class_uri,
     emit_transcript_triples,
+    explode_triples,
+    indiv_uri,
     read_triples,
+    triple_struct,
     write_parquet,
     write_triples,
 )
@@ -64,8 +67,6 @@ def mention_triples(mentions_canon: DataFrame, canonical: DataFrame) -> DataFram
     vocabulary-sized (mention, canonical) map. URIs are pure functions of the
     natural keys. Per-mention triples emit in ONE scan (array-of-structs +
     explode); the two per-entity triples come from the tiny canonical dim."""
-    from ..operators.triples import _triple_struct
-
     # URIs hoisted into a pre-projection: inside one Generate expression
     # tree Spark does no subexpression elimination, so m_uri (3 struct
     # references) would be concat'd 3× per mention (see the emission
@@ -73,33 +74,26 @@ def mention_triples(mentions_canon: DataFrame, canonical: DataFrame) -> DataFram
     turn = F.col("__uri_turn")
     m_uri = F.col("__uri_mention")
     e_uri = _entity_uri()
-    per_mention = mentions_canon.select(
-        "*",
-        F.concat_ws(
-            "_", F.lit(f"{BASE_PREFIX}Turn_2"), F.col("conv_id"), F.col("turn_idx").cast("string")
-        ).alias("__uri_turn"),
-        F.concat_ws(
-            "_", F.lit(f"{BASE_PREFIX}Mention_3"), F.col("conv_id"),
-            F.col("turn_idx").cast("string"), F.col("kind"), F.col("pos").cast("string"),
-        ).alias("__uri_mention"),
-    ).select(
-        F.explode(
-            F.array(
-                _triple_struct(turn, "has_mention", m_uri, None, False),
-                _triple_struct(m_uri, RDF_TYPE, class_uri("Mention"), None, False),
-                _triple_struct(m_uri, "has_surface_VALUE", F.col("mention"), "xsd:string", True),
-                _triple_struct(m_uri, "p_Mention_Entity", e_uri, None, False),
-            )
-        ).alias("t")
-    ).select("t.subj", "t.pred", "t.obj", "t.obj_dtype", "t.is_literal")
-    per_entity = canonical.select("canonical").dropDuplicates().select(
-        F.explode(
-            F.array(
-                _triple_struct(e_uri, RDF_TYPE, class_uri("Entity"), None, False),
-                _triple_struct(e_uri, "has_label_VALUE", F.col("canonical"), "xsd:string", True),
-            )
-        ).alias("t")
-    ).select("t.subj", "t.pred", "t.obj", "t.obj_dtype", "t.is_literal")
+    per_mention = explode_triples(
+        mentions_canon.select(
+            "*",
+            indiv_uri(TURN_SPEC.class_name, TURN_SPEC.table_id, TURN_SPEC.pks).alias("__uri_turn"),
+            indiv_uri("Mention", 3, ["conv_id", "turn_idx", "kind", "pos"]).alias("__uri_mention"),
+        ),
+        F.array(
+            triple_struct(turn, "has_mention", m_uri, None, False),
+            triple_struct(m_uri, RDF_TYPE, class_uri("Mention"), None, False),
+            triple_struct(m_uri, "has_surface_VALUE", F.col("mention"), "xsd:string", True),
+            triple_struct(m_uri, "p_Mention_Entity", e_uri, None, False),
+        ),
+    )
+    per_entity = explode_triples(
+        canonical.select("canonical").dropDuplicates(),
+        F.array(
+            triple_struct(e_uri, RDF_TYPE, class_uri("Entity"), None, False),
+            triple_struct(e_uri, "has_label_VALUE", F.col("canonical"), "xsd:string", True),
+        ),
+    )
     return per_mention.unionByName(per_entity)
 
 

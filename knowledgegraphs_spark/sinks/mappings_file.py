@@ -9,14 +9,19 @@ each ``{type, ontoEl, match, path, initialMatch}``. Tables and columns are
 sorted by name before writing so reruns byte-compare equal
 (``CreateMappingsFile.java:102-103,156-157``).
 
-This IR is driver-scale (schema-sized, not row-sized) by construction.
+This IR is driver-scale (schema-sized, not row-sized) by construction. It
+is saved and loaded through ``storage``, so the path may be any Hadoop
+FileSystem URI and a save replaces the file in one rename.
 """
 
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import asdict, dataclass, field
+
+from pyspark.sql import SparkSession
+
+from .. import storage
 
 
 @dataclass
@@ -85,18 +90,15 @@ class MappingsFile:
     def to_json(self) -> str:
         return json.dumps(asdict(self.sorted()), indent=2, sort_keys=True)
 
-    def save(self, path: str) -> None:
-        tmp = path + ".tmp"
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        with open(tmp, "w") as f:
-            f.write(self.to_json())
-        os.replace(tmp, path)
+    def save(self, spark: SparkSession, path: str) -> None:
+        storage.write_text(spark, path, self.to_json())
 
     @classmethod
-    def load(cls, path: str) -> "MappingsFile":
-        with open(path) as f:
-            raw = json.load(f)
-        return cls.from_dict(raw)
+    def load(cls, spark: SparkSession, path: str) -> "MappingsFile":
+        text = storage.read_text(spark, path)
+        if text is None:
+            raise FileNotFoundError(path)
+        return cls.from_dict(json.loads(text))
 
     @classmethod
     def from_dict(cls, raw: dict) -> "MappingsFile":

@@ -41,13 +41,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..config import RDF_TYPE
 from ..functions.nulls import is_nullish
+from ..operators.triples import class_uri, empty_triples, explode_triples, triple_struct
 
 DEFAULT_ROOT = "record"
-
-TRIPLE_SCHEMA = (
-    "struct<subj:string,pred:string,obj:string,obj_dtype:string,is_literal:boolean>"
-)
 
 _XSD = {
     T.StringType(): "xsd:string",
@@ -99,36 +97,13 @@ def detect_root(schema: T.StructType) -> tuple[str, T.StructType]:
 # ---------------------------------------------------------------------------
 
 
-def _lit_triple(subj: Column, pred: str, obj: Column, dtype: str) -> Column:
-    return F.struct(
-        subj.alias("subj"),
-        F.lit(pred).alias("pred"),
-        obj.cast("string").alias("obj"),
-        F.lit(dtype).alias("obj_dtype"),
-        F.lit(True).alias("is_literal"),
-    )
-
-
-def _edge_triple(subj: Column, pred: str, obj: Column) -> Column:
-    return F.struct(
-        subj.alias("subj"),
-        F.lit(pred).alias("pred"),
-        obj.cast("string").alias("obj"),
-        F.lit(None).cast("string").alias("obj_dtype"),
-        F.lit(False).alias("is_literal"),
-    )
-
-
-def _type_triple(subj: Column, cls: str) -> Column:
-    return _edge_triple(subj, "rdf:type", F.lit(f"kg:{cls}"))
-
-
 def _scalar_triples(label: Column, key: str, value: Column, dt: T.DataType) -> Column:
     """Array of 0-or-1 literal triples (sentinel-filtered, F1)."""
     keep = value.isNotNull() & ~is_nullish(value.cast("string"))
     return F.when(
-        keep, F.array(_lit_triple(label, f"has_{key}", value, xsd_of(dt)))
-    ).otherwise(F.array().cast(f"array<{TRIPLE_SCHEMA}>"))
+        keep,
+        F.array(triple_struct(label, f"has_{key}", value.cast("string"), xsd_of(dt), True)),
+    ).otherwise(empty_triples())
 
 
 def _node_triples(labeled: Column, struct_type: T.StructType, cls: str) -> Column:
@@ -154,7 +129,9 @@ def _node_triples(labeled: Column, struct_type: T.StructType, cls: str) -> Colum
 
     parts: list[Column] = [
         # rdf:type per instance
-        F.transform(labeled, lambda e: _type_triple(e["label"], cls)),
+        F.transform(
+            labeled, lambda e: triple_struct(e["label"], RDF_TYPE, class_uri(cls), None, False)
+        ),
     ]
     # leaves + arrays-of-scalars, flat-mapped over instances
     for f in struct_type.fields:
@@ -233,7 +210,9 @@ def _collect_frontiers(
         frontiers.append((child_col, _child_frontier(labeled, k, is_arr, dt)))
 
         def _edge_fn(k: str):
-            return lambda e: _edge_triple(e["plabel"], f"has_{k}", e["label"])
+            return lambda e: triple_struct(
+                e["plabel"], f"has_{k}", e["label"].cast("string"), None, False
+            )
 
         # parent -[has_k]-> child edges
         parts.append(F.transform(F.col(child_col), _edge_fn(k)))
@@ -278,7 +257,4 @@ def emit_json_triples(
         # consumer (CollapseProject declines to duplicate non-cheap exprs)
         staged = staged.select("*", expr.alias(name))
     all_triples = F.concat(*parts) if len(parts) > 1 else parts[0]
-    return (
-        staged.select(F.explode(all_triples).alias("t"))
-        .select("t.subj", "t.pred", "t.obj", "t.obj_dtype", "t.is_literal")
-    )
+    return explode_triples(staged, all_triples)

@@ -38,7 +38,7 @@ import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .turtle_source import TRIPLE_SCHEMA, _XSD_NS
+from .turtle_source import _XSD_NS, read_documents
 
 _RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 _XML_NS = "http://www.w3.org/XML/1998/namespace"
@@ -177,20 +177,7 @@ def read_rdfxml(spark: SparkSession, path: str) -> DataFrame:
     """Read RDF/XML file(s) into the triple-table schema, one parse task
     per file (same scale shape as ``read_turtle``: documents are the
     parallel unit, blanks are document-scoped)."""
-    import pandas as pd
-
-    files = spark.read.text(path, wholetext=True)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for txt in pdf["value"]:
-                rows.extend(parse_rdfxml(txt))
-            yield pd.DataFrame(
-                rows, columns=["subj", "pred", "obj", "obj_dtype", "is_literal"]
-            )
-
-    return files.mapInPandas(gen, TRIPLE_SCHEMA)
+    return read_documents(spark, path, parse_rdfxml)
 
 
 def read_ontology(spark: SparkSession, path: str) -> DataFrame:

@@ -39,12 +39,12 @@ from __future__ import annotations
 
 import hashlib
 import re
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import storage
-
-TRIPLE_SCHEMA = "subj string, pred string, obj string, obj_dtype string, is_literal boolean"
+from ..operators.triples import TRIPLE_SCHEMA
 
 _XSD_NS = "http://www.w3.org/2001/XMLSchema#"
 _RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -362,22 +362,30 @@ def read_turtle(
     parallel unit). ``extra_prefix_header`` prepends shared ``@prefix``
     declarations — ``sinks/turtle.py`` keeps them in ``_prefixes.ttl``,
     which the parquet-style file index hides from the data read."""
-    import pandas as pd
-
     header = extra_prefix_header or ""
     if not header:
         header = _read_sidecar_header(spark, path)
+    return read_documents(spark, path, lambda txt: parse_turtle(header + txt, expand_prefixes))
+
+
+def read_documents(
+    spark: SparkSession, path: str, parse: Callable[[str], list[tuple]]
+) -> DataFrame:
+    """The whole-file reader behind ``read_turtle`` and ``read_rdfxml``:
+    each file under ``path`` is read whole and handed to ``parse`` (one
+    document's text → its triple tuples) inside ``mapInPandas``, so the
+    parse runs on the executors, Arrow-batched."""
+    import pandas as pd
 
     files = spark.read.text(path, wholetext=True)
+    columns = TRIPLE_SCHEMA.names
 
     def gen(batches):
         for pdf in batches:
             rows = []
             for txt in pdf["value"]:
-                rows.extend(parse_turtle(header + txt, expand_prefixes))
-            yield pd.DataFrame(
-                rows, columns=["subj", "pred", "obj", "obj_dtype", "is_literal"]
-            )
+                rows.extend(parse(txt))
+            yield pd.DataFrame(rows, columns=columns)
 
     return files.mapInPandas(gen, TRIPLE_SCHEMA)
 

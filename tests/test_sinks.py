@@ -1,5 +1,6 @@
 """S12/S13 Turtle sink + S16 mappings-file IR."""
 
+import json
 import os
 
 import pytest
@@ -75,8 +76,8 @@ def test_write_turtle_sidecar_through_hadoop_fs_scheme(spark, triples, tmp_path)
     ).count() == 3
 
 
-def test_mappings_file_roundtrip(tmp_path):
-    mf = MappingsFile(
+def _mappings() -> MappingsFile:
+    return MappingsFile(
         tables=[
             TableMappings(
                 table="turns",
@@ -99,9 +100,28 @@ def test_mappings_file_roundtrip(tmp_path):
             )
         ]
     )
-    path = str(tmp_path / "mappings.json")
-    mf.save(path)
-    back = MappingsFile.load(path)
+
+
+def test_mappings_file_roundtrip():
+    mf = _mappings()
+    _check_roundtrip(mf, MappingsFile.from_dict(json.loads(mf.to_json())))
+
+
+def test_mappings_file_save_load(spark, tmp_path):
+    """save/load go through storage: a plain path and a file: URI (into a
+    directory that does not exist yet) both round-trip, and a second save
+    replaces the first without leaving its .tmp behind."""
+    mf = _mappings()
+    for path in (str(tmp_path / "mappings.json"), f"file:{tmp_path}/ir/mappings.json"):
+        mf.save(spark, path)
+        mf.save(spark, path)
+        _check_roundtrip(mf, MappingsFile.load(spark, path))
+    assert not list(tmp_path.rglob("*.tmp"))
+    with pytest.raises(FileNotFoundError):
+        MappingsFile.load(spark, str(tmp_path / "missing.json"))
+
+
+def _check_roundtrip(mf, back):
     t = back.table("turns")
     assert t is not None and t.mapping.ontoEl == "kg:Turn"
     # fixed 3-slot order per column: classMap, objMap, dataMap

@@ -2,10 +2,13 @@
 ``_kg_meta`` sidecar, the bucket count a read attaches to its frame) is
 known to ``operators/triples.py`` alone; every other module goes through
 its store API, and every KG parquet write goes through its one writer
-(``write_parquet``, which carries the store encoding). This guard reads the
-package's source and needs no Spark session."""
+(``write_parquet``, which carries the store encoding). The triple row
+format is spelled out there alone too: other modules take its schema,
+struct constructor and explode from it. This guard reads the package's
+source and needs no Spark session."""
 
 import ast
+import re
 from pathlib import Path
 
 PACKAGE = Path(__file__).resolve().parents[1] / "knowledgegraphs_spark"
@@ -32,16 +35,60 @@ def test_only_triples_module_knows_the_store_layout():
     assert not leaks, leaks
 
 
-def test_no_private_imports_from_sparql_update():
+def _private_imports(module: str) -> list[str]:
+    """``from <...>module import _name`` anywhere in the package, function
+    bodies included."""
     leaks = []
     for path in _sources():
         for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.ImportFrom) and (node.module or "").endswith("sparql_update"):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[-1] == module:
                 leaks += [
                     f"{path.relative_to(PACKAGE)}: {a.name}"
                     for a in node.names
                     if a.name.startswith("_")
                 ]
+    return leaks
+
+
+def test_no_private_imports_from_sparql_update():
+    leaks = _private_imports("sparql_update")
+    assert not leaks, leaks
+
+
+# the triple row spelled out by hand: as a struct type (the DDL and
+# StructType forms too), as the five-name column list, or as the select
+# after an explode. Compared with whitespace removed and quotes unified.
+ROW_FORMAT_STRINGS = (
+    "subj:string,pred:string,obj:string,obj_dtype:string,is_literal:boolean",
+    "subjstring,predstring,objstring,obj_dtypestring,is_literalboolean",
+    'StructField("is_literal"',
+    '"subj","pred","obj","obj_dtype","is_literal"',
+    '"t.is_literal"',
+)
+
+
+def _squeezed(text: str) -> str:
+    return re.sub(r"\s+", "", text).replace("'", '"')
+
+
+def test_only_triples_module_spells_out_the_triple_row():
+    leaks = [
+        f"{path.relative_to(PACKAGE)}: {needle}"
+        for path in _sources()
+        if path != OWNER
+        for needle in ROW_FORMAT_STRINGS
+        if needle in _squeezed(path.read_text())
+    ]
+    assert not leaks, leaks
+    # the row format and the URI constructor really are defined there
+    owner_text = OWNER.read_text()
+    for name in ("TRIPLE_SCHEMA =", "def triple_struct(", "def empty_triples(",
+                 "def explode_triples(", "def indiv_uri("):
+        assert name in owner_text, name
+
+
+def test_no_private_imports_from_triples():
+    leaks = _private_imports("triples")
     assert not leaks, leaks
 
 
