@@ -162,6 +162,32 @@ def _pipeline_seconds(spark, input_path: str, reps: int = REPS) -> tuple[float, 
     return best, n_turns
 
 
+def _write_sweep(sweep: dict, sf_val) -> str:
+    """Write the per-query {cold, warm} sweep to SPARK_GRAFT_SWEEP_OUT
+    (default ``BENCH/sweep_r5.json`` next to this script); returns the
+    file's path relative to this script. A bare file name resolves
+    against the working directory."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    sweep_out = os.path.abspath(
+        os.environ.get("SPARK_GRAFT_SWEEP_OUT", os.path.join(here, "BENCH", "sweep_r5.json"))
+    )
+    os.makedirs(os.path.dirname(sweep_out), exist_ok=True)
+    with open(sweep_out, "w") as f:
+        json.dump(
+            {
+                "sf": sf_val,
+                "unit": "sec",
+                "rep_protocol": "cold/warm pair per query",
+                "queries_all": dict(sorted(sweep.items())),
+            },
+            f,
+            indent=1,
+            sort_keys=True,
+        )
+        f.write("\n")
+    return os.path.relpath(sweep_out, here)
+
+
 def main() -> None:
     import __spark_entry__ as entry_mod
 
@@ -320,27 +346,7 @@ def main() -> None:
         # the full sweep goes to its own file (round-4 VERDICT item: the
         # inline sweep outgrew the driver's tail capture and 81/108 pairs
         # were lost from the artifact); stdout carries only the pointer.
-        sweep_out = os.environ.get(
-            "SPARK_GRAFT_SWEEP_OUT",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "sweep_r5.json"),
-        )
-        os.makedirs(os.path.dirname(sweep_out), exist_ok=True)
-        with open(sweep_out, "w") as f:
-            json.dump(
-                {
-                    "sf": sf_val,
-                    "unit": "sec",
-                    "rep_protocol": "cold/warm pair per query",
-                    "queries_all": dict(sorted(sweep.items())),
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-            f.write("\n")
-        out["queries_all_file"] = os.path.relpath(
-            sweep_out, os.path.dirname(os.path.abspath(__file__))
-        )
+        out["queries_all_file"] = _write_sweep(sweep, sf_val)
     # FULL record first, COMPACT headline LAST: the round-3 artifact came
     # back "parsed": null because the single (now multi-KB) JSON line
     # outgrew the driver's tail capture — the last line printed must always

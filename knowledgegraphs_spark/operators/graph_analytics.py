@@ -31,6 +31,13 @@ map-side. ``localCheckpoint`` per round keeps the self-referential plan
 from growing (same discipline as ``ancestor_closure_df``). On a cluster,
 pre-partitioning edges by ``src`` makes the per-iteration join exchange
 the (much smaller) rank vector only.
+
+Shared loops: ``_power_iteration`` runs both PageRanks (they differ only
+in the node table's start-rank and teleport columns); ``_min_plus_hops``
+runs :func:`weighted_hops` and, with unit weights, :func:`bfs_hops` —
+each round relaxes only the nodes improved in the previous round, and
+the loop stops once none improved. ``_undirected``, ``_both_directions``
+and ``_node_universe`` are the edge set-up every operator shares.
 """
 
 from __future__ import annotations
@@ -41,25 +48,45 @@ from pyspark.sql import functions as F
 from ..session import driver_frame
 
 
-def pagerank(
-    edges: DataFrame, damping: float = 0.85, iters: int = 10
-) -> DataFrame:
-    """Fixed-iteration PageRank over ``edges(src, dst)`` (directed, bag
-    duplicates count as parallel edges). Returns ``(node, rank)`` for
-    every node appearing as src or dst."""
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
+def _node_universe(edges: DataFrame) -> DataFrame:
+    """Every endpoint of ``edges(src, dst)`` once, as ``(node)`` —
+    checkpointed, since every caller scans it once per round."""
+    return (
+        edges.select(F.explode(F.array("src", "dst")).alias("node"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """``edges(src, dst)`` read as an undirected simple graph: ``(u, v)``
+    with ``u < v`` — direction, duplicates and self-loops normalized away."""
+    return (
+        edges.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _both_directions(und: DataFrame) -> DataFrame:
+    """Each undirected edge ``(u, v)`` as its two directed rows ``(src,
+    dst)`` — checkpointed, since the iterative callers scan it every round."""
+    return (
+        und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .unionByName(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _power_iteration(
+    edges: DataFrame, table: DataFrame, damping: float, iters: int
+) -> DataFrame:
+    """``iters`` rounds of ``rank'(n) = t(n) + d · Σ_{src→n} rank(src) /
+    outdeg(src)`` over ``table(node, rank, t)``: each node's start rank
+    and teleport. Returns ``(node, rank)``."""
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = edges.join(deg, "src").localCheckpoint(eager=True)
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
+    ranks = table.select("node", "rank")
     for _ in range(iters):
         contrib = (
             ed.join(ranks, ed["src"] == ranks["node"])
@@ -68,16 +95,30 @@ def pagerank(
             .agg(F.sum("c").alias("s"))
         )
         ranks = (
-            nodes.join(contrib, "node", "left")
+            table.join(contrib, "node", "left")
             .select(
                 "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias(
-                    "rank"
-                ),
+                (F.col("t") + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
             )
             .localCheckpoint(eager=True)
         )
     return ranks
+
+
+def pagerank(
+    edges: DataFrame, damping: float = 0.85, iters: int = 10
+) -> DataFrame:
+    """Fixed-iteration PageRank over ``edges(src, dst)`` (directed, bag
+    duplicates count as parallel edges). Returns ``(node, rank)`` for
+    every node appearing as src or dst."""
+    nodes = _node_universe(edges)
+    n = nodes.count()
+    if n == 0:
+        return nodes.withColumn("rank", F.lit(0.0))
+    table = nodes.select(
+        "node", F.lit(1.0 / n).alias("rank"), F.lit((1.0 - damping) / n).alias("t")
+    )
+    return _power_iteration(edges, table, damping, iters)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -100,19 +141,10 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     total (wedge join, closing join, count) — all on node/edge keys,
     never on anything wider.
     """
-    und = (
-        edges.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    nodes = (
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
-        .distinct()
-    )
+    und = _undirected(edges)
+    # every node of the simple graph has degree >= 1, so deg IS the node set
     deg = (
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
+        und.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
@@ -145,7 +177,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    return nodes.join(per_node, "node", "left").select(
+    return deg.join(per_node, "node", "left").select(
         "node", F.coalesce("triangles", F.lit(0)).alias("triangles")
     )
 
@@ -187,15 +219,8 @@ def label_propagation(edges: DataFrame, iters: int = 5) -> DataFrame:
     well-defined anyway; callers wanting stable communities run on a
     co-occurrence (unipartite) projection, as the contract query does.
     """
-    und = (
-        edges.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    both = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v"))).select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).localCheckpoint(eager=True)
-    nodes = both.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
+    both = _both_directions(_undirected(edges))
+    nodes = _node_universe(both)
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(iters):
         votes = (
@@ -287,16 +312,7 @@ def k_core(edges: DataFrame, k: int = 2, rounds: int = 8) -> DataFrame:
     nodes' degrees), the distributed analogue of the linear-time
     Matula–Beck peel.
     """
-    und = (
-        edges.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    both = (
-        und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
+    both = _both_directions(_undirected(edges))
     prev_nodes = -1
     for _ in range(rounds):
         deg = both.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -335,6 +351,50 @@ def k_core_py(
     return {v: len(nbrs) for v, nbrs in adj.items() if nbrs}
 
 
+def _min_plus_hops(edges: DataFrame, seeds: DataFrame, rounds: int) -> DataFrame:
+    """``(node, dist long)``: the minimum total ``w`` over paths of at
+    most ``rounds`` hops of ``edges(src, dst, w)`` from any seed, for
+    every node reached. Each round relaxes only the nodes whose distance
+    improved in the previous round — an unchanged node has already
+    relaxed its out-edges, so this equals synchronous Bellman-Ford round
+    for round — and the loop stops once nothing improved. Per round: one
+    edge⋈frontier join, a map-side ``groupBy(dst).min``, one full outer
+    join into the distance vector flagging the improved nodes, one
+    checkpoint and one ``isEmpty`` probe."""
+    # materialize the (possibly derived) edge relation ONCE — each round's
+    # relax join would otherwise recompute its whole upstream plan (no
+    # cross-round CSE)
+    edges = edges.select("src", "dst", "w").localCheckpoint(eager=True)
+    dist = (
+        seeds.select("node").distinct()
+        .select("node", F.lit(0).cast("long").alias("dist"), F.lit(True).alias("improved"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(rounds):
+        frontier = dist.where("improved")
+        if frontier.isEmpty():
+            break
+        cand = (
+            edges.join(frontier.select(F.col("node").alias("src"), F.col("dist").alias("d")), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min(F.col("d") + F.col("w")).alias("cand"))
+        )
+        dist = (
+            dist.select("node", "dist")
+            .join(cand, "node", "full")
+            .select(
+                "node",
+                F.least("dist", "cand").alias("dist"),
+                (
+                    F.col("cand").isNotNull()
+                    & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
+                ).alias("improved"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    return dist.select("node", "dist")
+
+
 def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 3) -> DataFrame:
     """Multi-source BFS: minimum hop distance (≤ ``max_hops``) from any
     seed over ``edges(src, dst)`` read as DIRECTED — pass both directions
@@ -350,39 +410,17 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 3) -> DataFrame
     specialized to ``subClassOf`` edges; here it is the general form
     over any edge relation).
 
-    Scale shape: per hop ONE join of the edge relation against the
-    CURRENT FRONTIER on ``src`` (the frontier is the small side — at
-    scale, broadcastable while narrow, shuffle-joined once it grows),
-    a map-side-combinable ``distinct`` on the expansion, and ONE
-    ``left_anti`` against the visited node vector; every intermediate is
-    node-vector-sized, never edge-sized. ``localCheckpoint`` per round
-    caps plan growth; one ``count`` action per round drives the early
-    exit (the CC discipline). Fixed ``max_hops`` keeps the exact
-    bounded-recursive-twin contract of :func:`pagerank` /
-    :func:`k_core`: a twin recursing to the same bound reproduces the
-    result bit-for-bit, early exit included (an empty frontier recurses
-    into nothing on both sides).
+    This is :func:`weighted_hops` with unit weights: the nodes whose
+    distance improves in round h are exactly those first reached at hop
+    h, so the relaxation frontier IS the BFS frontier, and the loop stops
+    when it empties. Fixed ``max_hops`` keeps the exact bounded-recursive-
+    twin contract of :func:`pagerank` / :func:`k_core`, early exit
+    included (an empty frontier recurses into nothing on both sides).
     """
-    visited = (
-        seeds.select("node").distinct()
-        .withColumn("hops", F.lit(0).cast("int"))
-        .localCheckpoint(eager=True)
+    unit = edges.select("src", "dst", F.lit(1).cast("long").alias("w"))
+    return _min_plus_hops(unit, seeds, max_hops).select(
+        "node", F.col("dist").cast("int").alias("hops")
     )
-    frontier = visited.select("node")
-    for h in range(1, max_hops + 1):
-        nxt = (
-            edges.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(h).cast("int"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
-    return visited
 
 
 def bfs_hops_py(
@@ -587,40 +625,21 @@ def weighted_hops(
     edges: DataFrame, seeds: DataFrame, rounds: int = 4
 ) -> DataFrame:
     """Hop-bounded weighted shortest distance from a seed set —
-    Bellman-Ford relaxation, the min-plus shape missing from the graph
-    family (bfs_hops is its unweighted special case): after ``rounds``
+    Bellman-Ford relaxation, the min-plus shape of the graph family
+    (:func:`bfs_hops` is its unweighted special case): after ``rounds``
     rounds, ``dist(n)`` = the minimum total edge weight over any path of
     at most ``rounds`` hops from any seed. The KG use is cost-bounded
     context extraction: pull the subgraph reachable within a relation-
     cost budget instead of a hop budget.
 
     ``edges(src, dst, w)`` (long weights), ``seeds(node)``. Returns
-    (node, dist) for every node reached. Scale shape: each round is ONE
-    equi-join of the current distance vector against edges on the source
-    key plus a map-side-combinable ``groupBy(node).min`` — the state
-    stays node-scale every round (never path-enumeration-scale, the
-    blow-up a naive reachability UNION ALL suffers); ``localCheckpoint``
-    per round, the pagerank discipline.
+    (node, dist) for every node reached. Scale shape: the frontier
+    relaxation ``_min_plus_hops`` — only nodes improved in the previous
+    round join the edges, and the loop stops early once no distance
+    improves; the state stays node-scale (never path-enumeration-scale,
+    the blow-up a naive reachability UNION ALL suffers).
     """
-    # materialize the (possibly derived) edge relation ONCE — each round's
-    # relax join would otherwise recompute its whole upstream plan (no
-    # cross-round CSE), the same discipline as pagerank's `ed`
-    edges = edges.select("src", "dst", "w").localCheckpoint(eager=True)
-    dist = seeds.select("node").distinct().select(
-        "node", F.lit(0).cast("long").alias("dist")
-    )
-    for _ in range(rounds):
-        relax = (
-            dist.join(edges, dist["node"] == edges["src"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-    return dist
+    return _min_plus_hops(edges, seeds, rounds)
 
 
 def _fb_min_labels(edges: DataFrame, nodes: DataFrame, max_rounds: int = 256) -> DataFrame:
@@ -724,12 +743,7 @@ def scc(edges: DataFrame, max_peels: int = 16, driver_finish_threshold: int = 10
     spark = edges.sparkSession
     # node universe BEFORE dropping self-loops: a node whose only edges
     # are self-loops is still in the graph (a singleton component)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _node_universe(edges)
     edges = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -827,12 +841,7 @@ def hits(edges: DataFrame, iters: int = 5) -> DataFrame:
     if iters < 1:
         raise ValueError(f"hits: iters must be >= 1, got {iters}")
     edges = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _node_universe(edges)
 
     def _normalize(raw: DataFrame, col: str) -> DataFrame:
         total = raw.agg(F.sum(col).alias("__t"))
@@ -893,57 +902,32 @@ def hits_py(edges: list[tuple[str, str]], iters: int = 5) -> dict[str, tuple[flo
 def personalized_pagerank(
     edges: DataFrame, seeds: DataFrame, damping: float = 0.85, iters: int = 10
 ) -> DataFrame:
-    """Personalized PageRank (random walk with restart): identical power
-    iteration to :func:`pagerank`, but ALL teleport mass returns to the
+    """Personalized PageRank (random walk with restart): the power
+    iteration of :func:`pagerank`, but ALL teleport mass returns to the
     ``seeds(node)`` set (uniformly) instead of to every node — the
     proximity-to-seeds primitive behind recommendation, related-entity
     expansion, and local community detection (scores concentrate around
     the seeds instead of measuring global importance).
 
-    Same fixed-iteration / dangling-leak contract as :func:`pagerank`
-    (an exact unrolled relational twin exists); same scale shape — per
-    round one edge⋈rank join plus a map-side-combined groupBy, shuffles
-    rank-vector-sized. The teleport vector is a seed-count-scaled
-    literal joined in as a broadcast-sized relation."""
+    Same fixed-iteration / dangling-leak contract and the same loop as
+    :func:`pagerank`; the node table carries start rank ``1/n_seeds``
+    and teleport ``(1 − d)/n_seeds`` on the seeds (joined in once), ``0.0``
+    elsewhere — the walk starts AT the seeds. Raises ``ValueError`` when
+    no seed appears in the graph."""
+    seed_set = seeds.select("node").distinct().select("node", F.lit(True).alias("seed"))
     nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        _node_universe(edges).join(seed_set, "node", "left").localCheckpoint(eager=True)
     )
-    seed_nodes = (
-        seeds.select("node").distinct().join(nodes, "node").localCheckpoint(eager=True)
-    )
-    n_seeds = seed_nodes.count()
+    n_seeds = nodes.where("seed").count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank: no seed appears in the graph")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = edges.join(deg, "src").localCheckpoint(eager=True)
-    teleport = seed_nodes.select(
-        "node", F.lit((1.0 - damping) / n_seeds).alias("t")
+    is_seed = F.col("seed").isNotNull()
+    table = nodes.select(
+        "node",
+        F.when(is_seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)).alias("rank"),
+        F.when(is_seed, F.lit((1.0 - damping) / n_seeds)).otherwise(F.lit(0.0)).alias("t"),
     )
-    # start AT the seeds (the restart distribution), not uniform
-    ranks = seed_nodes.select("node", F.lit(1.0 / n_seeds).alias("rank"))
-    for _ in range(iters):
-        contrib = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .join(teleport, "node", "left")
-            .select(
-                "node",
-                (
-                    F.coalesce(F.col("t"), F.lit(0.0))
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    return _power_iteration(edges, table, damping, iters)
 
 
 def personalized_pagerank_py(

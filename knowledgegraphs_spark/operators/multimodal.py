@@ -30,25 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),       # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),      # opaque encoded bytes
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 FEATURE_DIM = 16
 
 

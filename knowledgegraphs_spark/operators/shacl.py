@@ -57,9 +57,6 @@ class Shape:
     class_constraint: str | None = None  # sh:class on the value node
 
 
-_REPORT_COLS = ("focus_node", "shape_id", "component", "detail")
-
-
 def _targets(triples: DataFrame, cls: str) -> DataFrame:
     return (
         triples.filter((F.col("pred") == "rdf:type") & (F.col("obj") == F.lit(cls)))

@@ -69,20 +69,8 @@ def _hyperplanes(dim: int, n_bits: int, rotation: int) -> np.ndarray:
     return out
 
 
-def lsh_bucket_udf(n_bits: int, rotation: int):
-    @F.pandas_udf(T.IntegerType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.array(vecs.tolist(), dtype=np.float64)
-        planes = _hyperplanes(mat.shape[1], n_bits, rotation)
-        signs = (mat @ planes.T) > 0
-        weights = (1 << np.arange(n_bits)).astype(np.int64)
-        return pd.Series((signs @ weights).astype(np.int32))
-
-    return bucket
-
-
 def lsh_bucket_expr(vec, dim: int, n_bits: int, rotation: int):
-    """JVM-expression twin of :func:`lsh_bucket_udf`: the sign bits come
+    """JVM-expression twin of :func:`lsh_all_rotations_udf`: the sign bits come
     from a *sequential* left-to-right dot-product fold, so any engine that
     folds sequentially (DuckDB ``list_sum``) reproduces the exact buckets —
     numpy's SIMD/pairwise summation can flip a sign on a near-zero dot,

@@ -340,7 +340,6 @@ class GraphMgmtOp:
 # --------------------------------------------------------------------------
 
 _AGG_FUNCS = {"COUNT", "SUM", "AVG", "MIN", "MAX", "GROUP_CONCAT", "SAMPLE"}
-_RDF_TYPE = ("rdf", "type")
 
 
 class _Parser:

@@ -44,10 +44,6 @@ IMPLICIT_VR_LE = "1.2.840.10008.1.2"
 
 # VRs with the 2-byte-reserved + 4-byte-length layout (PS3.5 §7.1.2)
 _LONG_VRS = {"OB", "OW", "OF", "OD", "OL", "SQ", "UC", "UR", "UT", "UN"}
-_STRING_VRS = {
-    "AE", "AS", "CS", "DA", "DS", "DT", "IS", "LO", "LT", "PN", "SH", "ST", "TM", "UI", "UT",
-    "UC", "UR",
-}
 _BINARY_NUM = {"US": ("<H", 2), "SS": ("<h", 2), "UL": ("<I", 4), "SL": ("<i", 4),
                "FL": ("<f", 4), "FD": ("<d", 8), "AT": ("<I", 4)}
 

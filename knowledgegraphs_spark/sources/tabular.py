@@ -271,14 +271,6 @@ def infer_column_types(df: DataFrame, columns: list[str] | None = None) -> dict[
     }
 
 
-_SPARK_TYPES = {
-    "boolean": T.BooleanType(),
-    "int": T.IntegerType(),
-    "double": T.DoubleType(),
-    "varchar": T.StringType(),
-}
-
-
 def apply_inferred_types(df: DataFrame, types: dict[str, str]) -> DataFrame:
     """Cast each column per the inferred type: sentinels → NULL, ``,``→``.``
     decimal repair for doubles, date shapes normalized to ``yyyy-MM-dd``

@@ -5,13 +5,11 @@ Input contract (BASELINE.json input_hint): table of multi-turn transcripts
 ts timestamp)``; stable ordering key ``(conv_id, turn_idx)``; per-turn text
 equality must survive the pipeline.
 
-Two deterministic sources, no external data:
-* :func:`synthesize_transcripts` — seeded generator following FIXTURES.md §1
-  (near-duplicate entity surface forms, null sentinels, 80 % head-skewed
-  tool column) used by pytest and the scaling bench;
-* :func:`transcripts_from_documents` — pure-function derivation from the
-  driver's ``documents.parquet`` (sentence-split → turns), used by
-  ``__spark_entry__.entry`` so the smoke check reads the provided test data.
+Deterministic sources, no external data: :func:`synthesize_transcripts` —
+a seeded generator following FIXTURES.md §1 (near-duplicate entity
+surface forms, null sentinels, 80 % head-skewed tool column) used by
+pytest and the scaling bench — and its distributed sibling
+:func:`synthesize_transcripts_distributed`.
 """
 
 from __future__ import annotations
@@ -151,27 +149,6 @@ def synthesize_transcripts_distributed(
             (base_ts + F.make_interval(mins=F.col("cid") % 1440, secs=F.col("turn_idx") * 17)).alias("ts"),
         )
         .repartition(n_partitions, "conv_id")
-    )
-
-
-def transcripts_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derive a transcript table from ``documents.parquet`` — a pure function
-    of the input (sentence split → cycling roles), fully JVM-side."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sentences = F.split(F.col("text"), r"(?<=[.!?])\s+")
-    turns = docs.select(
-        F.format_string("conv_%08d", F.col("doc_id")).alias("conv_id"),
-        F.posexplode(sentences).alias("turn_idx", "text"),
-        F.col("source"),
-    )
-    role = F.element_at(F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")), F.col("turn_idx") % 3 + 1)
-    return turns.select(
-        "conv_id",
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        role.alias("role"),
-        "text",
-        F.when(role == "tool", F.col("source")).otherwise(F.lit(None).cast("string")).alias("tool"),
-        (F.to_timestamp(F.lit("2026-01-01 00:00:00")) + F.make_interval(secs=F.col("turn_idx") * 17)).alias("ts"),
     )
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.transcripts import ingest, read_transcript_stream
+from ._sink import start_parquet_sink
 
 
 def streaming_triples(stream: DataFrame) -> DataFrame:
@@ -43,15 +44,7 @@ def stream_transcript_triples(
     otherwise the query runs continuously. Returns the StreamingQuery —
     caller owns ``awaitTermination``."""
     triples = streaming_triples(read_transcript_stream(spark, input_path, max_files_per_trigger))
-    writer = (
-        triples.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(triples, output_path, checkpoint_path, available_now)
 
 
 def stream_episode_ids(turns_stream: DataFrame, gap_seconds: int = 300) -> DataFrame:

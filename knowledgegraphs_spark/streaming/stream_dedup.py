@@ -34,6 +34,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._sink import start_parquet_sink
+
 
 def stream_dedup(
     df: DataFrame,
@@ -78,14 +80,7 @@ def stream_dedup_turns(
     from ..sources.transcripts import read_transcript_stream
 
     deduped = dedup_turns_stream(read_transcript_stream(spark, input_path, max_files_per_trigger), delay)
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_sink(deduped, output_path, checkpoint_path)
 
 
 def dedup_documents_stream(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.text_analysis import token_count
+from ._sink import start_parquet_sink
 
 
 def windowed_turn_stats(
@@ -91,11 +92,4 @@ def stream_windowed_turn_stats(
 
     stream = read_transcript_stream(spark, input_path, max_files_per_trigger)
     stats = windowed_turn_stats(stream, window, watermark)
-    return (
-        stats.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_sink(stats, output_path, checkpoint_path)

@@ -461,3 +461,67 @@ def test_personalized_pagerank_requires_seed_in_graph(spark):
     seeds = spark.createDataFrame([("zz",)], "node string")
     with pytest.raises(ValueError, match="seed"):
         personalized_pagerank(df, seeds)
+
+
+# ---------------------------------------------------------------------------
+# the shared loops: each public operator is a special case of one loop
+# ---------------------------------------------------------------------------
+
+
+def test_personalized_pagerank_with_every_node_seeded_is_pagerank(spark):
+    """Teleport (1-d)/N on every node and a uniform start is PageRank:
+    both operators run the same power iteration over their node table."""
+    from knowledgegraphs_spark.operators.graph_analytics import personalized_pagerank
+
+    rng = random.Random(11)
+    nodes = [f"n{i}" for i in range(12)]
+    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(40)})
+    every = sorted({n for e in edges for n in e})
+    seeds = spark.createDataFrame([(n,) for n in every], "node string")
+    ppr = {r.node: r.rank for r in personalized_pagerank(_df(spark, edges), seeds, iters=8).collect()}
+    pr = {r.node: r.rank for r in pagerank(_df(spark, edges), iters=8).collect()}
+    assert set(ppr) == set(pr) == set(every)
+    for v in pr:
+        assert ppr[v] == pytest.approx(pr[v], abs=1e-12)
+
+
+def test_weighted_hops_with_unit_weights_is_bfs_hops(spark):
+    """bfs_hops is the frontier relaxation with unit weights: on the
+    random graph of the BFS twin test, unit-weight weighted_hops gives the
+    same distances node for node."""
+    from knowledgegraphs_spark.operators.graph_analytics import bfs_hops, weighted_hops
+
+    rng = random.Random(7)
+    nodes = [f"n{i}" for i in range(40)]
+    edges = list({(rng.choice(nodes), rng.choice(nodes)) for _ in range(120)})
+    seeds_df = spark.createDataFrame([("n0",), ("n1",)], "node string")
+    weighted = spark.createDataFrame([(s, d, 1) for s, d in edges], "src string, dst string, w long")
+    got = {r.node: int(r.dist) for r in weighted_hops(weighted, seeds_df, rounds=3).collect()}
+    want = {r.node: r.hops for r in bfs_hops(_df(spark, edges), seeds_df, max_hops=3).collect()}
+    assert got == want
+
+
+def test_weighted_hops_stops_once_distances_settle(spark):
+    """On the hand-computed graph every distance settles within 5 rounds
+    (the longest cheapest path, s-b-a-c-d-e, has 5 hops); 50 rounds give
+    the same result, and launch fewer Spark jobs than rounds, because the
+    loop stops when no distance improves."""
+    from knowledgegraphs_spark.operators.graph_analytics import weighted_hops
+
+    edges = [
+        ("s", "a", 10), ("s", "b", 1), ("b", "a", 2),
+        ("a", "c", 1), ("c", "d", 1), ("d", "e", 1),
+    ]
+    df = spark.createDataFrame(edges, "src string, dst string, w long")
+    seeds = spark.createDataFrame([("s",)], "node string")
+    settled = {r.node: r.dist for r in weighted_hops(df, seeds, rounds=5).collect()}
+    assert settled == {"s": 0, "b": 1, "a": 3, "c": 4, "d": 5, "e": 6}
+    sc = spark.sparkContext
+    sc.setJobGroup("weighted_hops_rounds_50", "weighted_hops early exit")
+    try:
+        got = {r.node: r.dist for r in weighted_hops(df, seeds, rounds=50).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == settled
+    assert len(sc.statusTracker().getJobIdsForGroup("weighted_hops_rounds_50")) < 50
